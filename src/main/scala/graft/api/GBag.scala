@@ -54,36 +54,21 @@ final class GBag[T](val ds: Dataset[T]) extends Serializable {
 
   /** bag `accumulate(binop, initial)` (`bag/core.py:1465`, tlz semantics):
     * the running fold over elements in partition order — same length as
-    * the bag, or length+1 with `initial` prepended. Two-phase distributed
-    * scan (the Cumulative pattern): pass 1 folds each partition locally
-    * and ships only the O(npartitions) per-partition totals to the
-    * driver; pass 2 re-scans each partition seeded with the combined
-    * prefix of all earlier partitions. `binop` must be associative.
+    * the bag, or length+1 with `initial` prepended. A
+    * [[graft.operators.PrefixScan]]: a partition's summary is its own fold
+    * (None when empty), and the carry is `Sequential`, a left fold from
+    * `initial` in partition order. `binop` must be associative; `initial`
+    * need not be its identity.
     */
   def accumulate(binop: (T, T) => T, initial: Option[T] = None)(
       implicit e: Encoder[T], ct: scala.reflect.ClassTag[T]): GBag[T] = {
-    val rdd = ds.rdd
-    val totals = rdd.mapPartitionsWithIndex { (pi, it) =>
-      var acc: Option[T] = None
-      it.foreach(t => acc = Some(acc.fold(t)(a => binop(a, t))))
-      Iterator.single((pi, acc))
-    }.collect().sortBy(_._1).map(_._2)
-    val prefixes = new Array[Option[T]](totals.length)
-    var run: Option[T] = initial
-    var i = 0
-    while (i < totals.length) {
-      prefixes(i) = run
-      run = (run, totals(i)) match {
-        case (Some(a), Some(b)) => Some(binop(a, b))
-        case (None, b) => b
-        case (a, None) => a
-      }
-      i += 1
-    }
-    val bc = spark.sparkContext.broadcast(prefixes)
-    val scanned = spark.createDataset(rdd.mapPartitionsWithIndex { (pi, it) =>
-      var acc: Option[T] = bc.value(pi)
-      it.map { t => acc = Some(acc.fold(t)(a => binop(a, t))); acc.get }
+    import graft.operators.PrefixScan
+    val step: (Option[T], T) => Option[T] = (acc, t) => Some(acc.fold(t)(binop(_, t)))
+    val fold = PrefixScan.Fold[T, Option[T]](_.foldLeft(None: Option[T])(step), () => initial,
+      (a, b) => b.flatMap(step(a, _)).orElse(a))
+    val scanned = spark.createDataset(PrefixScan(ds.rdd, PrefixScan.Sequential, fold) { (seed, it) =>
+      var acc = seed
+      it.map { t => acc = step(acc, t); acc.get }
     })
     new GBag(initial match {
       case Some(i0) => spark.createDataset(Seq(i0)).union(scanned)

@@ -2,33 +2,28 @@ package graft.operators
 
 import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.catalyst.InternalRow
-import org.apache.spark.sql.catalyst.expressions.UnsafeRow
-import org.apache.spark.sql.functions._
-import org.apache.spark.sql.types.{ByteType, DataType, DoubleType, IntegerType, LongType, ShortType}
+import org.apache.spark.sql.functions.col
+import org.apache.spark.sql.types.{DataType, DoubleType, LongType, StructType}
 
-/** Distributed global cumulative aggregates (cumsum / cumprod / cummax /
-  * cummin / cumcount) — reference:
-  * `dask/dataframe/dask_expr/_cumulative.py:20-160`.
+import scala.reflect.ClassTag
+
+/** Distributed cumulative aggregates (cumsum / cumprod / cummax / cummin),
+  * global and grouped — reference:
+  * `dask/dataframe/dask_expr/_cumulative.py:20-160`. A SQL window without
+  * PARTITION BY runs in ONE task in Spark; both forms here are a
+  * [[PrefixScan]] over any number of partitions instead.
   *
-  * A SQL window `sum(x) OVER (ORDER BY idx ROWS UNBOUNDED PRECEDING)`
-  * without PARTITION BY collapses to ONE task in Spark — fine at 60k rows,
-  * fatal at 100 TB.  The reference's answer is a two-phase prefix scan
-  * (per-partition cumagg + carried per-partition totals) and that is
-  * exactly what we build here on Spark primitives:
+  * Carry contract: a partition's summary is the op folded over its
+  * non-null values, and summaries merge with the op itself — associative,
+  * with the op's identity as the empty summary, so both forms ride the
+  * [[PrefixScan.Tree]] carry. Integral inputs keep a Long accumulator and
+  * a long output column (pandas int64 cumsum) and are exact under any
+  * split. Float inputs accumulate as Double; partition totals reassociate
+  * + and ×, so a float result may move by an ulp with the partition
+  * boundaries.
   *
-  *  phase 1 (narrow):  per range-partition aggregate → N tiny values
-  *  driver:            exclusive prefix-combine of the N values (free)
-  *  phase 2 (narrow):  per-partition running agg seeded with the prefix
-  *
-  * Two narrow passes over data that is already range-partitioned+sorted by
-  * the index (post-`setIndex`), zero extra shuffles, arbitrary npartitions.
-  * Since round 15 both passes run on the plan's own InternalRow RDD with a
-  * codegen'd output projection ([[InternalScan]]) — the former
-  * `df.rdd`/`createDataFrame` path paid an interpreted Row decode+encode
-  * per row on top of the same algorithm.
-  *
-  * Integral inputs keep an integral (long) accumulator and a long output
-  * column, matching pandas cumsum on int64; floats accumulate as double.
+  * Nulls behave pandas-style: they don't advance the accumulator and the
+  * output at a null position is null.
   */
 object Cumulative {
 
@@ -55,182 +50,57 @@ object Cumulative {
     val zeroL = Long.MaxValue; def combineL(a: Long, b: Long): Long = math.min(a, b)
   }
 
+  /** The accumulator of value column `vIdx`: Long for integral types,
+    * Double otherwise. `step` advances it by one row.
+    */
+  private final case class Acc[T](vIdx: Int, outType: DataType, zero: T,
+      combine: (T, T) => T, get: InternalRow => T)(implicit val tag: ClassTag[T]) {
+    def step(s: T, r: InternalRow): T = if (r.isNullAt(vIdx)) s else combine(s, get(r))
+    /** Per-task emitter: the running value, null at a null input. */
+    def out(schema: StructType): () => (InternalRow, T) => InternalRow = () => {
+      val append = new InternalScan.Append(schema, Seq(outType))
+      (r, s) => append(r, if (r.isNullAt(vIdx)) null else s)
+    }
+  }
+
+  private def acc(df: DataFrame, valueCol: String, op: Op): Acc[_] = {
+    val vIdx = df.schema.fieldIndex(valueCol)
+    val dt = df.schema(vIdx).dataType
+    if (InternalScan.isIntegral(dt))
+      Acc[Long](vIdx, LongType, op.zeroL, op.combineL, InternalScan.longGetter(dt, vIdx))
+    else Acc[Double](vIdx, DoubleType, op.zero, op.combine, InternalScan.doubleGetter(dt, vIdx))
+  }
+
   /** Skew-resilient GROUPED running aggregate — the scale alternative to
     * the SQL-window path in `GGroupBy.cumsum`/`cumprod`.
     *
     * The window path partitions by the group keys, so one task owns each
     * whole group: correct and pandas-bit-identical, but a zipf-hot group
     * (the round-14 skew replica put 15% of the fact on ONE key) becomes a
-    * single straggler task — Spark's window buffer spills rather than
-    * OOMs, but at 100 TB a 15 TB group in one task is still a ceiling.
-    * The reference has the same bound (whole-group partitions,
-    * `dask_expr/_groupby.py:468` and the p2p shuffle staging around it).
-    *
-    * This path removes it for associative ops: range-partition by
-    * (group ++ order) keys so groups are contiguous and a hot group SPANS
-    * partitions, then run the two-phase prefix scan with a segmented
-    * carry — each per-partition summary is (firstGroup, lastGroup,
-    * tail state of lastGroup); merging two adjacent summaries folds the
-    * left tail into the right only when the right segment is entirely the
-    * left's open group (the classic segmented-scan monoid, associative,
-    * so it rides [[TreeCarry]] at O(√n) per hop). Float caveat: partial
-    * states reassociate +/× (same as the global path); integral inputs
-    * stay exact under any split, which is what the oracle gate pins.
+    * single straggler task. The reference has the same bound (whole-group
+    * partitions, `dask_expr/_groupby.py:468`). [[PrefixScan.grouped]]
+    * removes it: a hot group spans partitions and its running state
+    * carries across them.
     */
   def grouped(df: DataFrame, groupCols: Seq[String], orderCols: Seq[String],
-      valueCol: String, op: Op, outCol: String): DataFrame = {
-    val integral = df.schema(valueCol).dataType match {
-      case ByteType | ShortType | IntegerType | LongType => true
-      case _                                             => false
-    }
-    if (integral)
-      groupedScan[Long](df, groupCols, orderCols, valueCol, outCol, LongType,
-        op.zeroL, op.combineL, InternalScan.longGetter)
-    else
-      groupedScan[Double](df, groupCols, orderCols, valueCol, outCol, DoubleType,
-        op.zero, op.combine, InternalScan.doubleGetter)
-  }
-
-  /** Per-partition segment summary for the grouped scan: the group open
-    * at the left edge, the group open at the right edge (both as
-    * UnsafeRow keys from [[InternalScan.KeyProj]] — byte equality is
-    * value equality), and the running state of that right-edge group.
-    * `isEmpty` marks the monoid identity (an empty partition).
-    */
-  private case class Seg(firstG: UnsafeRow, lastG: UnsafeRow, tail: Any,
-      isEmpty: Boolean)
-  private val emptySeg = Seg(null, null, null, isEmpty = true)
-
-  private def groupedScan[T: scala.reflect.ClassTag](
-      df: DataFrame, groupCols: Seq[String], orderCols: Seq[String],
-      valueCol: String, outCol: String, outType: DataType,
-      zero: T, combine: (T, T) => T,
-      getter: (DataType, Int) => InternalRow => T): DataFrame = {
-    val spark = df.sparkSession
-    val shuffleParts = spark.sessionState.conf.numShufflePartitions
-    val arrangeCols = (groupCols ++ orderCols).map(col)
-    // range partitioning on the COMPOSITE key: a hot group's rows spread
-    // across consecutive partitions instead of collapsing into one task
-    val arranged = df.repartitionByRange(shuffleParts, arrangeCols: _*)
-      .sortWithinPartitions(arrangeCols: _*)
-    val schema = arranged.schema
-    val gIdx = groupCols.map(schema.fieldIndex)
-    val vIdx = schema.fieldIndex(valueCol)
-    val get = getter(schema(vIdx).dataType, vIdx)
-    val rdd = InternalScan.rddOf(arranged)
-    val nParts = rdd.getNumPartitions
-    val outSchema = schema.add(outCol, outType)
-    if (nParts == 0) return InternalScan.emptyDF(spark, outSchema)
-
-    // phase 1 (narrow): one segment summary per partition
-    val summaries = rdd.mapPartitionsWithIndex { (pid, it) =>
-      val keyProj = new InternalScan.KeyProj(schema, gIdx)
-      var first: UnsafeRow = null
-      var cur: UnsafeRow = null
-      var acc = zero
-      it.foreach { r =>
-        val g = keyProj(r)
-        if (first == null) { first = g.copy(); cur = first }
-        else if (g != cur) { cur = g.copy(); acc = zero }
-        if (!r.isNullAt(vIdx)) acc = combine(acc, get(r))
-      }
-      Iterator.single(
-        (pid, if (first == null) emptySeg else Seg(first, cur, acc, isEmpty = false)))
+      valueCol: String, op: Op, outCol: String): DataFrame =
+    acc(df, valueCol, op) match {
+      case a: Acc[t] =>
+        PrefixScan.grouped(df, groupCols, orderCols.map(col), df.schema.add(outCol, a.outType))(
+          a.zero, a.step, a.combine)(a.out(df.schema))
     }
 
-    val merge: (Seg, Seg) => Seg = (a, b) =>
-      if (a.isEmpty) b
-      else if (b.isEmpty) a
-      else Seg(a.firstG, b.lastG,
-        // fold the left tail through only when b is ENTIRELY the group a
-        // left open — otherwise b's own last group started inside b
-        if (b.firstG == b.lastG && b.firstG == a.lastG)
-          combine(a.tail.asInstanceOf[T], b.tail.asInstanceOf[T])
-        else b.tail,
-        isEmpty = false)
-
-    val seeds = TreeCarry.exclusivePrefix[Seg](summaries, nParts, () => emptySeg, merge)
-
-    // phase 2 (narrow): seeded per-group running aggregate
-    val outRdd = rdd.zipPartitions(seeds) { (it, seedIt) =>
-      val carry = if (seedIt.hasNext) seedIt.next()._2 else emptySeg
-      val keyProj = new InternalScan.KeyProj(schema, gIdx)
-      val append = new InternalScan.Append(schema, Seq(outType))
-      var cur: UnsafeRow = null
-      var acc = zero
-      var started = false
-      it.map { r =>
-        val g = keyProj(r)
-        if (!started) {
-          started = true; cur = g.copy()
-          acc = if (!carry.isEmpty && carry.lastG == cur) carry.tail.asInstanceOf[T] else zero
-        } else if (g != cur) { cur = g.copy(); acc = zero }
-        if (r.isNullAt(vIdx)) append(r, null)
-        else { acc = combine(acc, get(r)); append(r, acc) }
-      }
+  /** Adds `outCol` = running aggregate of `valueCol` in global index order. */
+  def apply(df: DataFrame, valueCol: String, op: Op, outCol: String): DataFrame =
+    acc(df, valueCol, op) match {
+      case a: Acc[t] =>
+        import a.tag
+        val fold = PrefixScan.Fold[InternalRow, t](_.foldLeft(a.zero)(a.step), () => a.zero, a.combine)
+        val out = a.out(df.schema)
+        PrefixScan.frame(df, df.schema.add(outCol, a.outType), PrefixScan.Tree, fold) { (seed, it) =>
+          var s = seed
+          val emit = out()
+          it.map { r => s = a.step(s, r); emit(r, s) }
+        }
     }
-    InternalScan.toDF(spark, outRdd, outSchema)
-  }
-
-  /** Adds `outCol` = running aggregate of `valueCol` in global index order.
-    * Nulls behave pandas-style: they don't advance the accumulator and the
-    * output at a null position is null.
-    */
-  def apply(df: DataFrame, valueCol: String, op: Op, outCol: String): DataFrame = {
-    val integral = df.schema(valueCol).dataType match {
-      case ByteType | ShortType | IntegerType | LongType => true
-      case _                                             => false
-    }
-    if (integral)
-      scan[Long](df, valueCol, outCol, LongType, op.zeroL, op.combineL,
-        InternalScan.longGetter)
-    else
-      scan[Double](df, valueCol, outCol, DoubleType, op.zero, op.combine,
-        InternalScan.doubleGetter)
-  }
-
-  private def scan[T: scala.reflect.ClassTag](
-      df: DataFrame, valueCol: String, outCol: String, outType: DataType,
-      zero: T, combine: (T, T) => T,
-      getter: (DataType, Int) => InternalRow => T): DataFrame = {
-    val spark = df.sparkSession
-    val schema = df.schema
-    val vIdx = schema.fieldIndex(valueCol)
-    val get = getter(schema(vIdx).dataType, vIdx)
-
-    val dataRdd = InternalScan.rddOf(df)
-    val nParts = dataRdd.getNumPartitions
-    val outSchema = schema.add(outCol, outType)
-    if (nParts == 0) return InternalScan.emptyDF(spark, outSchema)
-
-    // phase 1: per-partition totals (narrow — no shuffle).  pid alignment
-    // uses the RDD's own split index (mapPartitionsWithIndex), NOT
-    // TaskContext.getPartitionId(): a downstream coalesce() collapses the
-    // narrow chain into fewer tasks and the task id would disagree with
-    // this pass, silently mis-seeding every partition's prefix.
-    // All-null partitions report the op identity, which combine absorbs —
-    // skipping them and folding them in are the same prefix.
-    val partTotals = dataRdd.mapPartitionsWithIndex { (pid, it) =>
-      var acc = zero
-      it.foreach { r => if (!r.isNullAt(vIdx)) acc = combine(acc, get(r)) }
-      Iterator.single((pid, acc))
-    }
-
-    // √n tree-carry (r14, VERDICT r13 #5): the exclusive prefixes are
-    // computed without ever holding the n-entry carry on the driver —
-    // seed p arrives in partition p of `seeds` and zipPartitions aligns
-    // it with the data partition (same count, index-wise).
-    val seeds = TreeCarry.exclusivePrefix[T](partTotals, nParts, () => zero, combine)
-
-    // phase 2: seeded running aggregate (narrow)
-    val outRdd = dataRdd.zipPartitions(seeds) { (it, seedIt) =>
-      var acc = if (seedIt.hasNext) seedIt.next()._2 else zero
-      val append = new InternalScan.Append(schema, Seq(outType))
-      it.map { r =>
-        if (r.isNullAt(vIdx)) append(r, null)
-        else { acc = combine(acc, get(r)); append(r, acc) }
-      }
-    }
-    InternalScan.toDF(spark, outRdd, outSchema)
-  }
 }

@@ -1,7 +1,9 @@
 package graft.operators
 
 import org.apache.spark.sql.{DataFrame, Row}
-import org.apache.spark.sql.types.{DoubleType, LongType, StructField, StructType}
+import org.apache.spark.sql.catalyst.InternalRow
+import org.apache.spark.sql.catalyst.expressions.{GenericInternalRow, UnsafeProjection}
+import org.apache.spark.sql.types.{DoubleType, LongType, StructField, StructType, TimestampNTZType, TimestampType}
 
 /** Decay parameterization + option surface of pandas/dask `ewm` (pandas
   * `core/window/ewm.py`): `com`, `span` and `halflife` are pure alpha
@@ -46,42 +48,43 @@ object EwmParams {
   * `Series.ewm(...).mean()/var()/std()` (reference:
   * `dask/dataframe/dask_expr/_rolling.py` ewm surface; pandas
   * `core/window/ewm.py` semantics), full parameter surface via
-  * [[EwmParams]].
-  *
-  * A naive SQL restatement needs an unbounded self-join or a
-  * single-task window; the distributable form is the same two-phase
-  * prefix scan as [[Cumulative]] with DECAY-COMPOSED carry state: the
-  * per-row recurrences
+  * [[EwmParams]]. A naive SQL restatement needs an unbounded self-join or
+  * a single-task window; the global forms here are a [[PrefixScan]]
+  * whose carry is the DECAY-COMPOSED state of the per-row recurrences
   *
   *   S  = q·S  + wt·x    (decayed value sum,      q = 1-α)
   *   W  = q·W  + wt      (decayed weight sum)
   *   S2 = q·S2 + wt·x²   (decayed square sum)
   *   W2 = q²·W2 + wt²    (decayed SQUARED-weight sum, bias correction)
   *
-  * compose across a segment of length L by decaying the left state by
-  * q^L (q²^L for W2) — so phase 1 emits (end-state, decay factors) per
-  * partition, the driver prefix-combines N tiny tuples, and phase 2
-  * re-runs each partition seeded with its carry. Two narrow passes,
-  * zero shuffles on top of the caller's sort, any npartitions.
-  * adjust=false makes the per-obs weight depend on "is this the global
-  * first observation", so phase 1 computes BOTH variants (first-obs in
-  * segment weighted 1 vs weighted α) and the driver fold picks per
-  * partition based on whether any earlier partition observed a value.
+  * Carry contract: a run of L rows composes after an earlier state `c` as
+  * `c·q^L + s` (`c·q²^L + s` for W2). adjust=false weights the global
+  * first observation 1 and every later one α, so a summary holds the end
+  * state under both conventions and the merge picks by whether the left
+  * side observed a value. The composition is associative in exact
+  * arithmetic but NOT in floating point, and the q157/q162 oracle hashes
+  * pin the left-fold ulps — so the carry is [[PrefixScan.Sequential]],
+  * never the tree (an O(npartitions) driver payload of a few scalars per
+  * partition).
   *
   * Null rows contribute no weight but (ignoreNa=false) decay the
   * accumulators; the emitted mean carries the last available estimate,
   * as pandas does. `ewm_var` is null until two observations are seen.
-  *
-  * DELIBERATELY NOT on [[TreeCarry]] (r14): the carry combine
-  * (`cs·d + s`) is floating-point affine composition, and the √n tree
-  * reassociates it — a left-fold-order bit-exactness the q157/q162
-  * oracle hashes pin would break by an ulp. The flat collect here is
-  * O(npartitions × ~60 B) of plain scalars (≈50 MB at the 8×10⁵-
-  * partition 100 TB point, one-shot) — acceptable where the ROW-buffer
-  * carries (Cumulative/Expanding/Fill/MapOverlap, integral or
-  * arithmetic-free merges) were worth the tree.
   */
 object Ewm {
+
+  /** A run of rows, summarized for composition: the end sums
+    * (s, w, s2, w2) if no earlier observation exists (`first`) and if one
+    * does (`later`), the run's decay factors q^L and q²^L, whether it
+    * observed a value, and its row count.
+    */
+  private final case class Seg(first: Array[Double], later: Array[Double], d: Double,
+      d2: Double, seen: Boolean, n: Long)
+
+  /** A run of rows under time decay: its end sums at its last timestamp,
+    * whether it has a row, and its row count.
+    */
+  private final case class TSeg(s: Double, w: Double, lastTs: Double, any: Boolean, n: Long)
 
   /** One sequential EWM scan state (the four decayed sums). */
   private final class St(var s: Double = 0.0, var w: Double = 0.0,
@@ -125,77 +128,49 @@ object Ewm {
     * the contract [[Cumulative]] documents.
     */
   def statsIndexed(df: DataFrame, valueCol: String, p: EwmParams): DataFrame = {
-    val spark = df.sparkSession
     val vIdx = df.schema.fieldIndex(valueCol)
     val q = 1.0 - p.alpha
-    // InternalRow scan (r15): same flat O(npartitions)-scalar carry — the
-    // float recurrence must not reassociate (oracle-hashed ulps) — but
-    // the per-row plumbing no longer decodes external Rows
-    val rdd = InternalScan.rddOf(df)
     val getD = InternalScan.doubleGetter(df.schema(vIdx).dataType, vIdx)
+    def valueAt(r: InternalRow): java.lang.Double =
+      if (r.isNullAt(vIdx)) null else java.lang.Double.valueOf(getD(r))
 
-    def valueAt(r: org.apache.spark.sql.catalyst.InternalRow): java.lang.Double =
-      if (r.isNullAt(vIdx)) null
-      else java.lang.Double.valueOf(getD(r))
-
-    // phase 1: per-partition end state under BOTH first-obs conventions
-    // (identical when adjust=true), plus segment decay factors
-    val totals: Array[(Int, Array[Double], Array[Double], Double, Double, Boolean, Long)] =
-      rdd.mapPartitionsWithIndex { (pid, it) =>
+    val fold = PrefixScan.Fold[InternalRow, Seg](
+      it => {
         val asFirst = new St()            // no prior observation anywhere
         val asLater = new St(seen = true) // some earlier partition saw one
-        var d = 1.0; var d2 = 1.0; var cnt = 0L
+        var d = 1.0; var d2 = 1.0; var n = 0L
         it.foreach { r =>
           val x = valueAt(r)
           if (x != null || !p.ignoreNa) { d *= q; d2 *= q * q }
           asFirst.step(x, p); asLater.step(x, p)
-          cnt += 1
+          n += 1
         }
-        Iterator.single((pid, asFirst.snapshot, asLater.snapshot, d, d2,
-          asFirst.seen, cnt))
-      }.collect().sortBy(_._1)
-
-    // driver: exclusive prefix-combine (O(npartitions) scalars)
-    val nP = totals.length
-    val carry = Array.ofDim[Double](nP, 4)
-    val carrySeen = new Array[Boolean](nP)
-    val startIdx = new Array[Long](nP)
-    var cs = 0.0; var cw = 0.0; var cs2 = 0.0; var cw2 = 0.0
-    var seen = false; var idx0 = 0L
-    var i = 0
-    while (i < nP) {
-      carry(i) = Array(cs, cw, cs2, cw2); carrySeen(i) = seen; startIdx(i) = idx0
-      val t = totals(i)
-      val st = if (seen) t._3 else t._2
-      cs = cs * t._4 + st(0); cw = cw * t._4 + st(1)
-      cs2 = cs2 * t._4 + st(2); cw2 = cw2 * t._5 + st(3)
-      seen = seen || t._6
-      idx0 += t._7
-      i += 1
-    }
-
-    // phase 2: per-partition re-scan seeded with the carry
+        Seg(asFirst.snapshot, asLater.snapshot, d, d2, asFirst.seen, n)
+      },
+      () => Seg(new Array(4), new Array(4), 1.0, 1.0, seen = false, 0L),
+      (a, b) => {
+        def decayed(c: Array[Double], s: Array[Double]) =
+          Array(c(0) * b.d + s(0), c(1) * b.d + s(1), c(2) * b.d + s(2), c(3) * b.d2 + s(3))
+        Seg(decayed(a.first, if (a.seen) b.later else b.first), decayed(a.later, b.later),
+          a.d * b.d, a.d2 * b.d2, a.seen || b.seen, a.n + b.n)
+      })
     val outSchema = StructType(Seq(
       StructField("rn", LongType, nullable = false),
       StructField("ewm_mean", DoubleType, nullable = true),
       StructField("ewm_var", DoubleType, nullable = true)))
-    val bc = spark.sparkContext.broadcast((carry, carrySeen, startIdx))
-    val out = rdd.mapPartitionsWithIndex { (pid, it) =>
-      val (c, cSeen, sIdx) = bc.value
+    PrefixScan.frame(df, outSchema, PrefixScan.Sequential, fold) { (seed, it) =>
       val st = new St()
-      st.load(c(pid), cSeen(pid))
-      var rn = sIdx(pid)
-      val proj = org.apache.spark.sql.catalyst.expressions.UnsafeProjection
-        .create(outSchema.fields.map(_.dataType))
-      val buf = new org.apache.spark.sql.catalyst.expressions.GenericInternalRow(3)
+      st.load(seed.first, seed.seen)
+      var rn = seed.n
+      val proj = UnsafeProjection.create(outSchema.fields.map(_.dataType))
+      val buf = new GenericInternalRow(3)
       it.map { r =>
         st.step(valueAt(r), p)
         buf.update(0, rn); buf.update(1, st.mean); buf.update(2, st.varU)
         rn += 1
-        proj(buf): org.apache.spark.sql.catalyst.InternalRow
+        proj(buf): InternalRow
       }
     }
-    InternalScan.toDF(spark, out, outSchema)
   }
 
   /** pandas `ewm(halflife=timedelta, times=col).mean()` — IRREGULAR
@@ -205,106 +180,60 @@ object Ewm {
     * contribute nothing but time still passes. Input must be sorted by
     * `tsCol` (nondecreasing), as pandas requires monotonic times.
     *
-    * Distribution: the same two-phase decay-composed scan as
-    * [[statsIndexed]] — the left segment's end-state decays by
-    * `0.5^((t_endRight - t_endLeft)/h)` when composed, so phase 1 emits
-    * (endState, lastTs) per partition and phase 2 re-scans seeded with
-    * (carry, previous partition's last ts). Returns
+    * Carry contract: a summary is a run's end state at its last timestamp
+    * ([[TSeg]]); an earlier state composes by decaying over the gap
+    * between the two runs' last timestamps, `c·0.5^(Δt/h) + s` — floating
+    * point that must not reassociate, so the carry is
+    * [[PrefixScan.Sequential]] as in [[statsIndexed]]. Returns
     * (rn BIGINT, ewm_mean DOUBLE).
     */
   def statsIndexedTimes(df: DataFrame, valueCol: String, tsCol: String,
                         halflifeSec: Double): DataFrame = {
     require(halflifeSec > 0.0, s"halflife must be > 0: $halflifeSec")
-    val spark = df.sparkSession
     val vIdx = df.schema.fieldIndex(valueCol)
     val tIdx = df.schema.fieldIndex(tsCol)
-    val rdd = InternalScan.rddOf(df)
     val getD = InternalScan.doubleGetter(df.schema(vIdx).dataType, vIdx)
 
     // InternalRow timestamps are MICROSECONDS; the former Row path read
     // java.sql.Timestamp.getTime (floorDiv(micros,1000) MILLIS) / 1000.0.
     // Reproduce that exact millisecond truncation — µs-resolution seconds
     // would move every decay factor by an ulp and break the oracle hash.
-    val tsOf: org.apache.spark.sql.catalyst.InternalRow => Double =
-      df.schema(tIdx).dataType match {
-        case org.apache.spark.sql.types.TimestampType |
-             org.apache.spark.sql.types.TimestampNTZType =>
-          r => Math.floorDiv(r.getLong(tIdx), 1000L) / 1000.0
-        case dt => InternalScan.doubleGetter(dt, tIdx)
-      }
-    def valueAt(r: org.apache.spark.sql.catalyst.InternalRow): java.lang.Double =
-      if (r.isNullAt(vIdx)) null
-      else java.lang.Double.valueOf(getD(r))
-    def decay(dtSec: Double): Double = math.pow(0.5, dtSec / halflifeSec)
-
-    // phase 1: per-partition end state + boundary timestamps
-    val totals: Array[(Int, Double, Double, Double, Boolean, Long)] =
-      rdd.mapPartitionsWithIndex { (pid, it) =>
-        var s = 0.0; var w = 0.0; var lastTs = 0.0
-        var any = false; var cnt = 0L
-        it.foreach { r =>
-          val t = tsOf(r)
-          if (any) {
-            val d = decay(t - lastTs)
-            s *= d; w *= d
-          }
-          val x = valueAt(r)
-          if (x != null) { s += x.doubleValue(); w += 1.0 }
-          lastTs = t; any = true; cnt += 1
-        }
-        Iterator.single((pid, s, w, lastTs, any, cnt))
-      }.collect().sortBy(_._1)
-
-    // driver: exclusive prefix-combine with time-gap decay
-    val nP = totals.length
-    val carryS = new Array[Double](nP); val carryW = new Array[Double](nP)
-    val carryTs = new Array[Double](nP); val carryHas = new Array[Boolean](nP)
-    val startIdx = new Array[Long](nP)
-    var cs = 0.0; var cw = 0.0; var cts = 0.0; var has = false; var idx0 = 0L
-    var i = 0
-    while (i < nP) {
-      carryS(i) = cs; carryW(i) = cw; carryTs(i) = cts; carryHas(i) = has
-      startIdx(i) = idx0
-      val (_, s, w, lastTs, any, cnt) = totals(i)
-      if (any) {
-        if (has) {
-          val d = decay(lastTs - cts)
-          cs = cs * d + s; cw = cw * d + w
-        } else { cs = s; cw = w }
-        cts = lastTs; has = true
-      }
-      idx0 += cnt
-      i += 1
+    val tsOf: InternalRow => Double = df.schema(tIdx).dataType match {
+      case TimestampType | TimestampNTZType => r => Math.floorDiv(r.getLong(tIdx), 1000L) / 1000.0
+      case dt => InternalScan.doubleGetter(dt, tIdx)
     }
-
-    // phase 2: re-scan seeded with (carry, previous partition's last ts)
+    def decay(dtSec: Double): Double = math.pow(0.5, dtSec / halflifeSec)
+    // one row: decay the sums over the gap since the previous row, add the value
+    val step: (TSeg, InternalRow) => TSeg = (c, r) => {
+      val t = tsOf(r)
+      var s = c.s; var w = c.w
+      if (c.any) { val d = decay(t - c.lastTs); s *= d; w *= d }
+      if (!r.isNullAt(vIdx)) { s += getD(r); w += 1.0 }
+      TSeg(s, w, t, any = true, c.n + 1)
+    }
+    val empty = TSeg(0.0, 0.0, 0.0, any = false, 0L)
+    val fold = PrefixScan.Fold[InternalRow, TSeg](_.foldLeft(empty)(step), () => empty,
+      (a, b) =>
+        if (!b.any) a.copy(n = a.n + b.n)
+        else if (!a.any) b.copy(n = a.n + b.n)
+        else {
+          val d = decay(b.lastTs - a.lastTs)
+          TSeg(a.s * d + b.s, a.w * d + b.w, b.lastTs, any = true, a.n + b.n)
+        })
     val outSchema = StructType(Seq(
       StructField("rn", LongType, nullable = false),
       StructField("ewm_mean", DoubleType, nullable = true)))
-    val bc = spark.sparkContext.broadcast((carryS, carryW, carryTs, carryHas, startIdx))
-    val out = rdd.mapPartitionsWithIndex { (pid, it) =>
-      val (cS, cW, cTs, cHas, sIdx) = bc.value
-      var s = cS(pid); var w = cW(pid); var lastTs = cTs(pid); var any = cHas(pid)
-      var rn = sIdx(pid)
-      val proj = org.apache.spark.sql.catalyst.expressions.UnsafeProjection
-        .create(outSchema.fields.map(_.dataType))
-      val buf = new org.apache.spark.sql.catalyst.expressions.GenericInternalRow(2)
+    PrefixScan.frame(df, outSchema, PrefixScan.Sequential, fold) { (seed, it) =>
+      var c = seed
+      val proj = UnsafeProjection.create(outSchema.fields.map(_.dataType))
+      val buf = new GenericInternalRow(2)
       it.map { r =>
-        val t = tsOf(r)
-        if (any) {
-          val d = decay(t - lastTs)
-          s *= d; w *= d
-        }
-        val x = valueAt(r)
-        if (x != null) { s += x.doubleValue(); w += 1.0 }
-        lastTs = t; any = true
-        val mean: Any = if (w > 0) s / w else null
-        buf.update(0, rn); buf.update(1, mean)
-        rn += 1
-        proj(buf): org.apache.spark.sql.catalyst.InternalRow
+        buf.update(0, c.n)
+        c = step(c, r)
+        buf.update(1, if (c.w > 0) c.s / c.w else null)
+        proj(buf): InternalRow
       }
     }
-    InternalScan.toDF(spark, out, outSchema)
   }
 
   /** Back-compat: the adjust=True, ignoreNa=False default of round 6. */

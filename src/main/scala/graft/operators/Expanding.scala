@@ -1,28 +1,26 @@
 package graft.operators
 
 import org.apache.spark.sql.DataFrame
+import org.apache.spark.sql.catalyst.InternalRow
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.types._
 
 /** Distributed GLOBAL `expanding()` — reference `dask_expr/_rolling.py`
-  * (`Expanding` ≈ rolling with an unbounded-preceding frame).
+  * (`Expanding` ≈ rolling with an unbounded-preceding frame). An
+  * un-partitioned `ROWS UNBOUNDED PRECEDING` SQL window is a single task in
+  * Spark; this is a [[PrefixScan]] carrying the full moment state, so ONE
+  * scan serves every expanding aggregate.
   *
-  * An un-partitioned `ROWS UNBOUNDED PRECEDING` SQL window is a single
-  * task in Spark — fine at 60k rows, fatal at 100 TB.  Like [[Cumulative]]
-  * this is a two-phase prefix scan, but carrying the full moment state so
-  * ONE pass serves every expanding aggregate:
-  *
-  *  phase 1 (narrow):  per-partition fold of (n, Σx as long+double,
-  *                     Welford mean/M2, min, max) → N tiny states
-  *  driver:            exclusive prefix-combine via Chan's parallel
-  *                     update (numerically stable, associative — no raw
-  *                     power sums, so mean ≫ std cannot cancel)
-  *  phase 2 (narrow):  per-partition running update seeded with the
-  *                     prefix state, emitting every requested aggregate
+  * Carry contract: a partition's summary is its [[St]] (row count, exact
+  * Long sums, Welford mean/M2, min, max); summaries merge by Chan's
+  * parallel update — associative, with the empty state as identity, so
+  * the carry is a [[PrefixScan.Tree]]. Integral mean/var/std come from the
+  * Long sums and are exact under any split; the Double moments may move by
+  * an ulp with the partition boundaries (no raw power sums, so mean ≫ std
+  * cannot cancel).
   *
   * Input must arrive in global order; `aggs` sorts by `orderBy` first
-  * (one range shuffle — the same total-order exchange `orderBy` costs),
-  * then both scan phases are narrow.
+  * (one range shuffle — the same total-order exchange `orderBy` costs).
   *
   * Null semantics match the keyed native-window path (and pandas): a null
   * value does not advance the state, but the row still emits the
@@ -123,11 +121,7 @@ object Expanding {
            specs: Seq[(String, String)], minPeriods: Int = 1): DataFrame = {
     specs.foreach { case (_, a) =>
       require(supported(a), s"expanding agg=$a (supported: ${supported.mkString(", ")})") }
-    val spark = df.sparkSession
-    val integral = df.schema(valueCol).dataType match {
-      case ByteType | ShortType | IntegerType | LongType => true
-      case _                                             => false
-    }
+    val integral = InternalScan.isIntegral(df.schema(valueCol).dataType)
     val sorted = (if (orderBy.nonEmpty) df.orderBy(orderBy.map(col): _*) else df)
       // Both phases consume the same total-ordered scan; cache it so the
       // post-shuffle partition sort runs ONCE (phase 2 would otherwise
@@ -142,29 +136,13 @@ object Expanding {
     val vIdx = schema.fieldIndex(valueCol)
     val vType = schema(vIdx).dataType
     val getD = InternalScan.doubleGetter(vType, vIdx)
-    val getL: org.apache.spark.sql.catalyst.InternalRow => Long =
+    val getL: InternalRow => Long =
       if (integral) InternalScan.longGetter(vType, vIdx) else _ => 0L
-    val sortedRdd = InternalScan.rddOf(sorted)
-
-    // phase 1: per-partition state (narrow). pid from the RDD's own split
-    // index, not TaskContext — see Cumulative for the coalesce() hazard.
-    val partStates = sortedRdd.mapPartitionsWithIndex { (pid, it) =>
-      val st = St.empty
-      it.foreach { r =>
-        st.bump()
-        if (!r.isNullAt(vIdx)) st.add(getD(r), getL(r))
-      }
-      Iterator.single((pid, st))
+    val step: (St, InternalRow) => St = (st, r) => {
+      st.bump()
+      if (!r.isNullAt(vIdx)) st.add(getD(r), getL(r))
+      st
     }
-
-    // √n tree-carry (r14, VERDICT r13 #5): exclusive prefixes without the
-    // O(npartitions) driver collect; seed p lands in partition p and
-    // phase 2 aligns via zipPartitions. St.empty is merge's identity.
-    val nParts = sortedRdd.getNumPartitions
-    val seeds =
-      if (nParts == 0) null
-      else TreeCarry.exclusivePrefix[St](partStates, nParts,
-        () => St.empty, (a: St, b: St) => a.merge(b))
 
     val minObs = math.max(minPeriods, 1)
     def outType(a: String): DataType = a match {
@@ -196,25 +174,23 @@ object Expanding {
         else math.sqrt(st.m2 / (st.n - 1))
     }
 
-    // phase 2: seeded running scan (narrow), all aggregates in one pass
     val outSchema = specs.foldLeft(schema) { case (sc, (out, a)) =>
       sc.add(out, outType(a), nullable = true) }
     val specsL = specs.toArray
     val extraTypes = specsL.map { case (_, a) => outType(a) }.toSeq
-    if (nParts == 0) return InternalScan.emptyDF(spark, outSchema)
-    val outRdd = sortedRdd.zipPartitions(seeds) { (it, seedIt) =>
-      val st = (if (seedIt.hasNext) seedIt.next()._2 else St.empty).copySt()
+    val fold = PrefixScan.Fold[InternalRow, St](
+      _.foldLeft(St.empty)(step), () => St.empty, _ merge _)
+    PrefixScan.frame(sorted, outSchema, PrefixScan.Tree, fold) { (seed, it) =>
+      val st = seed.copySt()
       val append = new InternalScan.Append(schema, extraTypes)
       val vals = new Array[Any](specsL.length)
       it.map { r =>
-        st.bump()
-        if (!r.isNullAt(vIdx)) st.add(getD(r), getL(r))
+        step(st, r)
         var i = 0
         while (i < specsL.length) { vals(i) = emit(specsL(i)._2, st); i += 1 }
         append.applyAll(r, vals)
       }
     }
-    InternalScan.toDF(spark, outRdd, outSchema)
   }
 
   /** Single-aggregate convenience used by [[graft.api.GRolling.expanding]]. */

@@ -2,50 +2,45 @@ package graft.operators
 
 import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.catalyst.InternalRow
-import org.apache.spark.sql.catalyst.expressions.UnsafeRow
+import org.apache.spark.sql.functions.col
+import org.apache.spark.sql.types.StructType
 
-/** Distributed global forward/backward fill — reference `FFill/BFill`
-  * (`dask_expr/_expr.py:3405-3438`, map_overlap-based).
+/** Distributed forward/backward fill, global and grouped — reference
+  * `FFill/BFill` (`dask_expr/_expr.py:3405-3438`, map_overlap-based). An
+  * un-partitioned `last(x, ignoreNulls) OVER (ORDER BY …)` window would
+  * run in one task; every fill here is a [[PrefixScan]] instead. Rows that
+  * keep their value pass through untouched, and filled rows go out
+  * through a codegen'd replace projection.
   *
-  * Same two-phase prefix-scan shape as [[Cumulative]]: an un-partitioned
-  * `last(x, ignoreNulls) OVER (ORDER BY …)` window would run in one task;
-  * instead phase 1 computes each partition's boundary non-null value and
-  * the carries flow through [[TreeCarry]] (r14 — formerly an
-  * O(npartitions) driver collect + broadcast), then phase 2 fills within
-  * each partition seeded by its neighbor's carry via zipPartitions.  Two
-  * narrow passes plus the tree's tiny boundary shuffles, no data shuffle
-  * (input already range-partitioned+sorted by the index).  Since round 15
-  * both passes run on the plan's own InternalRow RDD ([[InternalScan]]):
-  * rows that keep their value pass through untouched and filled rows go
-  * out through a codegen'd replace projection — the former Row path paid
-  * an interpreted decode+encode per row.
-  *
-  * The carry merge is "latest non-null wins":
-  * `(a, b) => if (b != null) b else a` — associative with identity null,
-  * exactly TreeCarry's contract.  Carried values are Catalyst-form
+  * Carry contract: a partition's summary is its boundary non-null value
+  * (the last one for ffill, the first one for bfill, which scans
+  * backward), and summaries merge by "latest non-null wins" — associative
+  * with identity null, so the carry is a [[PrefixScan.Tree]]. Carried
+  * values are verbatim row values with no arithmetic, so every fill is
+  * bit-exact under any split. They are Catalyst-form
   * (`InternalRow.copyValue` snapshots them out of reused row buffers).
   */
 object Fill {
 
   private val lastWins: (Any, Any) => Any = (a, b) => if (b != null) b else a
 
-  /** Per-partition segment summary for the GROUPED tree fill: the group
-    * open at each edge and the last non-null value of the right-edge
-    * group. Same segmented-scan monoid as `Cumulative.grouped` with
-    * last-non-null-wins as the combine.
-    */
-  private case class GSeg(firstG: UnsafeRow, lastG: UnsafeRow, tail: Any,
-      isEmpty: Boolean)
-  private val emptyGSeg = GSeg(null, null, null, isEmpty = true)
+  /** The fill state after a row: its value when non-null, else `last`. */
+  private def keep(schema: StructType, vIdx: Int): (Any, InternalRow) => Any = {
+    val vType = schema(vIdx).dataType
+    (last, r) => if (r.isNullAt(vIdx)) last else InternalRow.copyValue(r.get(vIdx, vType))
+  }
+
+  /** Per-task emitter: a null value takes the fill state, if any. */
+  private def filler(schema: StructType, vIdx: Int): () => (InternalRow, Any) => InternalRow =
+    () => {
+      val replace = new InternalScan.Replace(schema, vIdx)
+      (r, last) => if (last == null || !r.isNullAt(vIdx)) r else replace(r, last)
+    }
 
   /** Skew-resilient GROUPED forward fill — the scale alternative to the
-    * per-group window `last(x, ignoreNulls)` (one task per whole group;
-    * a zipf-hot group is a single straggler task). Range-partitions by
-    * (group ++ order) so hot groups span partitions, then stitches the
-    * boundary carries with the segmented √n tree. Carried values are
-    * verbatim row values (no arithmetic), so the result is bit-exact
-    * under ANY partitioning — unlike the cumulative ops there is no
-    * float-reassociation caveat.
+    * per-group window `last(x, ignoreNulls)` (one task per whole group; a
+    * zipf-hot group is a single straggler task): [[PrefixScan.grouped]]
+    * lets hot groups span partitions.
     *
     * `descendingOrder = true` turns this into backward fill: bfill is
     * forward fill walked in reverse order, and a descending range
@@ -53,135 +48,38 @@ object Fill {
     */
   def groupedFfill(df: DataFrame, groupCols: Seq[String], orderCols: Seq[String],
       valueCol: String, descendingOrder: Boolean = false): DataFrame = {
-    import org.apache.spark.sql.functions.col
-    val spark = df.sparkSession
-    val shuffleParts = spark.sessionState.conf.numShufflePartitions
-    val arrangeCols = groupCols.map(col) ++
-      orderCols.map(c => if (descendingOrder) col(c).desc else col(c).asc)
-    val arranged = df.repartitionByRange(shuffleParts, arrangeCols: _*)
-      .sortWithinPartitions(arrangeCols: _*)
-    val schema = arranged.schema
-    val gIdx = groupCols.map(schema.fieldIndex)
-    val vIdx = schema.fieldIndex(valueCol)
-    val vType = schema(vIdx).dataType
-    val rdd = InternalScan.rddOf(arranged)
-    val nParts = rdd.getNumPartitions
-    if (nParts == 0) return arranged
-
-    val summaries = rdd.mapPartitionsWithIndex { (pid, it) =>
-      val keyProj = new InternalScan.KeyProj(schema, gIdx)
-      var first: UnsafeRow = null
-      var cur: UnsafeRow = null
-      var last: Any = null
-      it.foreach { r =>
-        val g = keyProj(r)
-        if (first == null) { first = g.copy(); cur = first }
-        else if (g != cur) { cur = g.copy(); last = null }
-        if (!r.isNullAt(vIdx))
-          last = InternalRow.copyValue(r.get(vIdx, vType))
-      }
-      Iterator.single(
-        (pid, if (first == null) emptyGSeg else GSeg(first, cur, last, isEmpty = false)))
-    }
-
-    val merge: (GSeg, GSeg) => GSeg = (a, b) =>
-      if (a.isEmpty) b
-      else if (b.isEmpty) a
-      else GSeg(a.firstG, b.lastG,
-        if (b.firstG == b.lastG && b.firstG == a.lastG) lastWins(a.tail, b.tail)
-        else b.tail,
-        isEmpty = false)
-
-    val seeds = TreeCarry.exclusivePrefix[GSeg](summaries, nParts, () => emptyGSeg, merge)
-
-    val outRdd = rdd.zipPartitions(seeds) { (it, seedIt) =>
-      val carry = if (seedIt.hasNext) seedIt.next()._2 else emptyGSeg
-      val keyProj = new InternalScan.KeyProj(schema, gIdx)
-      val replace = new InternalScan.Replace(schema, vIdx)
-      var cur: UnsafeRow = null
-      var last: Any = null
-      var started = false
-      it.map { r =>
-        val g = keyProj(r)
-        if (!started) {
-          started = true; cur = g.copy()
-          last = if (!carry.isEmpty && carry.lastG == cur) carry.tail else null
-        } else if (g != cur) { cur = g.copy(); last = null }
-        if (!r.isNullAt(vIdx)) {
-          last = InternalRow.copyValue(r.get(vIdx, vType)); r
-        }
-        else if (last == null) r
-        else replace(r, last)
-      }
-    }
-    InternalScan.toDF(spark, outRdd, schema)
+    val vIdx = df.schema.fieldIndex(valueCol)
+    val order = orderCols.map(c => if (descendingOrder) col(c).desc else col(c).asc)
+    PrefixScan.grouped[Any](df, groupCols, order, df.schema)(
+      null, keep(df.schema, vIdx), lastWins)(filler(df.schema, vIdx))
   }
 
   def ffill(df: DataFrame, valueCol: String): DataFrame = {
-    val spark = df.sparkSession
     val schema = df.schema
     val vIdx = schema.fieldIndex(valueCol)
-    val vType = schema(vIdx).dataType
-    val dataRdd = InternalScan.rddOf(df)
-    val nParts = dataRdd.getNumPartitions
-    if (nParts == 0) return df
-
-    // mapPartitionsWithIndex, not TaskContext.getPartitionId(): a
-    // downstream coalesce() collapses tasks and would misalign the carries
-    // between the two passes (see MapOverlap)
-    val lastNonNull = dataRdd.mapPartitionsWithIndex { (pid, it) =>
-      var last: Any = null
-      it.foreach { r =>
-        if (!r.isNullAt(vIdx)) last = InternalRow.copyValue(r.get(vIdx, vType))
-      }
-      Iterator.single((pid, last))
+    val step = keep(schema, vIdx)
+    val out = filler(schema, vIdx)
+    val fold = PrefixScan.Fold[InternalRow, Any](_.foldLeft(null: Any)(step), () => null, lastWins)
+    PrefixScan.frame(df, schema, PrefixScan.Tree, fold) { (seed, it) =>
+      var last = seed
+      val emit = out()
+      it.map { r => last = step(last, r); emit(r, last) }
     }
-    val seeds = TreeCarry.exclusivePrefix[Any](lastNonNull, nParts,
-      () => null, lastWins)
-
-    val outRdd = dataRdd.zipPartitions(seeds) { (it, seedIt) =>
-      var last: Any = if (seedIt.hasNext) seedIt.next()._2 else null
-      val replace = new InternalScan.Replace(schema, vIdx)
-      it.map { r =>
-        if (!r.isNullAt(vIdx)) {
-          last = InternalRow.copyValue(r.get(vIdx, vType)); r
-        }
-        else if (last == null) r
-        else replace(r, last)
-      }
-    }
-    InternalScan.toDF(spark, outRdd, schema)
   }
 
   /** bfill = ffill run over the reversed partition order; implemented
     * directly with suffix carries to avoid a global re-sort.
     */
   def bfill(df: DataFrame, valueCol: String): DataFrame = {
-    val spark = df.sparkSession
     val schema = df.schema
     val vIdx = schema.fieldIndex(valueCol)
     val vType = schema(vIdx).dataType
-    val dataRdd = InternalScan.rddOf(df)
-    val nParts = dataRdd.getNumPartitions
-    if (nParts == 0) return df
-
-    val firstNonNull = dataRdd.mapPartitionsWithIndex { (pid, it) =>
-      var first: Any = null
-      var found = false
-      it.foreach { r =>
-        if (!found && !r.isNullAt(vIdx)) {
-          first = InternalRow.copyValue(r.get(vIdx, vType)); found = true
-        }
-      }
-      Iterator.single((pid, first))
-    }
-    // suffix carry: partition p's seed is the FIRST non-null boundary of
-    // the nearest following partition that has one
-    val seeds = TreeCarry.exclusiveSuffix[Any](firstNonNull, nParts,
+    // backward: partition p's seed is the first non-null value of the
+    // nearest following partition that has one
+    val fold = PrefixScan.Fold[InternalRow, Any](
+      it => it.find(r => !r.isNullAt(vIdx)).map(r => InternalRow.copyValue(r.get(vIdx, vType))).orNull,
       () => null, lastWins)
-
-    val outRdd = dataRdd.zipPartitions(seeds) { (it, seedIt) =>
-      val carryFromNext: Any = if (seedIt.hasNext) seedIt.next()._2 else null
+    PrefixScan.frame(df, schema, PrefixScan.Tree, fold, backward = true) { (carryFromNext, it) =>
       val replace = new InternalScan.Replace(schema, vIdx)
       // need the partition's own next-non-null lookahead: buffer rows until
       // a non-null is seen (bounded by the null-run length, not partition
@@ -215,6 +113,5 @@ object Fill {
         }
       }
     }
-    InternalScan.toDF(spark, outRdd, schema)
   }
 }

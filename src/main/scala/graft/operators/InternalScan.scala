@@ -6,17 +6,13 @@ import org.apache.spark.sql.catalyst.InternalRow
 import org.apache.spark.sql.catalyst.expressions.{BoundReference, GenericInternalRow, JoinedRow, UnsafeProjection, UnsafeRow}
 import org.apache.spark.sql.types._
 
-/** InternalRow plumbing for the two-phase scan operators (round-15,
-  * VERDICT r14 "Next round" #1).
-  *
-  * Through round 14 the scan family ran on `df.rdd` /
-  * `createDataFrame(rowRdd)`: every row paid the Catalyst→external
-  * deserializer on the way out and the external→Catalyst converter on
-  * the way back in, both outside codegen — measured at ~2.2x the window
-  * path on uniform 10x data (GroupedScanProbe). This helper keeps the
-  * scan phases on the physical plan's own InternalRow RDD: reads are
-  * typed primitive accessors and output rows are built by a
-  * code-generated UnsafeProjection.
+/** InternalRow plumbing for the ordered operators that run on
+  * [[PrefixScan]] (Cumulative, Expanding, Fill, Ewm, MapOverlap): the scan
+  * reads the physical plan's own InternalRow RDD through typed primitive
+  * accessors, and output rows are built by a code-generated
+  * UnsafeProjection. The former `df.rdd` / `createDataFrame(rowRdd)` path
+  * paid an interpreted Catalyst↔external row conversion per row, both
+  * ways (~2.2x the window path on uniform 10x data, GroupedScanProbe).
   *
   * Spark-internal contracts relied on (stable across 3.x/4.x):
   *   - `queryExecution.toRdd` iterators REUSE row buffers; anything
@@ -35,9 +31,6 @@ private[graft] object InternalScan {
   def toDF(spark: SparkSession, rdd: RDD[InternalRow], schema: StructType): DataFrame =
     GraftSqlShim.internalCreateDataFrame(spark, rdd, schema)
 
-  def emptyDF(spark: SparkSession, schema: StructType): DataFrame =
-    toDF(spark, spark.sparkContext.emptyRDD[InternalRow], schema)
-
   /** Typed double accessor for a numeric field; caller checks isNullAt
     * first. The returned lambda is serializable (safe to build at the
     * driver and capture in task closures).
@@ -51,6 +44,14 @@ private[graft] object InternalScan {
     case ByteType       => r => r.getByte(idx).toDouble
     case d: DecimalType => r => r.getDecimal(idx, d.precision, d.scale).toDouble
     case other => throw new IllegalArgumentException(s"not numeric: $other")
+  }
+
+  /** Byte, short, int or long: the types the ordered operators
+    * accumulate exactly as Long (pandas keeps int64 results integral).
+    */
+  def isIntegral(dt: DataType): Boolean = dt match {
+    case ByteType | ShortType | IntegerType | LongType => true
+    case _                                             => false
   }
 
   /** Typed long accessor for an integral field; caller checks isNullAt. */

@@ -12,21 +12,25 @@ import org.apache.spark.sql.types.StructType
   * the `after` leading rows of the next one (UDF rolling windows, shift,
   * diff, ffill across boundaries…).
   *
-  * Spark-first design: Spark has no ghost-row primitive, and a naive
-  * re-keyed union would re-shuffle the *entire* dataset just to move a few
-  * boundary rows.  Instead we exploit that the ghost region is tiny
-  * (`before + after` rows per partition): one narrow job collects only the
-  * boundary rows, they ride the √n [[TreeCarry]], and a single
-  * `zipPartitions` pass prepends/appends the neighbours' rows — zero
-  * shuffle of the main data.
+  * Spark has no ghost-row primitive, and a re-keyed union would shuffle
+  * the whole dataset to move a few boundary rows. Instead the ghost rows
+  * are the carries of a [[PrefixScan]]: the rows before a partition are a
+  * forward scan, the rows after it a backward one, and one emit pass
+  * prepends/appends them — no shuffle of the main data.
   *
-  * Since round 15 the whole family runs on the plan's own InternalRow RDD
-  * ([[InternalScan]]): kernels read typed primitives and emit through a
-  * codegen'd append projection — the former `df.rdd`/`createDataFrame`
-  * path paid an interpreted Row decode+encode per row on the same
-  * algorithm.  Iterator rows are REUSED buffers: ghosts and any row
-  * retained across `next()` are `copy()`d, carried field values go
-  * through `InternalRow.copyValue`.
+  * Carry contract: a partition's summary is its boundary rows (its last
+  * `before`, its first `after`), and summaries merge by concatenation
+  * truncated to the ghost width. A neighbour shorter than the ghost region
+  * contributes all its rows and the rest comes from further away. The
+  * merge does no arithmetic, so it is associative and exact under any
+  * split, and the carry is a [[PrefixScan.Tree]]. The value-based ghosts
+  * of [[rollingRangeAgg]] follow the same contract.
+  *
+  * Kernels run on the plan's own InternalRow RDD ([[InternalScan]]): they
+  * read typed primitives and emit through a codegen'd append projection.
+  * Iterator rows are REUSED buffers: ghosts and any row retained across
+  * `next()` are `copy()`d, carried field values go through
+  * `InternalRow.copyValue`.
   *
   * The input must be range-partitioned and sorted by the index column
   * (i.e. `setIndex` has run) so "previous/next partition" is meaningful.
@@ -41,61 +45,24 @@ object MapOverlap {
   def apply(df: DataFrame, outSchema: StructType, before: Int, after: Int)(
       f: (Seq[InternalRow], Iterator[InternalRow], Seq[InternalRow]) => Iterator[InternalRow]): DataFrame = {
 
-    val spark = df.sparkSession
-
-    // pid alignment between the two passes MUST use the RDD's own split
-    // index (mapPartitionsWithIndex), NOT TaskContext.getPartitionId():
-    // a downstream coalesce() collapses the narrow chain into fewer tasks
-    // and the task id would then disagree with the boundary pass, silently
-    // misaligning every carry (caught by the 10× oracle gate)
-
-    val dataRdd = InternalScan.rddOf(df)
-    val nParts = dataRdd.getNumPartitions
-    if (nParts == 0) return InternalScan.emptyDF(spark, outSchema)
-
-    // 1) narrow pass: per-partition head/tail boundary rows (copies — the
-    // source iterator reuses its buffer)
-    val boundaries = dataRdd.mapPartitionsWithIndex { (pid, it) =>
-      val head = new scala.collection.mutable.ArrayBuffer[InternalRow]
-      val tail = new scala.collection.mutable.ArrayDeque[InternalRow]
-      while (it.hasNext) {
-        val r = it.next()
-        if (after > 0 && head.size < after) head += r.copy()
-        if (before > 0) {
-          tail.append(r.copy()); if (tail.size > before) { tail.removeHead(); () }
-        }
-      }
-      Iterator.single((pid, (tail.toArray, head.toArray)))
-    }
-
-    // 2) ghost carries through the √n tree (r14 — formerly collected ALL
-    // boundaries to the driver and broadcast the whole n-entry map to
-    // every executor: O(npartitions × ghost × rowsize) on the driver AND
-    // per executor, ~a quarter GB at the 8×10⁵-partition 100 TB point).
-    // Ghost-before for partition p = last `before` rows of everything
-    // prior — an associative fold with merge (a ++ b).takeRight(before)
-    // (a neighbour shorter than the ghost region contributes all its rows
-    // and the remainder comes from further back, exactly the old walk).
-    // Ghost-after is the mirrored suffix fold. Row-buffer merges are pure
-    // concatenation — no arithmetic, so tree reassociation is exact.
-    val beforeSeeds = TreeCarry.exclusivePrefix[Array[InternalRow]](
-      boundaries.mapValues(_._1), nParts, () => Array.empty[InternalRow],
-      (a, b) => (a ++ b).takeRight(before))
-    // exclusiveSuffix visits partitions in DESCENDING order, so the
-    // accumulated `a` holds rows that come AFTER `b` in row order
-    val afterSeeds = TreeCarry.exclusiveSuffix[Array[InternalRow]](
-      boundaries.mapValues(_._2), nParts, () => Array.empty[InternalRow],
-      (a, b) => (b ++ a).take(after))
-
-    // 3) main pass: each partition reads its two seeds index-aligned
-    val outRdd = dataRdd.zipPartitions(beforeSeeds, afterSeeds) { (it, bIt, aIt) =>
-      val ghostBefore: Seq[InternalRow] =
-        if (before <= 0 || !bIt.hasNext) Nil else bIt.next()._2.toSeq
-      val ghostAfter: Seq[InternalRow] =
-        if (after <= 0 || !aIt.hasNext) Nil else aIt.next()._2.toSeq
-      f(ghostBefore, it, ghostAfter)
-    }
-    InternalScan.toDF(spark, outRdd, outSchema)
+    val tails = PrefixScan.Fold[InternalRow, Array[InternalRow]](
+      it => {
+        // copies: the source iterator reuses its buffer
+        val tail = new scala.collection.mutable.ArrayDeque[InternalRow]
+        if (before > 0) it.foreach { r => tail.append(r.copy()); if (tail.size > before) tail.removeHead() }
+        tail.toArray
+      },
+      () => Array.empty, (a, b) => (a ++ b).takeRight(before))
+    // backward: the accumulated `a` holds rows that come AFTER `b`
+    val heads = PrefixScan.Fold[InternalRow, Array[InternalRow]](
+      _.take(after).map(_.copy()).toArray, () => Array.empty, (a, b) => (b ++ a).take(after))
+    val rdd = InternalScan.rddOf(df)
+    val out =
+      if (after <= 0) PrefixScan(rdd, PrefixScan.Tree, tails)((gb, it) => f(gb.toSeq, it, Nil))
+      else if (before <= 0)
+        PrefixScan(rdd, PrefixScan.Tree, heads, backward = true)((ga, it) => f(Nil, it, ga.toSeq))
+      else PrefixScan.twoWay(rdd, tails, heads)((gb, ga, it) => f(gb.toSeq, it, ga.toSeq))
+    InternalScan.toDF(df.sparkSession, out, outSchema)
   }
 
   /** Rolling aggregate over the previous `window-1` rows + current, global
@@ -126,10 +93,7 @@ object MapOverlap {
       outType: org.apache.spark.sql.types.DataType =
         org.apache.spark.sql.types.DoubleType)
       (agg: Seq[Double] => Any): DataFrame = {
-    val shuffleParts = df.sparkSession.sessionState.conf.numShufflePartitions
-    val arrangeCols = (groupCols ++ orderCols).map(col)
-    val arranged = df.repartitionByRange(shuffleParts, arrangeCols: _*)
-      .sortWithinPartitions(arrangeCols: _*)
+    val arranged = PrefixScan.arrange(df, groupCols, orderCols.map(col))
     val schema = arranged.schema
     val gIdx = groupCols.map(schema.fieldIndex)
     val idx = schema.fieldIndex(valueCol)
@@ -409,64 +373,50 @@ object MapOverlap {
                       outType: org.apache.spark.sql.types.DataType =
                         org.apache.spark.sql.types.DoubleType)
                      (agg: Seq[Double] => Any): DataFrame = {
-    val spark = df.sparkSession
     val schema = df.schema
     val vIdx = schema.fieldIndex(valueCol)
     val oIdx = schema.fieldIndex(ordCol)
     val getV = InternalScan.doubleGetter(schema(vIdx).dataType, vIdx)
     val ordOf = InternalScan.doubleGetter(schema(oIdx).dataType, oIdx)
     val outSchema = schema.add(outCol, outType)
+    // (ord, value-or-null) pairs: values are unboxed at read time, so
+    // nothing references the reused row buffer
+    def entry(r: InternalRow): (Double, Any) =
+      (ordOf(r), if (r.isNullAt(vIdx)) null else Double.box(getV(r)))
 
-    val dataRdd = InternalScan.rddOf(df)
-    val nParts = dataRdd.getNumPartitions
-    if (nParts == 0) return InternalScan.emptyDF(spark, outSchema)
-
-    // boundary pass: per partition (maxOrd, tail (ord, value-or-null)
-    // pairs within range of maxOrd) — the only rows any later partition
-    // could need.  Values are unboxed at read time, so nothing references
-    // the reused row buffer.  mapPartitionsWithIndex, not TaskContext
-    // (see apply())
-    val bounds = dataRdd.mapPartitionsWithIndex { (pid, it) =>
-      var maxO = Double.NegativeInfinity
-      val tail = new scala.collection.mutable.ArrayDeque[(Double, Any)]
-      it.foreach { r =>
-        val o = ordOf(r)
-        if (o > maxO) maxO = o
-        tail.append((o, if (r.isNullAt(vIdx)) null else Double.box(getV(r))))
-        while (tail.nonEmpty && tail.head._1 < maxO - range) tail.removeHead()
-      }
-      Iterator.single((pid, (maxO, tail.toArray)))
-    }
-
-    // ghost carry through the √n tree (r14 — formerly an O(npartitions)
-    // driver collect + whole-map broadcast). Segment merge keeps the
-    // combined tail within `range` of the combined max — under range
-    // partitioning the prefix max is ≤ any later partition's min, so the
-    // carry is a superset of every row a later partition's first window
-    // can need (the old walk-back reconstructed exactly this set; narrow
-    // partitions whose whole span sits inside the window concatenate
-    // through the fold the same way the walk continued past them).
-    // Row-tuple merges are concat+filter — no arithmetic, reassociation
-    // is exact.
-    val seeds = TreeCarry.exclusivePrefix[(Double, Array[(Double, Any)])](
-      bounds, nParts, () => (Double.NegativeInfinity, Array.empty[(Double, Any)]),
+    // summary: (maxOrd, tail rows within `range` of maxOrd) — the only rows
+    // a later partition could need. The merge keeps the combined tail
+    // within `range` of the combined max; under range partitioning the
+    // prefix max is ≤ any later partition's min, so the carry holds every
+    // row a later partition's first window can need.
+    val fold = PrefixScan.Fold[InternalRow, (Double, Array[(Double, Any)])](
+      it => {
+        var maxO = Double.NegativeInfinity
+        val tail = new scala.collection.mutable.ArrayDeque[(Double, Any)]
+        it.foreach { r =>
+          val e = entry(r)
+          if (e._1 > maxO) maxO = e._1
+          tail.append(e)
+          while (tail.nonEmpty && tail.head._1 < maxO - range) tail.removeHead()
+        }
+        (maxO, tail.toArray)
+      },
+      () => (Double.NegativeInfinity, Array.empty[(Double, Any)]),
       (a, b) => {
         val m = math.max(a._1, b._1)
         (m, (a._2 ++ b._2).filter(_._1 >= m - range))
       })
 
-    val outRdd = dataRdd.zipPartitions(seeds) { (it, seedIt) =>
-      val ghosts: Array[(Double, Any)] =
-        if (seedIt.hasNext) seedIt.next()._2._2 else Array.empty
+    PrefixScan.frame(df, outSchema, PrefixScan.Tree, fold) { (seed, it) =>
       val append = new InternalScan.Append(schema, Seq(outType))
       val win = new scala.collection.mutable.ArrayDeque[(Double, Any)]
       // seed with the full carry: the per-row pruning below drops
       // anything older than the first row's window before it aggregates
-      ghosts.foreach(win.append)
+      seed._2.foreach(win.append)
       it.map { r =>
-        val o = ordOf(r)
-        win.append((o, if (r.isNullAt(vIdx)) null else Double.box(getV(r))))
-        while (win.nonEmpty && win.head._1 < o - range) win.removeHead()
+        val e = entry(r)
+        win.append(e)
+        while (win.nonEmpty && win.head._1 < e._1 - range) win.removeHead()
         val valid = win.iterator.collect {
           case (_, v) if v != null => v.asInstanceOf[Double]
         }.toIndexedSeq
@@ -474,7 +424,6 @@ object MapOverlap {
         append(r, out)
       }
     }
-    InternalScan.toDF(spark, outRdd, outSchema)
   }
 
   /** Global lead(n): each row receives the value `n` rows LATER, using

@@ -87,6 +87,50 @@ class EdgeCasesSpec extends SparkTestBase {
         df.drop("v").withColumn("v", lit(1.0)), "v", 5, "out").coalesce(1)
       .select("idx", "out").as[(Long, Double)].collect().toMap
     for (i <- 0 until 40) assert(roll(i.toLong) == math.min(i + 1, 5).toDouble, s"roll idx=$i")
+
+    // every other scan-kernel form: forward and backward Tree carries, the
+    // Sequential carry, and the grouped form
+    val v = (0 until 40).map(i => if (i % 7 == 0) None else Some(i * 1.5))
+    def lastNonNull(i: Int, from: Int = 0) = (from to i).reverse.flatMap(v(_)).headOption
+    val ff = Fill.ffill(df, "v").coalesce(1)
+      .select("idx", "v").as[(Long, Option[Double])].collect().toMap
+    for (i <- 0 until 40) assert(ff(i.toLong) == lastNonNull(i), s"ffill idx=$i")
+    val exp = Expanding.aggs(df, "v", Seq("idx"), Seq("n" -> "count")).coalesce(1)
+      .select("idx", "n").as[(Long, Long)].collect().toMap
+    for (i <- 0 until 40) assert(exp(i.toLong) == (0 to i).count(v(_).nonEmpty), s"expanding idx=$i")
+    // driver-side recurrences: alpha 0.5 by rows, and halflife 2 s over 1 s steps
+    def ewmRef(d: Double): Seq[Double] = v.scanLeft((0.0, 0.0)) { case ((s, w), x) =>
+      (s * d + x.getOrElse(0.0), w * d + (if (x.isDefined) 1.0 else 0.0)) }.tail
+      .map { case (s, w) => if (w > 0) s / w else Double.NaN }
+    for ((got, d, what) <- Seq(
+        (Ewm.statsIndexed(df, "v", 0.5), 0.5, "ewm"),
+        (Ewm.statsIndexedTimes(df.withColumn("ts", col("idx").cast("double")), "v", "ts", 2.0),
+          math.pow(0.5, 0.5), "ewm times"))) {
+      val m = got.coalesce(1).select("rn", "ewm_mean").as[(Long, Option[Double])].collect().toMap
+      val want = ewmRef(d)
+      for (i <- 0 until 40)
+        assert(m(i.toLong).forall(x => math.abs(x - want(i)) < 1e-9) &&
+          m(i.toLong).isEmpty == want(i).isNaN, s"$what rn=$i: ${m(i.toLong)} vs ${want(i)}")
+    }
+    val ld = MapOverlap.lead(df, "v", 3, "out").coalesce(1)
+      .select("idx", "out").as[(Long, Option[Double])].collect().toMap
+    for (i <- 0 until 40) assert(ld(i.toLong) == v.lift(i + 3).flatten, s"lead idx=$i")
+    val rr = MapOverlap.rollingRangeAgg(df.withColumn("o", col("idx").cast("double")),
+        "v", "o", 2.0, "out")(_.sum).coalesce(1)
+      .select("idx", "out").as[(Long, Option[Double])].collect().toMap
+    for (i <- 0 until 40) {
+      val in = (math.max(0, i - 2) to i).flatMap(v(_))
+      assert(rr(i.toLong) == (if (in.isEmpty) None else Some(in.sum)), s"range idx=$i")
+    }
+    val grp = df.withColumn("g", (col("idx") / 10).cast("long"))
+    val gc = Cumulative.grouped(grp, Seq("g"), Seq("idx"), "idx", Cumulative.CumSum, "out")
+      .coalesce(1).select("idx", "out").as[(Long, Long)].collect().toMap
+    for (i <- 0 until 40) assert(gc(i.toLong) == (i / 10 * 10 to i).sum, s"grouped cumsum idx=$i")
+    val gf = Fill.groupedFfill(grp, Seq("g"), Seq("idx"), "v").coalesce(1)
+      .select("idx", "v").as[(Long, Option[Double])].collect().toMap
+    for (i <- 0 until 40) assert(gf(i.toLong) == lastNonNull(i, i / 10 * 10), s"grouped ffill idx=$i")
+    val acc = graft.api.GBag(df.select("idx").as[Long]).accumulate(_ + _).ds.coalesce(1).collect()
+    assert(acc.toSeq.sorted == (0 until 40).map(i => (0 to i).sum.toLong), "accumulate")
   }
 
   test("idxmin/idxmax skip null values (pandas skipna)") {
