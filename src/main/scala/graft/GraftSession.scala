@@ -63,9 +63,14 @@ object GraftSession {
         spark.experimental.extraOptimizations ++ missing
   }
 
-  /** Read one fixture table from a scale-factor directory. */
+  /** Read one fixture table, `<sfDir>/<name>.parquet`, through
+    * [[graft.sources.ParquetReader]]: the table's schema is inferred on
+    * its first read in a session and reused by later reads while the
+    * table's files are unchanged, so a re-read launches no inference job.
+    * The files are listed and read fresh on every call.
+    */
   def table(spark: SparkSession, sfDir: String, name: String): DataFrame =
-    spark.read.parquet(s"$sfDir/$name.parquet")
+    graft.sources.ParquetReader.read(spark, s"$sfDir/$name.parquet")
 
   /** events fixture: ns-precision `ts` arrives as long (see
     * `nanosAsLong` above); convert to a µs timestamp.  Fixture timestamps

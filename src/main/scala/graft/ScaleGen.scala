@@ -37,29 +37,34 @@ object ScaleGen {
         d.withColumn(k, col(k) + col("__rep") * KEY_STRIDE)
       }.drop("__rep")
     }
-    def t(name: String): DataFrame = spark.read.parquet(s"$src/$name.parquet")
-    def write(df: DataFrame, name: String): Unit = {
+    def t(name: String): DataFrame = GraftSession.table(spark, src, name)
+    def write(df: DataFrame, name: String, copies: Int): Unit = {
       // target ~64 MB files so a replica scan exposes row-group-level
       // parallelism (r15 scaling finding: the 100x lineitem landed in 2
       // ~445 MB files = ~8 row groups total, capping EVERY scan stage at
       // ~8 tasks regardless of cores — the c8/c32 pair was measuring the
       // replica's write layout, not the engine). Guide §6: file sizing is
       // part of the fixture contract; real deployments have thousands of
-      // files per table.
-      val bytes = df.queryExecution.optimizedPlan.stats.sizeInBytes
-      val files = (BigInt(spark.sparkContext.defaultParallelism)
-        .max(bytes / BigInt(64L * 1024 * 1024) + 1)).toInt
+      // files per table. Sized from the source table's on-disk bytes ×
+      // copies, not the plan's sizeInBytes: a crossJoin's estimate is the
+      // product of its children's (~8× the real output). Clamped in Long
+      // so the Int count cannot wrap.
+      val srcPath = new org.apache.hadoop.fs.Path(s"$src/$name.parquet")
+      val srcBytes = srcPath.getFileSystem(spark.sparkContext.hadoopConfiguration)
+        .getContentSummary(srcPath).getLength
+      val files = math.min(100000L, math.max(spark.sparkContext.defaultParallelism.toLong,
+        srcBytes * copies / (64L * 1024 * 1024) + 1)).toInt
       df.repartition(files).write.mode(SaveMode.Overwrite).parquet(s"$out/$name.parquet")
       println(s"[scalegen] wrote $name")
     }
 
     // small dims unreplicated — broadcast joins must stay broadcasts
-    write(t("region"), "region")
-    write(t("nation"), "nation")
-    write(rep(t("customer"), Seq("c_custkey")), "customer")
-    write(rep(t("supplier"), Seq("s_suppkey")), "supplier")
-    write(rep(t("part"), Seq("p_partkey")), "part")
-    write(rep(t("orders"), Seq("o_orderkey", "o_custkey")), "orders")
+    write(t("region"), "region", 1)
+    write(t("nation"), "nation", 1)
+    write(rep(t("customer"), Seq("c_custkey")), "customer", n)
+    write(rep(t("supplier"), Seq("s_suppkey")), "supplier", n)
+    write(rep(t("part"), Seq("p_partkey")), "part", n)
+    write(rep(t("orders"), Seq("o_orderkey", "o_custkey")), "orders", n)
     val lineitem = rep(t("lineitem"), Seq("l_orderkey", "l_partkey", "l_suppkey"))
     val lineitemOut = if (!zipf) lineitem else {
       // 16 hot orderkeys that exist in the scaled orders (replica 0 keys
@@ -77,12 +82,12 @@ object ScaleGen {
         when(u < 0.3, element_at(typedlit(hot), idx))
           .otherwise(col("l_orderkey")))
     }
-    write(lineitemOut, "lineitem")
+    write(lineitemOut, "lineitem", n)
     // events: written as a plain µs TIMESTAMP (readable by Spark AND the
     // DuckDB oracle; GraftSession.events adapts to either physical form)
-    write(rep(GraftSession.events(spark, src), Seq("event_id", "user_id")), "events")
-    write(rep(t("documents"), Seq("doc_id")), "documents")
-    write(rep(t("embeddings"), Seq("vec_id")), "embeddings")
+    write(rep(GraftSession.events(spark, src), Seq("event_id", "user_id")), "events", n)
+    write(rep(t("documents"), Seq("doc_id")), "documents", n)
+    write(rep(t("embeddings"), Seq("vec_id")), "embeddings", n)
     spark.stop()
   }
 }

@@ -18,7 +18,7 @@ object SparkEntry {
 
   private def t(s: SparkSession, dir: String, name: String): DataFrame =
     if (name == "events") GraftSession.events(s, dir)
-    else s.read.parquet(s"$dir/$name.parquet")
+    else GraftSession.table(s, dir, name)
   private def g(s: SparkSession, dir: String, name: String): GDF =
     GDF(t(s, dir, name))
 

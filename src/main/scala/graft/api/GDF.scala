@@ -838,7 +838,7 @@ final class GDF(val df: DataFrame, val index: Option[IndexMeta]) {
 
 object GDF {
   def apply(df: DataFrame): GDF = new GDF(df, None)
-  def fromParquet(spark: SparkSession, path: String): GDF = GDF(spark.read.parquet(path))
+  def fromParquet(spark: SparkSession, path: String): GDF = graft.sources.IO.readParquet(spark, path)
 
   /** dask `from_array` (`_collection.py:4969`): a local 1-column array →
     * distributed frame with the positional index materialized as a column

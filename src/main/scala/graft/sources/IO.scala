@@ -19,7 +19,7 @@ object IO {
   // ---- readers ---------------------------------------------------------
 
   def readParquet(spark: SparkSession, path: String, columns: Seq[String] = Nil): GDF = {
-    val df = spark.read.parquet(path)
+    val df = ParquetReader.read(spark, path)
     GDF(if (columns.isEmpty) df else df.select(columns.map(df.col): _*))
   }
 
