@@ -1,5 +1,6 @@
 package graft
-import org.apache.spark.sql.SparkSession
+import org.apache.spark.metrics.source.CodegenMetrics
+import org.apache.spark.sql.catalyst.expressions.codegen.CodeGenerator
 object Bench {
   def main(args: Array[String]): Unit = {
     val sfDir = sys.env.getOrElse("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
@@ -45,12 +46,21 @@ object Bench {
       case Some(ps) => SparkEntry.queries.filter { case (n, _) => ps.exists(n.startsWith) }
       case None     => SparkEntry.queries
     }
+    // generated classes compiled during the timed runs, read around (not
+    // inside) each timed region: a warm run compiles nothing, so a
+    // non-zero total after the first run of each query means the codegen
+    // class cache is thrashing (GraftSession.CodegenCacheEntries)
+    var codegenCompiles = 0L
+    var codegenNs = 0L
     val results = selected.toSeq.sortBy(_._1).map { case (name, fn) =>
       val times = (0 until runs).map { _ =>
+        val (cc0, cn0) = (CodegenMetrics.METRIC_COMPILATION_TIME.getCount, CodeGenerator.compileTime)
         val t0 = System.nanoTime()
         try fn(spark, sfDir).write.format("noop").mode("overwrite").save()
         catch { case e: Throwable => System.err.println(s"[bench] $name: ${e.getMessage}") }
         val elapsed = (System.nanoTime() - t0) / 1e9
+        codegenCompiles += CodegenMetrics.METRIC_COMPILATION_TIME.getCount - cc0
+        codegenNs += CodeGenerator.compileTime - cn0
         // drop cross-query state (cached plans/broadcasts) so a long suite
         // measures the queries, not accumulated JVM pressure — outside the
         // timed section so the cleanup isn't attributed to the query
@@ -63,7 +73,8 @@ object Bench {
       .mkString("{", ",", "}")
     val total = if (results.nonEmpty) results.values.sum else 0.0
     val oversized = TaskSizeGuard.warnings.size
-    val json = s"""{"metric":"total","value":$total,"unit":"sec","queries":$qs,"sf":"$sfDir","runs":$runs,"oversized_task_warnings":$oversized,"cpu_canary_sec":$cpuCanary}"""
+    val codegen = s""""codegen_compiles":$codegenCompiles,"codegen_s":${codegenNs / 1e9}"""
+    val json = s"""{"metric":"total","value":$total,"unit":"sec","queries":$qs,"sf":"$sfDir","runs":$runs,"oversized_task_warnings":$oversized,$codegen,"cpu_canary_sec":$cpuCanary}"""
     println(json)
     // also persist the full artifact: the driver's log tail truncates long
     // lines, so the committed bench record must come from a file, not the
@@ -85,7 +96,7 @@ object Bench {
     // points at the committed artifact for the per-query map; the full
     // line above is unchanged (same timings, same methodology — nothing
     // is measured differently, this is measurement REPORTING only).
-    println(s"""{"metric":"total","value":$total,"unit":"sec","n":${results.size},"sf":"$sfDir","runs":$runs,"oversized_task_warnings":$oversized,"cpu_canary_sec":$cpuCanary,"artifact":"bench/$artifact"}""")
+    println(s"""{"metric":"total","value":$total,"unit":"sec","n":${results.size},"sf":"$sfDir","runs":$runs,"oversized_task_warnings":$oversized,$codegen,"cpu_canary_sec":$cpuCanary,"artifact":"bench/$artifact"}""")
     spark.stop()
   }
 }

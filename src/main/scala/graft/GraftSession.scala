@@ -13,8 +13,52 @@ import org.apache.spark.sql.{DataFrame, SparkSession}
   * static `split_out` tuning, byte-based broadcast selection replaces the
   * reference's log-rule, and 128 MB scan partitions match the reference's
   * chunk-size target.
+  *
+  * Whole-stage codegen is built in, but Spark's cache of compiled
+  * generated classes is sized for a far smaller working set than the
+  * engine's; see [[CodegenCacheEntries]].
   */
 object GraftSession {
+
+  private val log = org.slf4j.LoggerFactory.getLogger("graft.GraftSession")
+
+  /** Entries of Spark's JVM-wide cache of compiled generated classes
+    * (`spark.sql.codegen.cache.maxEntries`, Spark's default 100).
+    *
+    * Basis: with an unbounded cache and the two confs below, one full
+    * sf0.01 `graft.Verify` pass over the 217 declared queries compiles
+    * 2,129 distinct classes (the driver's and the local executor's class
+    * loader each hold their own copy); 4096 is the next power of two
+    * above that.  At Spark's default 100 the cache thrashes: one pass of
+    * the `llm_pipeline` benchmark queries (q120/q133/q169/q176) needs
+    * ~220 classes, so every warm pass recompiled ~234 of them (2.2 s of
+    * a ~6 s pass).  Sized to the working set, a repeated pipeline,
+    * Bench's min-of-3 and streaming micro-batches compile each class
+    * once per JVM.
+    *
+    * Two more confs keep a warm query's generated source and class
+    * loader, the cache key, stable across invocations:
+    *  - `spark.sql.codegen.useIdInClassName=false`: AQE re-plans number
+    *    whole-stage codegen stages in the order query stages complete, so
+    *    the same stage gets a different id, and with the id in the class
+    *    name a different source, from one invocation to the next.  Cost:
+    *    generated classes are all named `GeneratedIterator` in stack
+    *    traces and profiles.
+    *  - `spark.sql.artifact.isolation.enabled=false`: with isolation on,
+    *    the local executor gives every session its own class loader,
+    *    including the session clone `CacheManager` makes for each
+    *    `Dataset.persist` (q120's `jaccardNearDupPairs` persists one), so
+    *    every class a cached plan's tasks use was recompiled per
+    *    invocation.  The engine adds no per-session artifacts (jars,
+    *    files), so isolation has nothing to isolate.
+    *
+    * Static conf caveat: the cache is built once per JVM, when
+    * `CodeGenerator` is first used, from the conf active at that moment,
+    * and a session that already exists keeps its own static confs, so
+    * the bound holds only when the first session in the JVM comes from
+    * [[builder]].  [[getOrCreate]] warns when it does not.
+    */
+  val CodegenCacheEntries: Int = 4096
 
   /** Local-mode builder used by tests/bench; on a real cluster the same
     * confs apply, only `master` changes.
@@ -40,12 +84,22 @@ object GraftSession {
       // parquet TIMESTAMP(NANOS) (events fixture) is unreadable natively;
       // read as long and convert via GraftSession.events
       .config("spark.sql.legacy.parquet.nanosAsLong", "true")
+      // compile each generated class once per JVM: see CodegenCacheEntries
+      .config("spark.sql.codegen.cache.maxEntries", CodegenCacheEntries.toString)
+      .config("spark.sql.codegen.useIdInClassName", "false")
+      .config("spark.sql.artifact.isolation.enabled", "false")
       .config("spark.ui.enabled", "false")
       .config("spark.driver.host", "localhost")
 
   def getOrCreate(cpus: Int = Runtime.getRuntime.availableProcessors()): SparkSession = {
     val spark = builder(cpus).getOrCreate()
     spark.sparkContext.setLogLevel("WARN")
+    val liveEntries = spark.conf.get("spark.sql.codegen.cache.maxEntries").toInt
+    if (liveEntries < CodegenCacheEntries)
+      log.warn(s"spark.sql.codegen.cache.maxEntries is $liveEntries in the live session, " +
+        s"below the engine's $CodegenCacheEntries: the session existed before " +
+        "GraftSession.builder, and a static conf cannot change on a live session, " +
+        "so warm queries may recompile their generated classes")
     registerOptimizations(spark)
     spark
   }
