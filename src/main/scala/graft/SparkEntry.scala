@@ -2007,8 +2007,9 @@ object SparkEntry {
         .select(col("idx"), col("value").cast("long").as("v"))
     },
 
-    // ---- keyed EWM: groupby(l_returnflag).ewm(0.5).mean()/var() — one
-    // key shuffle, in-group recurrence; sampled every 997th row per key.
+    // ---- keyed EWM: groupby(l_returnflag).ewm(0.5).mean()/var() — the
+    // grouped prefix scan over the range-arranged keys (Sequential carry),
+    // so a key spans partitions; sampled every 997th row per key.
     // Same dyadic-alpha + 1e-4-integer-scaling contract as q157.
     "q158_ewm_keyed" -> { (s, dir) =>
       import graft.operators.Ewm

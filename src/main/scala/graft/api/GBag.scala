@@ -256,8 +256,9 @@ final class GBag[T](val ds: Dataset[T]) extends Serializable {
   }
 
   private def partitionCounts(rdd: org.apache.spark.rdd.RDD[T]): Array[Long] = {
+    // Long counter: Iterator.size is an Int and wraps past 2^31 elements
     val m = rdd.mapPartitionsWithIndex((pi, it) =>
-      Iterator.single((pi, it.size.toLong))).collect().toMap
+      Iterator.single((pi, it.foldLeft(0L)((c, _) => c + 1)))).collect().toMap
     Array.tabulate(rdd.getNumPartitions)(pi => m.getOrElse(pi, 0L))
   }
 

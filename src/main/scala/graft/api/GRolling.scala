@@ -7,13 +7,17 @@ import org.apache.spark.sql.functions._
 
 /** Rolling / expanding windows — reference `dask_expr/_rolling.py:45-343`.
   *
-  * Two physical paths, mirroring the reference's blockwise-vs-MapOverlap
+  * Physical paths, mirroring the reference's blockwise-vs-MapOverlap
   * lowering:
   *   - `partitionBy` keys present → native SQL window (parallel per key,
-  *     whole-stage codegen);
+  *     whole-stage codegen) for the named aggregates;
   *   - global order, no keys → [[MapOverlap]] ghost-row scan, because an
   *     un-partitioned SQL window is a single task in Spark and would not
-  *     survive cluster scale.
+  *     survive cluster scale;
+  *   - keys with a custom kernel (`aggTree`, `applyKeyed`) → the same
+  *     ghost-row kernel over the range-arranged keys
+  *     ([[MapOverlap.rollingAggGrouped]]), where a hot key spans
+  *     partitions instead of one task.
   */
 final class GRolling(
     df: DataFrame,
@@ -194,12 +198,12 @@ final class GRolling(
 
   /** Keyed rolling with a CUSTOM kernel — reference `RollingApply` /
     * `RollingAgg` (`_rolling.py:219-230`); the global-order equivalent is
-    * [[MapOverlap.rollingAgg]].  One shuffle on the keys, then a
-    * secondary-sorted per-partition scan with a sliding buffer: parallel
-    * per key, no per-group materialization beyond `window` rows, any
-    * `Seq[Double] => Any` kernel.  The kernel sees the window's non-null
-    * observations in row order and runs only when there are at least
-    * max(minPeriods, 1) of them (pandas `.apply` contract).
+    * [[MapOverlap.rollingAgg]]. Runs [[MapOverlap.rollingAggGrouped]], the
+    * range-arranged grouped kernel: no per-group materialization beyond
+    * `window` rows, hot keys span partitions, any `Seq[Double] => Any`
+    * kernel. The kernel sees the window's non-null observations in row
+    * order and runs only when there are at least max(minPeriods, 1) of
+    * them (pandas `.apply` contract).
     */
   def applyKeyed(valueCol: String, out: String,
                  resultType: org.apache.spark.sql.types.DataType =
@@ -207,33 +211,8 @@ final class GRolling(
                 (kernel: Seq[Double] => Any): DataFrame = {
     require(partitionBy.nonEmpty,
       "applyKeyed needs partitionBy keys; use MapOverlap.rollingAgg for a global order")
-    val win = window
-    val mp = math.max(minPeriods, 1)
-    val sorted = df.repartition(partitionBy.map(col): _*)
-      .sortWithinPartitions((partitionBy ++ orderBy).map(col): _*)
-    val schema = sorted.schema
-    val kIdxs = partitionBy.map(schema.fieldIndex)
-    val vIdx = schema.fieldIndex(valueCol)
-    val outRdd = sorted.rdd.mapPartitions { it =>
-      var curKey: Seq[Any] = null
-      val buf = scala.collection.mutable.ArrayDeque.empty[Option[Double]]
-      it.map { r =>
-        val key = kIdxs.map(r.get)
-        if (key != curKey) { curKey = key; buf.clear() }
-        val v =
-          if (r.isNullAt(vIdx)) None
-          else Some(r.get(vIdx) match {
-            case d: Double           => d
-            case n: java.lang.Number => n.doubleValue()
-          })
-        buf.append(v)
-        if (buf.size > win) buf.removeHead()
-        val obs = buf.iterator.flatten.toSeq
-        val res = if (obs.size >= mp) kernel(obs) else null
-        org.apache.spark.sql.Row.fromSeq(r.toSeq :+ res)
-      }
-    }
-    df.sparkSession.createDataFrame(outRdd, schema.add(out, resultType, nullable = true))
+    MapOverlap.rollingAggGrouped(df, partitionBy, orderBy, valueCol, window, out,
+      math.max(minPeriods, 1), resultType)(kernel)
   }
 
   /** pandas rolling.cov / rolling.corr between two columns.  Keyed →

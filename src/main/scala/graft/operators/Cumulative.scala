@@ -86,8 +86,8 @@ object Cumulative {
       valueCol: String, op: Op, outCol: String): DataFrame =
     acc(df, valueCol, op) match {
       case a: Acc[t] =>
-        PrefixScan.grouped(df, groupCols, orderCols.map(col), df.schema.add(outCol, a.outType))(
-          a.zero, a.step, a.combine)(a.out(df.schema))
+        PrefixScan.grouped(df, groupCols, orderCols.map(col), df.schema.add(outCol, a.outType),
+          PrefixScan.Tree)(a.zero, a.step, a.combine)(a.out(df.schema))
     }
 
   /** Adds `outCol` = running aggregate of `valueCol` in global index order. */

@@ -1,8 +1,8 @@
 package graft.operators
 
-import org.apache.spark.sql.{DataFrame, Row}
+import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.catalyst.InternalRow
-import org.apache.spark.sql.catalyst.expressions.{GenericInternalRow, UnsafeProjection}
+import org.apache.spark.sql.functions.col
 import org.apache.spark.sql.types.{DoubleType, LongType, StructField, StructType, TimestampNTZType, TimestampType}
 
 /** Decay parameterization + option surface of pandas/dask `ewm` (pandas
@@ -49,8 +49,9 @@ object EwmParams {
   * `dask/dataframe/dask_expr/_rolling.py` ewm surface; pandas
   * `core/window/ewm.py` semantics), full parameter surface via
   * [[EwmParams]]. A naive SQL restatement needs an unbounded self-join or
-  * a single-task window; the global forms here are a [[PrefixScan]]
-  * whose carry is the DECAY-COMPOSED state of the per-row recurrences
+  * a single-task window; both the global and the keyed form here are a
+  * [[PrefixScan]] whose carry is the DECAY-COMPOSED state of the per-row
+  * recurrences
   *
   *   S  = q·S  + wt·x    (decayed value sum,      q = 1-α)
   *   W  = q·W  + wt      (decayed weight sum)
@@ -58,14 +59,17 @@ object EwmParams {
   *   W2 = q²·W2 + wt²    (decayed SQUARED-weight sum, bias correction)
   *
   * Carry contract: a run of L rows composes after an earlier state `c` as
-  * `c·q^L + s` (`c·q²^L + s` for W2). adjust=false weights the global
-  * first observation 1 and every later one α, so a summary holds the end
-  * state under both conventions and the merge picks by whether the left
-  * side observed a value. The composition is associative in exact
+  * `c·q^L + s` (`c·q²^L + s` for W2). adjust=false weights the first
+  * observation 1 and every later one α, so a summary ([[Seg]]) holds the
+  * end state under both conventions and the merge picks by whether the
+  * left side observed a value. The composition is associative in exact
   * arithmetic but NOT in floating point, and the q157/q162 oracle hashes
   * pin the left-fold ulps — so the carry is [[PrefixScan.Sequential]],
   * never the tree (an O(npartitions) driver payload of a few scalars per
-  * partition).
+  * partition). The keyed form runs the same [[Seg]] fold as the state of
+  * [[PrefixScan.grouped]], also under the Sequential carry: a group's
+  * state restarts at the empty run at its head, and a group that spans
+  * partitions composes its partial runs left to right.
   *
   * Null rows contribute no weight but (ignoreNa=false) decay the
   * accumulators; the emitted mean carries the last available estimate,
@@ -76,46 +80,69 @@ object Ewm {
   /** A run of rows, summarized for composition: the end sums
     * (s, w, s2, w2) if no earlier observation exists (`first`) and if one
     * does (`later`), the run's decay factors q^L and q²^L, whether it
-    * observed a value, and its row count.
+    * observed a value, and its row count. A run that starts the series
+    * (or a group) is its own state: `first` holds its sums.
     */
   private final case class Seg(first: Array[Double], later: Array[Double], d: Double,
-      d2: Double, seen: Boolean, n: Long)
+      d2: Double, seen: Boolean, n: Long) {
+    private def w = first(1)
+    def mean: Any = if (w > 0) first(0) / w else null
+    def varU: Any = {
+      val denom = w * w - first(3)
+      if (w > 0 && denom > 0) {
+        val m = first(0) / w
+        math.max(0.0, (first(2) / w - m * m) * w * w / denom)
+      } else null
+    }
+    /** (rn or grn, ewm_mean, ewm_var) after the run's last row */
+    def stats: Array[Any] = Array(n - 1, mean, varU)
+  }
+
+  private val emptySeg = Seg(new Array(4), new Array(4), 1.0, 1.0, seen = false, 0L)
 
   /** A run of rows under time decay: its end sums at its last timestamp,
     * whether it has a row, and its row count.
     */
   private final case class TSeg(s: Double, w: Double, lastTs: Double, any: Boolean, n: Long)
 
-  /** One sequential EWM scan state (the four decayed sums). */
-  private final class St(var s: Double = 0.0, var w: Double = 0.0,
-                         var s2: Double = 0.0, var w2: Double = 0.0,
-                         var seen: Boolean = false) {
-    def step(xOrNull: java.lang.Double, p: EwmParams): Unit = {
-      val q = 1.0 - p.alpha
-      val isObs = xOrNull != null
-      if (isObs || !p.ignoreNa) {
-        s *= q; w *= q; s2 *= q; w2 *= q * q
-      }
+  /** The one EWM fold of both forms: `step` extends a run by the row's
+    * `valueCol`, `merge` composes two adjacent runs.
+    */
+  private final class Recurrence(p: EwmParams, schema: StructType, valueCol: String)
+      extends Serializable {
+    private val q = 1.0 - p.alpha
+    private val vIdx = schema.fieldIndex(valueCol)
+    private val getD = InternalScan.doubleGetter(schema(vIdx).dataType, vIdx)
+
+    /** the sums `a` after one row; `hadObs`: an observation precedes it */
+    private def advance(a: Array[Double], isObs: Boolean, x: Double, hadObs: Boolean): Array[Double] = {
+      var s = a(0); var w = a(1); var s2 = a(2); var w2 = a(3)
+      if (isObs || !p.ignoreNa) { s *= q; w *= q; s2 *= q; w2 *= q * q }
       if (isObs) {
-        val x = xOrNull.doubleValue()
-        val wt = if (p.adjust) 1.0 else if (seen) p.alpha else 1.0
+        val wt = if (p.adjust || !hadObs) 1.0 else p.alpha
         s += wt * x; w += wt; s2 += wt * x * x; w2 += wt * wt
-        seen = true
       }
+      Array(s, w, s2, w2)
     }
-    def mean: Any = if (w > 0) s / w else null
-    def varU: Any = {
-      val denom = w * w - w2
-      if (w > 0 && denom > 0) {
-        val m = s / w
-        math.max(0.0, (s2 / w - m * m) * w * w / denom)
-      } else null
+
+    def step(c: Seg, r: InternalRow): Seg = {
+      val isObs = !r.isNullAt(vIdx)
+      val x = if (isObs) getD(r) else 0.0
+      val decays = isObs || !p.ignoreNa
+      Seg(advance(c.first, isObs, x, c.seen), advance(c.later, isObs, x, hadObs = true),
+        if (decays) c.d * q else c.d, if (decays) c.d2 * (q * q) else c.d2,
+        c.seen || isObs, c.n + 1)
     }
-    def snapshot: Array[Double] = Array(s, w, s2, w2)
-    def load(a: Array[Double], hadObs: Boolean): Unit = {
-      s = a(0); w = a(1); s2 = a(2); w2 = a(3); seen = hadObs
+
+    def merge(a: Seg, b: Seg): Seg = {
+      def decayed(c: Array[Double], s: Array[Double]) =
+        Array(c(0) * b.d + s(0), c(1) * b.d + s(1), c(2) * b.d + s(2), c(3) * b.d2 + s(3))
+      Seg(decayed(a.first, if (a.seen) b.later else b.first), decayed(a.later, b.later),
+        a.d * b.d, a.d2 * b.d2, a.seen || b.seen, a.n + b.n)
     }
   }
+
+  private val statTypes = Seq(LongType, DoubleType, DoubleType)
 
   /** Back-compat: the adjust=True, ignoreNa=False default of round 6. */
   def statsIndexed(df: DataFrame, valueCol: String, alpha: Double): DataFrame =
@@ -128,48 +155,18 @@ object Ewm {
     * the contract [[Cumulative]] documents.
     */
   def statsIndexed(df: DataFrame, valueCol: String, p: EwmParams): DataFrame = {
-    val vIdx = df.schema.fieldIndex(valueCol)
-    val q = 1.0 - p.alpha
-    val getD = InternalScan.doubleGetter(df.schema(vIdx).dataType, vIdx)
-    def valueAt(r: InternalRow): java.lang.Double =
-      if (r.isNullAt(vIdx)) null else java.lang.Double.valueOf(getD(r))
-
-    val fold = PrefixScan.Fold[InternalRow, Seg](
-      it => {
-        val asFirst = new St()            // no prior observation anywhere
-        val asLater = new St(seen = true) // some earlier partition saw one
-        var d = 1.0; var d2 = 1.0; var n = 0L
-        it.foreach { r =>
-          val x = valueAt(r)
-          if (x != null || !p.ignoreNa) { d *= q; d2 *= q * q }
-          asFirst.step(x, p); asLater.step(x, p)
-          n += 1
-        }
-        Seg(asFirst.snapshot, asLater.snapshot, d, d2, asFirst.seen, n)
-      },
-      () => Seg(new Array(4), new Array(4), 1.0, 1.0, seen = false, 0L),
-      (a, b) => {
-        def decayed(c: Array[Double], s: Array[Double]) =
-          Array(c(0) * b.d + s(0), c(1) * b.d + s(1), c(2) * b.d + s(2), c(3) * b.d2 + s(3))
-        Seg(decayed(a.first, if (a.seen) b.later else b.first), decayed(a.later, b.later),
-          a.d * b.d, a.d2 * b.d2, a.seen || b.seen, a.n + b.n)
-      })
+    val rec = new Recurrence(p, df.schema, valueCol)
+    val fold = PrefixScan.Fold[InternalRow, Seg](_.foldLeft(emptySeg)(rec.step), () => emptySeg,
+      rec.merge)
     val outSchema = StructType(Seq(
       StructField("rn", LongType, nullable = false),
       StructField("ewm_mean", DoubleType, nullable = true),
       StructField("ewm_var", DoubleType, nullable = true)))
     PrefixScan.frame(df, outSchema, PrefixScan.Sequential, fold) { (seed, it) =>
-      val st = new St()
-      st.load(seed.first, seed.seen)
-      var rn = seed.n
-      val proj = UnsafeProjection.create(outSchema.fields.map(_.dataType))
-      val buf = new GenericInternalRow(3)
-      it.map { r =>
-        st.step(valueAt(r), p)
-        buf.update(0, rn); buf.update(1, st.mean); buf.update(2, st.varU)
-        rn += 1
-        proj(buf): InternalRow
-      }
+      var c = seed
+      // appends to an empty row: the output is the three stats alone
+      val emit = new InternalScan.Append(new StructType(), statTypes)
+      it.map { r => c = rec.step(c, r); emit.applyAll(InternalRow.empty, c.stats) }
     }
   }
 
@@ -225,13 +222,10 @@ object Ewm {
       StructField("ewm_mean", DoubleType, nullable = true)))
     PrefixScan.frame(df, outSchema, PrefixScan.Sequential, fold) { (seed, it) =>
       var c = seed
-      val proj = UnsafeProjection.create(outSchema.fields.map(_.dataType))
-      val buf = new GenericInternalRow(2)
+      val emit = new InternalScan.Append(new StructType(), Seq(LongType, DoubleType))
       it.map { r =>
-        buf.update(0, c.n)
         c = step(c, r)
-        buf.update(1, if (c.w > 0) c.s / c.w else null)
-        proj(buf): InternalRow
+        emit.applyAll(InternalRow.empty, Array(c.n - 1, if (c.w > 0) c.s / c.w else null))
       }
     }
   }
@@ -241,10 +235,10 @@ object Ewm {
                  valueCol: String, alpha: Double): DataFrame =
     statsKeyed(df, keyCol, orderCols, valueCol, EwmParams(alpha))
 
-  /** Keyed EWM — pandas `groupby(key).ewm(...).mean()/var()`: one
-    * shuffle on the key, each group's rows sorted by `orderCols` inside
-    * the group and run through the same recurrences (groups are the unit
-    * of memory, the same contract as every groupby-apply path here).
+  /** Keyed EWM — pandas `groupby(key).ewm(...).mean()/var()`: the rows
+    * are range-arranged on (key ++ order) and each group runs the global
+    * form's recurrences through [[PrefixScan.grouped]] under the
+    * Sequential carry, so a hot key spans partitions instead of one task.
     * Returns (key, order..., grn, ewm_mean, ewm_var) rows, `grn` being
     * the 0-based index within the group (for positional sampling/joins).
     * Null group keys are dropped, as pandas groupby does; null order
@@ -252,50 +246,19 @@ object Ewm {
     */
   def statsKeyed(df: DataFrame, keyCol: String, orderCols: Seq[String],
                  valueCol: String, p: EwmParams): DataFrame = {
-    val spark = df.sparkSession
-    val cols = (keyCol +: orderCols) :+ valueCol
-    import org.apache.spark.sql.functions.col
+    val v = "__ewm_value"
     val base = df.filter(col(keyCol).isNotNull)
-      .select(cols.map(col): _*)
-    val schema = StructType(base.schema.fields.dropRight(1) ++ Seq(
+      .select((keyCol +: orderCols).map(col) :+ col(valueCol).as(v): _*)
+    val schema = base.schema
+    val rec = new Recurrence(p, schema, v)
+    val outSchema = StructType(schema.fields ++ Seq(
       StructField("grn", LongType, nullable = false),
       StructField("ewm_mean", DoubleType, nullable = true),
       StructField("ewm_var", DoubleType, nullable = true)))
-    val nOrd = orderCols.length
-    val vPos = 1 + nOrd
-    val outEnc = org.apache.spark.sql.Encoders.row(schema)
-    base.groupByKey((r: Row) => String.valueOf(r.get(0)))(
-        org.apache.spark.sql.Encoders.STRING)
-      .flatMapGroups { (_: String, it: Iterator[Row]) =>
-        val rows = it.toArray
-        // order keys compare as native Comparables (numeric order, not
-        // stringified); nulls first, matching the SQL default
-        java.util.Arrays.sort(rows, new java.util.Comparator[Row] {
-          def compare(a: Row, b: Row): Int = {
-            var i = 0
-            while (i < nOrd) {
-              val av = a.get(1 + i); val bv = b.get(1 + i)
-              val c =
-                if (av == null && bv == null) 0
-                else if (av == null) -1
-                else if (bv == null) 1
-                else av.asInstanceOf[Comparable[Any]].compareTo(bv)
-              if (c != 0) return c
-              i += 1
-            }
-            0
-          }
-        })
-        val st = new St()
-        var grn = -1L
-        rows.iterator.map { r =>
-          val x: java.lang.Double =
-            if (r.isNullAt(vPos)) null
-            else java.lang.Double.valueOf(r.get(vPos).asInstanceOf[Number].doubleValue())
-          st.step(x, p)
-          grn += 1
-          Row.fromSeq(r.toSeq.dropRight(1) ++ Seq(grn, st.mean, st.varU))
-        }
-      }(outEnc)
+    PrefixScan.grouped(base, Seq(keyCol), orderCols.map(col), outSchema, PrefixScan.Sequential)(
+        emptySeg, rec.step, rec.merge) { () =>
+      val append = new InternalScan.Append(schema, statTypes)
+      (r, c) => append.applyAll(r, c.stats)
+    }.drop(v)
   }
 }

@@ -50,7 +50,7 @@ object Fill {
       valueCol: String, descendingOrder: Boolean = false): DataFrame = {
     val vIdx = df.schema.fieldIndex(valueCol)
     val order = orderCols.map(c => if (descendingOrder) col(c).desc else col(c).asc)
-    PrefixScan.grouped[Any](df, groupCols, order, df.schema)(
+    PrefixScan.grouped[Any](df, groupCols, order, df.schema, PrefixScan.Tree)(
       null, keep(df.schema, vIdx), lastWins)(filler(df.schema, vIdx))
   }
 

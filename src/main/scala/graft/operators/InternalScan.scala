@@ -4,6 +4,7 @@ import org.apache.spark.rdd.RDD
 import org.apache.spark.sql.{DataFrame, GraftSqlShim, SparkSession}
 import org.apache.spark.sql.catalyst.InternalRow
 import org.apache.spark.sql.catalyst.expressions.{BoundReference, GenericInternalRow, JoinedRow, UnsafeProjection, UnsafeRow}
+import org.apache.spark.sql.catalyst.optimizer.NormalizeNaNAndZero
 import org.apache.spark.sql.types._
 
 /** InternalRow plumbing for the ordered operators that run on
@@ -102,12 +103,21 @@ private[graft] object InternalScan {
 
   /** Per-task group-key extractor: projects the group columns to an
     * UnsafeRow whose byte equality is value equality (both sides come
-    * from the same deterministic projection). The projected row is a
-    * reused buffer — `copy()` before retaining.
+    * from the same deterministic projection). Float and double fields go
+    * through Catalyst's `NormalizeNaNAndZero` first, so -0.0 and 0.0 (and
+    * every NaN bit pattern) are one key, as in SQL ordering, Spark's
+    * groupBy/window and pandas. With no group columns every row projects
+    * to the same empty key: one group. The projected row is a reused
+    * buffer — `copy()` before retaining.
     */
   final class KeyProj(schema: StructType, gIdx: Seq[Int]) {
-    private val proj = UnsafeProjection.create(
-      gIdx.map(i => BoundReference(i, schema(i).dataType, nullable = true)))
+    private val proj = UnsafeProjection.create(gIdx.map { i =>
+      val ref = BoundReference(i, schema(i).dataType, nullable = true)
+      schema(i).dataType match {
+        case FloatType | DoubleType => NormalizeNaNAndZero(ref)
+        case _                      => ref
+      }
+    })
     def apply(r: InternalRow): UnsafeRow = proj(r)
   }
 }

@@ -2,6 +2,7 @@ package graft.operators
 
 import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.catalyst.InternalRow
+import org.apache.spark.sql.catalyst.expressions.UnsafeRow
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.types.StructType
 
@@ -78,87 +79,71 @@ object MapOverlap {
 
   /** Skew-resilient GROUPED rolling — the scale alternative to the keyed
     * SQL-window path (one task per whole group; a zipf-hot group is a
-    * single straggler). Range-partitions by (group ++ order) so groups
-    * are contiguous and hot groups SPAN partitions, then runs the ghost-
-    * row overlap scan with a GROUP-AWARE window: each deque entry carries
-    * its group, and a row's window is the trailing same-group run —
-    * contiguity makes "last `window` rows of my group" and "same-group
-    * entries among the last `window` physical rows" the same set. Ghost
-    * rows from a different group are excluded by the same test, so
-    * nothing leaks across group heads at partition boundaries.
+    * single straggler): [[PrefixScan.arrange]] range-partitions by
+    * (group ++ order) so groups are contiguous and hot groups SPAN
+    * partitions, then [[rollingAgg]]'s kernel body runs over the group
+    * columns. `GRolling.aggTree` and `GRolling.applyKeyed` run here.
     */
   def rollingAggGrouped(df: DataFrame, groupCols: Seq[String],
       orderCols: Seq[String], valueCol: String, window: Int, outCol: String,
       minPeriods: Int,
       outType: org.apache.spark.sql.types.DataType =
         org.apache.spark.sql.types.DoubleType)
-      (agg: Seq[Double] => Any): DataFrame = {
-    val arranged = PrefixScan.arrange(df, groupCols, orderCols.map(col))
-    val schema = arranged.schema
-    val gIdx = groupCols.map(schema.fieldIndex)
-    val idx = schema.fieldIndex(valueCol)
-    val getD = InternalScan.doubleGetter(schema(idx).dataType, idx)
-    val outSchema = schema.add(outCol, outType)
-    apply(arranged, outSchema, before = window - 1, after = 0) { (ghosts, it, _) =>
-      val keyProj = new InternalScan.KeyProj(schema, gIdx)
-      val append = new InternalScan.Append(schema, Seq(outType))
-      val bufG = new scala.collection.mutable.ArrayDeque[InternalRow]()
-      val buf = new scala.collection.mutable.ArrayDeque[Double]()
-      val bufValid = new scala.collection.mutable.ArrayDeque[Boolean]()
-      def push(r: InternalRow): InternalRow = {
-        val ok = !r.isNullAt(idx)
-        val g = keyProj(r).copy()
-        bufG.append(g)
-        buf.append(if (ok) getD(r) else 0.0)
-        bufValid.append(ok)
-        if (buf.size > window) { buf.removeHead(); bufValid.removeHead(); bufG.removeHead() }
-        g
-      }
-      ghosts.foreach(push)
-      it.map { r =>
-        val g = push(r)
-        val valid = buf.indices.filter(i => bufValid(i) && bufG(i) == g).map(buf(_))
-        val out: Any = if (valid.size >= minPeriods) agg(valid) else null
-        append(r, out)
-      }
-    }
-  }
+      (agg: Seq[Double] => Any): DataFrame =
+    rolling(PrefixScan.arrange(df, groupCols, orderCols.map(col)), groupCols, valueCol,
+      window, outCol, minPeriods, outType)(agg)
 
   def rollingMean(df: DataFrame, valueCol: String, window: Int, outCol: String,
                   minPeriods: Int = 1): DataFrame =
     rollingAgg(df, valueCol, window, outCol, minPeriods)(
       xs => if (xs.isEmpty) null else xs.sum / xs.size)
 
-  /** @param agg may return null (e.g. sample std of a 1-row window); the
+  /** Rolling `agg` of `valueCol` over the previous `window-1` rows + the
+    * current one, in global order: the [[rolling]] kernel body over zero
+    * group columns, so every row is in the one group.
+    *
+    * @param agg may return null (e.g. sample std of a 1-row window); the
     *            result value must match `outType` (default double)
     */
   def rollingAgg(df: DataFrame, valueCol: String, window: Int, outCol: String,
                  minPeriods: Int,
                  outType: org.apache.spark.sql.types.DataType =
                    org.apache.spark.sql.types.DoubleType)
-                (agg: Seq[Double] => Any): DataFrame = {
+                (agg: Seq[Double] => Any): DataFrame =
+    rolling(df, Nil, valueCol, window, outCol, minPeriods, outType)(agg)
+
+  /** The one rolling kernel body of [[rollingAgg]] and [[rollingAggGrouped]]:
+    * the ghost-row overlap scan with a group-aware window. A row's window
+    * is the trailing run of its own group among the last `window` rows,
+    * ghosts included: the buffer clears at every group change, and since
+    * the input keeps each group contiguous, nothing leaks across a group
+    * head at a partition boundary. With no group columns the empty key
+    * puts every row in one group. `agg` sees the window's non-null values
+    * oldest first and runs once there are `minPeriods` of them.
+    */
+  private def rolling(df: DataFrame, groupCols: Seq[String], valueCol: String, window: Int,
+      outCol: String, minPeriods: Int, outType: org.apache.spark.sql.types.DataType)(
+      agg: Seq[Double] => Any): DataFrame = {
     val schema = df.schema
+    val gIdx = groupCols.map(schema.fieldIndex)
     val idx = schema.fieldIndex(valueCol)
     val getD = InternalScan.doubleGetter(schema(idx).dataType, idx)
-    val outSchema = schema.add(outCol, outType)
-    apply(df, outSchema, before = window - 1, after = 0) { (ghosts, it, _) =>
+    apply(df, schema.add(outCol, outType), before = window - 1, after = 0) { (ghosts, it, _) =>
+      val keyProj = new InternalScan.KeyProj(schema, gIdx)
       val append = new InternalScan.Append(schema, Seq(outType))
-      val buf = new scala.collection.mutable.ArrayDeque[Double]()
-      val bufValid = new scala.collection.mutable.ArrayDeque[Boolean]()
+      var cur: UnsafeRow = null
+      val buf = new scala.collection.mutable.ArrayDeque[Option[Double]]()
       def push(r: InternalRow): Unit = {
-        val ok = !r.isNullAt(idx)
-        buf.append(if (ok) getD(r) else 0.0)
-        bufValid.append(ok)
-        if (buf.size > window) { buf.removeHead(); bufValid.removeHead(); () }
+        val g = keyProj(r)
+        if (g != cur) { cur = g.copy(); buf.clear() }
+        buf.append(if (r.isNullAt(idx)) None else Some(getD(r)))
+        if (buf.size > window) { buf.removeHead(); () }
       }
-      // seed with ghost rows (counted in the window but not emitted)
       ghosts.foreach(push)
       it.map { r =>
         push(r)
-        val valid = buf.indices.filter(bufValid(_)).map(buf(_))
-        val out: Any =
-          if (valid.size >= minPeriods) agg(valid) else null
-        append(r, out)
+        val valid = buf.iterator.flatten.toIndexedSeq
+        append(r, if (valid.size >= minPeriods) agg(valid) else null)
       }
     }
   }

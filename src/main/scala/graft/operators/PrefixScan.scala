@@ -11,8 +11,8 @@ import org.apache.spark.sql.types.StructType
 import scala.reflect.ClassTag
 
 /** The two-phase scan shared by the ordered operators: Cumulative,
-  * Expanding, Fill, Ewm, MapOverlap and `GBag.accumulate`. Reference:
-  * dask builds the same carry chain blockwise
+  * Expanding, Fill, Ewm, MapOverlap and `GBag.accumulate`, global and
+  * keyed alike. Reference: dask builds the same carry chain blockwise
   * (`dask/dataframe/dask_expr/_cumulative.py:20-160`, map_overlap
   * `_expr.py:881-1033`); its scheduler walks the chain serially.
   *
@@ -24,7 +24,11 @@ import scala.reflect.ClassTag
   *
   * Partition order is row order: the input must already be globally
   * ordered (range-partitioned and sorted). The data is never shuffled, and
-  * an input without partitions yields an empty result.
+  * an input without partitions yields an empty result. Keyed operators
+  * get that order from [[arrange]] (range partitioning on group ++ order):
+  * [[grouped]] carries a running state across partitions (Cumulative,
+  * Fill, keyed Ewm), and `MapOverlap`'s rolling kernel carries ghost rows.
+  * No keyed operator puts a whole group in one task.
   *
   * Seeds align with partitions by the RDD's own split index, never by
   * `TaskContext.getPartitionId()`: a downstream `coalesce()` fuses the
@@ -98,14 +102,18 @@ private[graft] object PrefixScan {
     * restarts at `zero` at every group head. Phase 1 summarizes each
     * partition as the group open at each edge plus the state of the
     * right-edge group. The segmented-scan monoid folds a left tail into
-    * the right one only when the right segment is entirely the left's open
-    * group, so `combine` (of two tail states) must be associative and the
-    * carry is a [[Tree]]. `out` builds a per-task emitter of (row, state
-    * after the row).
+    * the right one, `combine(left, right)`, only when the right segment is
+    * entirely the left's open group. `out` builds a per-task emitter of
+    * (row, state after the row).
+    *
+    * @param carry as in [[apply]]: [[Tree]] needs `combine` associative
+    *              (Cumulative, Fill); [[Sequential]] folds the tails left
+    *              to right on the driver, for a `combine` that must not be
+    *              reassociated (keyed Ewm).
     */
   def grouped[A](df: DataFrame, groupCols: Seq[String], order: Seq[Column],
-      outSchema: StructType)(zero: A, step: (A, InternalRow) => A, combine: (A, A) => A)(
-      out: () => (InternalRow, A) => InternalRow): DataFrame = {
+      outSchema: StructType, carry: Carry)(zero: A, step: (A, InternalRow) => A,
+      combine: (A, A) => A)(out: () => (InternalRow, A) => InternalRow): DataFrame = {
     val schema = df.schema
     val gIdx = groupCols.map(schema.fieldIndex)
     val fold = Fold[InternalRow, Seg[A]](
@@ -116,7 +124,7 @@ private[graft] object PrefixScan {
         else if (b == null) a
         else Seg(a.firstG, b.lastG,
           if (b.firstG == b.lastG && b.firstG == a.lastG) combine(a.tail, b.tail) else b.tail))
-    frame(arrange(df, groupCols, order), outSchema, Tree, fold) { (seed, it) =>
+    frame(arrange(df, groupCols, order), outSchema, carry, fold) { (seed, it) =>
       val w = new GroupWalk(schema, gIdx, zero, step, seed)
       val emit = out()
       it.map(r => emit(r, w(r)))

@@ -89,7 +89,7 @@ class EdgeCasesSpec extends SparkTestBase {
     for (i <- 0 until 40) assert(roll(i.toLong) == math.min(i + 1, 5).toDouble, s"roll idx=$i")
 
     // every other scan-kernel form: forward and backward Tree carries, the
-    // Sequential carry, and the grouped form
+    // Sequential carry, and the grouped form under both carries
     val v = (0 until 40).map(i => if (i % 7 == 0) None else Some(i * 1.5))
     def lastNonNull(i: Int, from: Int = 0) = (from to i).reverse.flatMap(v(_)).headOption
     val ff = Fill.ffill(df, "v").coalesce(1)
@@ -99,7 +99,7 @@ class EdgeCasesSpec extends SparkTestBase {
       .select("idx", "n").as[(Long, Long)].collect().toMap
     for (i <- 0 until 40) assert(exp(i.toLong) == (0 to i).count(v(_).nonEmpty), s"expanding idx=$i")
     // driver-side recurrences: alpha 0.5 by rows, and halflife 2 s over 1 s steps
-    def ewmRef(d: Double): Seq[Double] = v.scanLeft((0.0, 0.0)) { case ((s, w), x) =>
+    def ewmRef(d: Double, xs: Seq[Option[Double]] = v): Seq[Double] = xs.scanLeft((0.0, 0.0)) { case ((s, w), x) =>
       (s * d + x.getOrElse(0.0), w * d + (if (x.isDefined) 1.0 else 0.0)) }.tail
       .map { case (s, w) => if (w > 0) s / w else Double.NaN }
     for ((got, d, what) <- Seq(
@@ -129,6 +129,19 @@ class EdgeCasesSpec extends SparkTestBase {
     val gf = Fill.groupedFfill(grp, Seq("g"), Seq("idx"), "v").coalesce(1)
       .select("idx", "v").as[(Long, Option[Double])].collect().toMap
     for (i <- 0 until 40) assert(gf(i.toLong) == lastNonNull(i, i / 10 * 10), s"grouped ffill idx=$i")
+    val ek = Ewm.statsKeyed(grp, "g", Seq("idx"), "v", 0.5).coalesce(1)
+      .select("idx", "ewm_mean").as[(Long, Option[Double])].collect().toMap
+    for (i <- 0 until 40) {
+      val want = ewmRef(0.5, v.slice(i / 10 * 10, i / 10 * 10 + 10))(i % 10)
+      assert(ek(i.toLong).forall(x => math.abs(x - want) < 1e-9) &&
+        ek(i.toLong).isEmpty == want.isNaN, s"keyed ewm idx=$i: ${ek(i.toLong)} vs $want")
+    }
+    val ak = new graft.api.GRolling(grp, 3, Seq("idx"), Seq("g"), 1).applyKeyed("v", "out")(_.sum)
+      .coalesce(1).select("idx", "out").as[(Long, Option[Double])].collect().toMap
+    for (i <- 0 until 40) {
+      val in = (math.max(i / 10 * 10, i - 2) to i).flatMap(v(_))
+      assert(ak(i.toLong) == (if (in.isEmpty) None else Some(in.sum)), s"applyKeyed idx=$i")
+    }
     val acc = graft.api.GBag(df.select("idx").as[Long]).accumulate(_ + _).ds.coalesce(1).collect()
     assert(acc.toSeq.sorted == (0 until 40).map(i => (0 to i).sum.toLong), "accumulate")
   }

@@ -108,6 +108,36 @@ class EwmSpec extends SparkTestBase {
     }
   }
 
+  test("keyed ewm: a hot key spanning several range partitions matches the direct definition") {
+    val prev = spark.conf.get("spark.sql.shuffle.partitions")
+    spark.conf.set("spark.sql.shuffle.partitions", "8")
+    try {
+      val rnd = new scala.util.Random(11)
+      val rows = for ((k, n) <- Seq("c" -> 30, "h" -> 400); i <- 0 until n) yield
+        (k, i, if (rnd.nextDouble() < 0.1) null else Double.box(math.floor(rnd.nextDouble() * 10)))
+      val df = rnd.shuffle(rows).toDF("k", "i", "v").repartition(3)
+      val span = PrefixScan.arrange(df, Seq("k"), Seq(org.apache.spark.sql.functions.col("i")))
+        .rdd.mapPartitions(it => Iterator.single(it.exists(_.getString(0) == "h")))
+        .collect().count(identity)
+      assert(span >= 3, s"hot key spans only $span partitions")
+      val got = Ewm.statsKeyed(df, "k", Seq("i"), "v", alpha = 0.3).collect()
+        .map(r => (r.getString(0), r.getInt(1)) -> ((r.getLong(2),
+          Option(r.get(3)).map(_.asInstanceOf[Double]), Option(r.get(4)).map(_.asInstanceOf[Double]))))
+        .toMap
+      assert(got.size == rows.size)
+      for (k <- Seq("c", "h")) {
+        val series = rows.filter(_._1 == k).sortBy(_._2).map(t => Option(t._3).map(_.doubleValue))
+        val exp = reference(series, 0.3)
+        series.indices.foreach { i =>
+          val (grn, m, v) = got((k, i))
+          assert(grn == i, s"key=$k grn at i=$i")
+          close(m, exp(i)._1, s"key=$k mean i=$i")
+          close(v, exp(i)._2, s"key=$k var i=$i")
+        }
+      }
+    } finally spark.conf.set("spark.sql.shuffle.partitions", prev)
+  }
+
   test("leading nulls emit null mean until the first observation") {
     val got = run(Seq(None, None, Some(4.0), None, Some(2.0)), 0.5, 2)
     assert(got(0)._1.isEmpty && got(1)._1.isEmpty)

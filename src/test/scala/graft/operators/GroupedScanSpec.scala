@@ -49,6 +49,19 @@ class GroupedScanSpec extends SparkTestBase {
     } finally spark.conf.set("spark.sql.shuffle.partitions", "4")
   }
 
+  test("grouped cumsum == window cumsum when the key mixes -0.0 and 0.0") {
+    // SQL ordering sorts the two zeros as one value, so their rows
+    // interleave by order; the group key must treat them as one group too
+    val df = ((0 until 300).map(i => (if (i % 3 == 0) -0.0 else 0.0, i, (i % 7).toLong)) ++
+      (300 until 400).map(i => (1.0, i, (i % 5).toLong))).toDF("g", "ord", "v")
+    val got = Cumulative.grouped(df, Seq("g"), Seq("ord"), "v", Cumulative.CumSum, "cs")
+    def byOrd(d: org.apache.spark.sql.DataFrame, c: String) =
+      d.select(col("ord"), col(c)).collect().map(r => r.getInt(0) -> r.getLong(1)).toMap
+    val want = byOrd(windowCum(df, "sum"), "expect")
+    assert(want(299) == (0 until 300).map(_ % 7).sum, "the window must see one zero group")
+    assert(byOrd(got, "cs") == want)
+  }
+
   test("grouped cumprod (double) == window product within 1e-9 relative") {
     // factors near 1.0 so the 3000-deep hot-group product stays finite
     val df = skewed.withColumn("v", lit(1.0) + col("v").cast("double") / 1000.0)

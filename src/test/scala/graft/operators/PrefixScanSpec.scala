@@ -3,13 +3,16 @@ package graft.operators
 import graft.SparkTestBase
 import graft.operators.PrefixScan.{Carry, Fold, Sequential, Tree}
 import org.apache.spark.sql.functions.col
+import org.apache.spark.sql.types.StringType
+import org.apache.spark.unsafe.types.UTF8String
 
 import scala.reflect.ClassTag
 
 /** [[PrefixScan]]: both carries must hand partition p exactly its
   * exclusive prefix (or suffix) for every partition-count shape (bucket
-  * boundaries, single partition, n a perfect square, n prime), and every
-  * kernel form must turn an empty input into an empty result.
+  * boundaries, single partition, n a perfect square, n prime), the
+  * grouped form must be right under both carries, and every kernel form
+  * must turn an empty input into an empty result.
   */
 class PrefixScanSpec extends SparkTestBase {
 
@@ -86,12 +89,39 @@ class PrefixScanSpec extends SparkTestBase {
         s"$carry backward=$backward")
     assert(PrefixScan.twoWay(sc.emptyRDD[Long], sum, sum)((_, _, it) => it).isEmpty())
     import spark.implicits._
-    for (df <- Seq(Seq.empty[(Long, Long)].toDF("g", "v"),
+    for (carry <- carries; df <- Seq(Seq.empty[(Long, Long)].toDF("g", "v"),
         spark.createDataFrame(sc.emptyRDD[org.apache.spark.sql.Row],
           Seq.empty[(Long, Long)].toDF("g", "v").schema))) {
-      val out = PrefixScan.grouped[Long](df, Seq("g"), Seq(col("v")), df.schema)(
+      val out = PrefixScan.grouped[Long](df, Seq("g"), Seq(col("v")), df.schema, carry)(
         0L, (s, _) => s + 1, _ + _)(() => (r, _) => r)
-      assert(out.count() == 0)
+      assert(out.count() == 0, s"$carry")
     }
+  }
+
+  test("grouped form: both carries give every row its group's running fold") {
+    import spark.implicits._
+    val prev = spark.conf.get("spark.sql.shuffle.partitions")
+    spark.conf.set("spark.sql.shuffle.partitions", "12")
+    try {
+      // "h" is hot and spans most partitions; "a" and "z" pin the edges
+      val rows = (0 until 30).map(i => ("a", i.toLong)) ++
+        (0 until 600).map(i => ("h", i.toLong)) ++ (0 until 20).map(i => ("z", i.toLong))
+      val df = new scala.util.Random(3).shuffle(rows).toDF("g", "v")
+      val span = PrefixScan.arrange(df, Seq("g"), Seq(col("v"))).rdd
+        .mapPartitions(it => Iterator.single(it.exists(_.getString(0) == "h"))).collect().count(identity)
+      assert(span >= 4, s"hot group spans only $span partitions")
+      // string concat is associative but not commutative: a seed applied
+      // out of order or to the wrong group shows in the string
+      val schema = df.schema
+      for (carry <- carries) {
+        val got = PrefixScan.grouped[String](df, Seq("g"), Seq(col("v")),
+            schema.add("s", StringType), carry)("", (s, r) => s + r.getLong(1) + ",", _ + _) { () =>
+          val append = new InternalScan.Append(schema, Seq(StringType))
+          (r, s) => append(r, UTF8String.fromString(s))
+        }.as[(String, Long, String)].collect()
+        assert(got.length == rows.size, s"$carry")
+        for ((g, v, s) <- got) assert(s == (0L to v).map(_ + ",").mkString, s"$carry g=$g v=$v")
+      }
+    } finally spark.conf.set("spark.sql.shuffle.partitions", prev)
   }
 }
