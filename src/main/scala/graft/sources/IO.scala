@@ -171,11 +171,8 @@ object IO {
     * [[readAvro]]'s per-file unit.
     *
     * Tasks see the SESSION's Hadoop configuration (filesystem creds /
-    * settings travel as a broadcast key-value map — `Configuration` is
-    * not Serializable), and each task commits via write-to-temp +
-    * rename: a failed or speculative attempt leaves only an orphaned
-    * hidden `.…tmp` file, never a partial visible part file (the
-    * last successful attempt's rename wins).
+    * settings travel as a key-value array — `Configuration` is not
+    * Serializable), and each part file commits through [[FileCommit]].
     */
   def toAvro(df: DataFrame, path: String): Unit = {
     val schemaJson =
@@ -191,24 +188,18 @@ object IO {
         val schema = new Schema.Parser().parse(schemaJson)
         val fs = org.apache.hadoop.fs.FileSystem.get(
           java.net.URI.create(path), rebuildConf(hadoopKVs))
-        val attempt = Option(org.apache.spark.TaskContext.get())
-          .map(_.taskAttemptId()).getOrElse(0L)
-        val tmp = new org.apache.hadoop.fs.Path(path, f".part-$pid%05d.avro.$attempt.tmp")
-        val dest = new org.apache.hadoop.fs.Path(path, f"part-$pid%05d.avro")
-        val out = fs.create(tmp, true)
-        val w = new DataFileWriter[GenericRecord](new GenericDatumWriter[GenericRecord](schema))
-        w.create(schema, out)
         var n = 0L
-        it.foreach { s =>
-          val rec = new GenericData.Record(schema)
-          rec.put("value", s)
-          w.append(rec)
-          n += 1
+        FileCommit.write(fs, new org.apache.hadoop.fs.Path(path, f"part-$pid%05d.avro")) { out =>
+          val w = new DataFileWriter[GenericRecord](new GenericDatumWriter[GenericRecord](schema))
+          w.create(schema, out)
+          it.foreach { s =>
+            val rec = new GenericData.Record(schema)
+            rec.put("value", s)
+            w.append(rec)
+            n += 1
+          }
+          w.close()
         }
-        w.close()
-        if (fs.exists(dest)) fs.delete(dest, false)
-        if (!fs.rename(tmp, dest))
-          throw new java.io.IOException(s"to_avro: commit rename $tmp -> $dest failed")
         Iterator.single(n)
       }.count(): Unit
   }

@@ -14,9 +14,8 @@ import org.apache.spark.sql.SparkSession
   * little-endian header length, and a Python-dict header string padded to
   * a 64-byte boundary. Like the Avro writer, tasks see the SESSION's
   * Hadoop configuration (shipped as serializable key-value pairs) and
-  * commit via write-to-temp + rename, so retries/speculation never leave
-  * a partial visible file. One file per block keeps the write narrow —
-  * zero shuffle either direction.
+  * commit every file through [[FileCommit]]. One file per block keeps the
+  * write narrow — zero shuffle either direction.
   */
 object NpyStack {
 
@@ -74,33 +73,19 @@ object NpyStack {
       val i = b.bid.head
       val dims = chunks0(i) +: restDims.toSeq
       val hdr = npyHeader(dims)
-      val attempt = Option(org.apache.spark.TaskContext.get())
-        .map(_.taskAttemptId()).getOrElse(0L)
-      val tmp = new org.apache.hadoop.fs.Path(path, s".$i.npy.$attempt.tmp")
-      val dest = new org.apache.hadoop.fs.Path(path, s"$i.npy")
-      val out = fs.create(tmp, true)
-      out.write(hdr)
-      val bb = java.nio.ByteBuffer.allocate(8 * 1024)
-        .order(java.nio.ByteOrder.LITTLE_ENDIAN)
-      var j = 0
-      while (j < b.data.length) {
-        bb.clear()
-        val n = math.min(1024, b.data.length - j)
-        var k = 0
-        while (k < n) { bb.putDouble(b.data(j + k)); k += 1 }
-        out.write(bb.array(), 0, 8 * n)
-        j += n
-      }
-      out.close()
-      // first-winner commit: never delete an already-committed file (a
-      // speculative sibling attempt may have just renamed it — the old
-      // exists->delete->rename dance could erase the winner's file and
-      // then die, leaving a "successful" job with a missing chunk).
-      // POSIX rename atomically replaces; filesystems that refuse an
-      // existing destination return false, and the loser discards its tmp.
-      if (!fs.rename(tmp, dest)) {
-        if (fs.exists(dest)) fs.delete(tmp, false)
-        else throw new java.io.IOException(s"to_npy_stack: commit rename failed for $dest")
+      FileCommit.write(fs, new org.apache.hadoop.fs.Path(path, s"$i.npy")) { out =>
+        out.write(hdr)
+        val bb = java.nio.ByteBuffer.allocate(8 * 1024)
+          .order(java.nio.ByteOrder.LITTLE_ENDIAN)
+        var j = 0
+        while (j < b.data.length) {
+          bb.clear()
+          val n = math.min(1024, b.data.length - j)
+          var k = 0
+          while (k < n) { bb.putDouble(b.data(j + k)); k += 1 }
+          out.write(bb.array(), 0, 8 * n)
+          j += n
+        }
       }
       1L
       }
@@ -110,9 +95,7 @@ object NpyStack {
       java.net.URI.create(path), spark.sparkContext.hadoopConfiguration)
     val info = s"""{"shape": ${a.shape.mkString("[", ", ", "]")}, """ +
       s""""chunks0": ${a.chunks.head.mkString("[", ", ", "]")}, "axis": 0}"""
-    val infoOut = fs.create(new org.apache.hadoop.fs.Path(path, "info"), true)
-    infoOut.write(info.getBytes("UTF-8"))
-    infoOut.close()
+    FileCommit.writeBytes(fs, new org.apache.hadoop.fs.Path(path, "info"), info.getBytes("UTF-8"))
   }
 
   /** Read a stack written by [[toNpyStack]] (or by NumPy itself, one file

@@ -20,8 +20,7 @@ import org.apache.spark.sql.SparkSession
   * Both directions are narrow — one file per block, zero shuffle (the
   * write rechunks first iff the grid is irregular). Tasks see the
   * session's Hadoop configuration (shipped as key-value pairs, the Avro/
-  * npy-stack pattern) and commit write-to-temp + first-winner rename, so
-  * speculative retries never leave a partial chunk visible.
+  * npy-stack pattern); every file commits through [[FileCommit]].
   */
 object Zarr {
 
@@ -86,16 +85,15 @@ object Zarr {
          | "dimension_separator": "$sepW"}""".stripMargin
     val fs = org.apache.hadoop.fs.FileSystem.get(
       java.net.URI.create(path), spark.sparkContext.hadoopConfiguration)
-    val mOut = fs.create(new org.apache.hadoop.fs.Path(path, ".zarray"), true)
-    mOut.write(meta.getBytes("UTF-8"))
-    mOut.close()
+    FileCommit.writeBytes(fs, new org.apache.hadoop.fs.Path(path, ".zarray"),
+      meta.getBytes("UTF-8"))
   }
 
   /** Grid-parallel chunk-file writer shared by [[toZarr]] and
     * [[storeZarr]]: each block pads (C-order row copies) into the store's
-    * full chunk shape, encodes, and commits `<bid + bidOffset>` with a
-    * same-parent temp + rename (first winner). One Configuration /
-    * FileSystem per PARTITION, not per block.
+    * full chunk shape, encodes, and commits `<bid + bidOffset>` through
+    * [[FileCommit]] (which replaces a prior store's chunk). One
+    * Configuration / FileSystem per PARTITION, not per block.
     */
   private def writeChunkFiles(arr: GArr, path: String, fullChunk: Array[Int],
                               useZlib: Boolean, level: Int, sepW: String,
@@ -140,45 +138,7 @@ object Zarr {
         val raw = bb.array()
         val payload = if (useZlib) deflate(raw, level) else raw
         val name = b.bid.zip(bidOffset).map { case (i, o) => i + o }.mkString(sepW)
-        val attempt = Option(org.apache.spark.TaskContext.get())
-          .map(_.taskAttemptId()).getOrElse(0L)
-        val dest = new org.apache.hadoop.fs.Path(path, name)
-        // the temp file lives NEXT TO the destination (same parent), so the
-        // "/" nested layout commits with the same single rename
-        val tmp = new org.apache.hadoop.fs.Path(
-          dest.getParent, s".${dest.getName}.$attempt.tmp")
-        val out = fs.create(tmp, true)
-        out.write(payload)
-        out.close()
-        // An existing dest is either a prior store's chunk being OVERWRITTEN
-        // (storeZarr region write) or a speculative duplicate of this very
-        // block (identical bytes) — replacing it is correct in both cases.
-        // FileContext.rename with OVERWRITE is a single atomic operation on
-        // HDFS and the local fs, so a reader (or a killed task) can never
-        // observe the store with the chunk MISSING, which the old
-        // delete-then-rename fallback allowed.
-        try {
-          val fc = org.apache.hadoop.fs.FileContext.getFileContext(
-            dest.toUri, fs.getConf)
-          fc.rename(tmp, dest, org.apache.hadoop.fs.Options.Rename.OVERWRITE)
-        } catch {
-          case _: UnsupportedOperationException | _: java.io.IOException
-              if fs.exists(dest) || fs.exists(tmp) =>
-            // non-atomic fallback for filesystems without a FileContext
-            // binding; if we lose a race to a twin that already committed,
-            // clean up our tmp instead of orphaning it
-            if (!fs.rename(tmp, dest)) {
-              if (fs.exists(dest)) {
-                fs.delete(dest, false)
-                if (!fs.rename(tmp, dest)) {
-                  if (fs.exists(dest)) fs.delete(tmp, false)
-                  else throw new java.io.IOException(
-                    s"zarr: commit rename failed for $dest")
-                }
-              } else throw new java.io.IOException(
-                s"zarr: commit rename failed for $dest")
-            }
-        }
+        FileCommit.writeBytes(fs, new org.apache.hadoop.fs.Path(path, name), payload)
         1L
       }
     }.count(): Unit

@@ -136,4 +136,41 @@ class ZarrSpec extends SparkTestBase {
     // out-of-bounds region
     intercept[IllegalArgumentException] { Zarr.storeZarr(one, dir, Seq(8L, 0L)) }
   }
+
+  test("storeZarr over chunks carrying .crc sidecars reads back the new values, verified") {
+    val dir = java.nio.file.Files.createTempDirectory("zarr_crc_store").toString
+    val base = GArr.fromFunction(spark, Seq(6L, 4L), Seq(2, 2))(f2)
+    Zarr.toZarr(base, dir, compressor = "null")
+    val fs = org.apache.hadoop.fs.FileSystem.get(
+      java.net.URI.create(dir), spark.sparkContext.hadoopConfiguration)
+    // the readers below go through Hadoop's checksummed local file system
+    fs match {
+      case l: org.apache.hadoop.fs.LocalFileSystem => assert(l.getVerifyChecksum)
+      case other => fail(s"expected Hadoop's LocalFileSystem, got ${other.getClass}")
+    }
+    for (side <- Seq(".zarray", "0.0", "1.0", "2.1"))
+      assert(java.nio.file.Files.exists(java.nio.file.Paths.get(dir, s".$side.crc")), side)
+    // rows 2..3 replace chunks (1,0) and (1,1): each new chunk needs a new sidecar
+    val patch = GArr.fromFunction(spark, Seq(2L, 4L), Seq(2, 2))(g => -1.0 - g(0) * 4 - g(1))
+    Zarr.storeZarr(patch, dir, Seq(2L, 0L))
+    val got = indexed(Zarr.fromZarr(spark, dir))
+    for (i <- 0L until 6L; j <- 0L until 4L) {
+      val want = if (i == 2 || i == 3) -1.0 - (i - 2) * 4 - j else f2(Array(i, j))
+      assert(got(i * 4 + j) == want, s"($i,$j)")
+    }
+  }
+
+  test("a byte flipped in a committed chunk fails fromZarr with a ChecksumException") {
+    val dir = java.nio.file.Files.createTempDirectory("zarr_crc_flip").toString
+    val a = GArr.fromFunction(spark, Seq(4L, 4L), Seq(2, 2))(f2)
+    Zarr.toZarr(a, dir, compressor = "null")
+    assert(indexed(Zarr.fromZarr(spark, dir)) == indexed(a))
+    val chunk = java.nio.file.Paths.get(dir, "1.0")
+    val raw = java.nio.file.Files.readAllBytes(chunk)
+    raw(11) = (raw(11) ^ 0x01).toByte
+    java.nio.file.Files.write(chunk, raw)
+    val e = intercept[Exception](indexed(Zarr.fromZarr(spark, dir)))
+    val causes = Iterator.iterate[Throwable](e)(_.getCause).takeWhile(_ != null)
+    assert(causes.exists(_.isInstanceOf[org.apache.hadoop.fs.ChecksumException]), e.toString)
+  }
 }
