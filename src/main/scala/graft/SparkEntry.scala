@@ -1,7 +1,7 @@
 package graft
 
 import graft.api.{GDF, IndexMeta}
-import org.apache.spark.sql.{Column, DataFrame, Row, SparkSession}
+import org.apache.spark.sql.{Column, DataFrame, GraftSqlShim, Row, SparkSession}
 import org.apache.spark.sql.functions._
 
 /** Driver contract — see /root/repo/SURVEY.md §7 + the builder prompt.
@@ -30,6 +30,10 @@ object SparkEntry {
     */
   private val liTotalOrder =
     Seq("l_orderkey", "l_linenumber", "l_partkey", "l_suppkey", "l_extendedprice")
+
+  /** The first `n` lineitem rows in [[liTotalOrder]]. */
+  private def liHead(li: DataFrame, n: Int): DataFrame =
+    li.sort(liTotalOrder.map(col): _*).limit(n)
 
   /** Write `df` as ONE parquet file `<name>.parquet` inside `watchDir`
     * with a controlled modification time.  The streaming file source
@@ -1854,9 +1858,8 @@ object SparkEntry {
       // only the 2400/2000 leading rows of the total order are needed, so
       // don't pay a whole-table sort for them — at 40x this is the
       // difference between sorting 240M rows twice and two top-k passes
-      def head(n: Int) = li.sort(liTotalOrder.map(col): _*).limit(n)
-      val q = GArr.fromColumn(head(2400), "l_quantity", liTotalOrder, chunk = 512)
-      val ln = GArr.fromColumn(head(2000), "l_linenumber", liTotalOrder, chunk = 512)
+      val q = GArr.fromColumn(liHead(li, 2400), "l_quantity", liTotalOrder, chunk = 512)
+      val ln = GArr.fromColumn(liHead(li, 2000), "l_linenumber", liTotalOrder, chunk = 512)
       val a = q.reshape(Seq(60L, 40L), Seq(16, 16))
       val b = ln.reshape(Seq(40L, 50L), Seq(16, 16))
       a.matmul(b).toIndexedDF
@@ -2050,10 +2053,9 @@ object SparkEntry {
     "q160_einsum_bmm" -> { (s, dir) =>
       import graft.operators.{Einsum, GArr}
       val li = t(s, dir, "lineitem")
-      def head(n: Int) = li.sort(liTotalOrder.map(col): _*).limit(n)
-      val a = GArr.fromColumn(head(2400), "l_quantity", liTotalOrder, chunk = 512)
+      val a = GArr.fromColumn(liHead(li, 2400), "l_quantity", liTotalOrder, chunk = 512)
         .reshape(Seq(4L, 30L, 20L), Seq(2, 16, 8))
-      val b = GArr.fromColumn(head(800), "l_linenumber", liTotalOrder, chunk = 512)
+      val b = GArr.fromColumn(liHead(li, 800), "l_linenumber", liTotalOrder, chunk = 512)
         .reshape(Seq(4L, 20L, 10L), Seq(2, 8, 8))
       Einsum.einsum("bij,bjk->bik", Seq(a, b)).toIndexedDF
         .select(col("idx"), col("value").cast("long").as("v"))
@@ -2066,10 +2068,9 @@ object SparkEntry {
     "q161_einsum_diag_trace" -> { (s, dir) =>
       import graft.operators.{Einsum, GArr}
       val li = t(s, dir, "lineitem")
-      def head(n: Int) = li.sort(liTotalOrder.map(col): _*).limit(n)
-      val m = GArr.fromColumn(head(3600), "l_quantity", liTotalOrder, chunk = 512)
+      val m = GArr.fromColumn(liHead(li, 3600), "l_quantity", liTotalOrder, chunk = 512)
         .reshape(Seq(60L, 60L), Seq(16, 16))
-      val n = GArr.fromColumn(head(3600), "l_linenumber", liTotalOrder, chunk = 512)
+      val n = GArr.fromColumn(liHead(li, 3600), "l_linenumber", liTotalOrder, chunk = 512)
         .reshape(Seq(60L, 60L), Seq(16, 16))
       val d = Einsum.einsum("ii->i", Seq(m))
       val dp = Einsum.einsum("ij,ji->i", Seq(m, n))
@@ -2086,12 +2087,11 @@ object SparkEntry {
     "q163_einsum_chain" -> { (s, dir) =>
       import graft.operators.{Einsum, GArr}
       val li = t(s, dir, "lineitem")
-      def head(n: Int) = li.sort(liTotalOrder.map(col): _*).limit(n)
-      val a = GArr.fromColumn(head(2400), "l_quantity", liTotalOrder, chunk = 512)
+      val a = GArr.fromColumn(liHead(li, 2400), "l_quantity", liTotalOrder, chunk = 512)
         .reshape(Seq(60L, 40L), Seq(16, 16))
-      val b = GArr.fromColumn(head(2000), "l_linenumber", liTotalOrder, chunk = 512)
+      val b = GArr.fromColumn(liHead(li, 2000), "l_linenumber", liTotalOrder, chunk = 512)
         .reshape(Seq(40L, 50L), Seq(16, 16))
-      val cSrc = head(1500)
+      val cSrc = liHead(li, 1500)
         .withColumn("pk10", (col("l_partkey") % 10).cast("double"))
       val c = GArr.fromColumn(cSrc, "pk10", liTotalOrder, chunk = 512)
         .reshape(Seq(50L, 30L), Seq(16, 16))
@@ -2105,8 +2105,7 @@ object SparkEntry {
     "q164_take_fancy" -> { (s, dir) =>
       import graft.operators.GArr
       val li = t(s, dir, "lineitem")
-      def head(n: Int) = li.sort(liTotalOrder.map(col): _*).limit(n)
-      val x = GArr.fromColumn(head(3000), "l_quantity", liTotalOrder, chunk = 512)
+      val x = GArr.fromColumn(liHead(li, 3000), "l_quantity", liTotalOrder, chunk = 512)
       val idx = (0 until 200).map(i => (i.toLong * 37 + 5) % 3000)
       x.take(idx).toIndexedDF
         .select(col("idx"), col("value").cast("long").as("q"))
@@ -2160,9 +2159,8 @@ object SparkEntry {
     "q168_takearr" -> { (s, dir) =>
       import graft.operators.GArr
       val li = t(s, dir, "lineitem")
-      def head(n: Int) = li.sort(liTotalOrder.map(col): _*).limit(n)
-      val x = GArr.fromColumn(head(2048), "l_quantity", liTotalOrder, chunk = 256)
-      val idxSrc = head(500).withColumn("pos", (col("l_partkey") % 2048).cast("double"))
+      val x = GArr.fromColumn(liHead(li, 2048), "l_quantity", liTotalOrder, chunk = 256)
+      val idxSrc = liHead(li, 500).withColumn("pos", (col("l_partkey") % 2048).cast("double"))
       val idx = GArr.fromColumn(idxSrc, "pos", liTotalOrder, chunk = 128)
       x.takeArr(idx).toIndexedDF
         .select(col("idx"), col("value").cast("long").as("q"))
@@ -2176,12 +2174,12 @@ object SparkEntry {
       import graft.operators.GArr
       import graft.sources.Zarr
       val li = t(s, dir, "lineitem")
-      def head(n: Int) = li.sort(liTotalOrder.map(col): _*).limit(n)
-      val cents = head(6000)
+      val cents = liHead(li, 6000)
         .withColumn("cents", floor(col("l_extendedprice") * 100 + 0.5).cast("double"))
       val x = GArr.fromColumn(cents, "cents", liTotalOrder, chunk = 512)
         .reshape(Seq(60L, 100L), Seq(16, 32))
-      val zdir = java.nio.file.Files.createTempDirectory("graft_zarr_q169").toString
+      // deleted when the JVM exits (Spark's shutdown-registered temp dir)
+      val zdir = GraftSqlShim.createTempDir("graft_zarr_q169").toString
       Zarr.toZarr(x, zdir, compressor = "zlib", level = 1)
       Zarr.fromZarr(s, zdir).sumAxis(1).toIndexedDF
         .select(col("idx"), col("value").cast("long").as("cents"))
@@ -2195,11 +2193,10 @@ object SparkEntry {
     "q170_compress_arr" -> { (s, dir) =>
       import graft.operators.GArr
       val li = t(s, dir, "lineitem")
-      def head(n: Int) = li.sort(liTotalOrder.map(col): _*).limit(n)
       // the matrix feeds BOTH the mask derivation and the selection, so
       // persist it — otherwise the total-order sort bridge recomputes per
       // consumer (measured 4.5s -> the cost of the extra sorts)
-      val x = GArr.fromColumn(head(6000), "l_quantity", liTotalOrder, chunk = 512)
+      val x = GArr.fromColumn(liHead(li, 6000), "l_quantity", liTotalOrder, chunk = 512)
         .reshape(Seq(60L, 100L), Seq(16, 32)).persist()
       val rowSums = x.sumAxis(1)
       val mask = rowSums.scalarMap(v => if (v > 2550.0) 1.0 else 0.0)
@@ -2227,9 +2224,8 @@ object SparkEntry {
     "q172_fancy_setitem" -> { (s, dir) =>
       import graft.operators.GArr
       val li = t(s, dir, "lineitem")
-      def head(n: Int) = li.sort(liTotalOrder.map(col): _*).limit(n)
-      val x = GArr.fromColumn(head(4096), "l_quantity", liTotalOrder, chunk = 512)
-      val idxSrc = head(500)
+      val x = GArr.fromColumn(liHead(li, 4096), "l_quantity", liTotalOrder, chunk = 512)
+      val idxSrc = liHead(li, 500)
         .withColumn("pos", ((col("l_partkey") * 3) % 4096).cast("double"))
       val idx = GArr.fromColumn(idxSrc, "pos", liTotalOrder, chunk = 128)
       val v = GArr.fromFunction(s, Seq(500L), Seq(100))(g => 10000.0 + g(0))
@@ -2245,10 +2241,9 @@ object SparkEntry {
     "q173_takearr_axis" -> { (s, dir) =>
       import graft.operators.GArr
       val li = t(s, dir, "lineitem")
-      def head(n: Int) = li.sort(liTotalOrder.map(col): _*).limit(n)
-      val x = GArr.fromColumn(head(6000), "l_quantity", liTotalOrder, chunk = 512)
+      val x = GArr.fromColumn(liHead(li, 6000), "l_quantity", liTotalOrder, chunk = 512)
         .reshape(Seq(60L, 100L), Seq(16, 32))
-      val idxSrc = head(40).withColumn("pos", (col("l_partkey") % 100).cast("double"))
+      val idxSrc = liHead(li, 40).withColumn("pos", (col("l_partkey") % 100).cast("double"))
       val idx = GArr.fromColumn(idxSrc, "pos", liTotalOrder, chunk = 16)
       x.takeArr(idx, axis = 1).toIndexedDF
         .select(col("idx"), col("value").cast("long").as("q"))
@@ -2263,8 +2258,7 @@ object SparkEntry {
     "q174_masked_assign" -> { (s, dir) =>
       import graft.operators.GArr
       val li = t(s, dir, "lineitem")
-      def head(n: Int) = li.sort(liTotalOrder.map(col): _*).limit(n)
-      val x = GArr.fromColumn(head(6000), "l_quantity", liTotalOrder, chunk = 512)
+      val x = GArr.fromColumn(liHead(li, 6000), "l_quantity", liTotalOrder, chunk = 512)
         .persist()
       val m = x.mapBlocks((_, d) => d.map(v => if (v >= 30.0) 1.0 else 0.0))
       val values = x.booleanMask(m, targetChunk = 1000)
@@ -2516,10 +2510,9 @@ object SparkEntry {
     "q188_setitem_2d" -> { (s, dir) =>
       import graft.operators.GArr
       val li = t(s, dir, "lineitem")
-      def head(n: Int) = li.sort(liTotalOrder.map(col): _*).limit(n)
-      val x = GArr.fromColumn(head(4096), "l_quantity", liTotalOrder, chunk = 512)
+      val x = GArr.fromColumn(liHead(li, 4096), "l_quantity", liTotalOrder, chunk = 512)
         .reshape(Seq(64L, 64L), Seq(16, 16))
-      val idxSrc = head(20)
+      val idxSrc = liHead(li, 20)
         .withColumn("pos", ((col("l_partkey") * 7) % 64).cast("double"))
       val idx = GArr.fromColumn(idxSrc, "pos", liTotalOrder, chunk = 8)
       val v = GArr.fromFunction(s, Seq(20L, 64L), Seq(8, 32))(g =>
@@ -2559,17 +2552,16 @@ object SparkEntry {
     "q190_setitem_mixed" -> { (s, dir) =>
       import graft.operators.{AssignIdx, GArr}
       val li = t(s, dir, "lineitem")
-      def head(n: Int) = li.sort(liTotalOrder.map(col): _*).limit(n)
-      val x = GArr.fromColumn(head(4096), "l_quantity", liTotalOrder, chunk = 512)
+      val x = GArr.fromColumn(liHead(li, 4096), "l_quantity", liTotalOrder, chunk = 512)
         .reshape(Seq(64L, 64L), Seq(16, 16))
-      val idxSrc = head(20)
+      val idxSrc = liHead(li, 20)
         .withColumn("pos", ((col("l_partkey") * 7) % 64).cast("double"))
       val idx = GArr.fromColumn(idxSrc, "pos", liTotalOrder, chunk = 8)
         .reshape(Seq(4L, 5L), Seq(2, 3))
       val v = GArr.fromFunction(s, Seq(4L, 5L, 64L), Seq(2, 3, 32))(g =>
         20000.0 + (g(0) * 5 + g(1)) * 100 + g(2))
       val y = x.updatedFancy(idx, v, axis = 0)
-      val colSrc = head(12)
+      val colSrc = liHead(li, 12)
         .withColumn("pos", ((col("l_suppkey") * 11) % 64).cast("double"))
       val colIdx = GArr.fromColumn(colSrc, "pos", liTotalOrder, chunk = 5)
       val v2 = GArr.fromFunction(s, Seq(10L, 12L), Seq(4, 5))(g =>

@@ -196,11 +196,11 @@ final class GBag[T](val ds: Dataset[T]) extends Serializable {
   /** dask `bag.random.sample(population, k)` (`bag/random.py:12`):
     * exactly k UNIQUE elements chosen uniformly without replacement.
     * Re-expressed Spark-first as POSITION sampling instead of the
-    * reference's merged per-partition reservoirs: pass 1 ships only the
-    * O(npartitions) per-partition counts to the driver; the driver draws
-    * a uniform k-subset of [0, n) with Floyd's algorithm (O(k) state, no
-    * rejection loop, unbiased); pass 2 is one narrow per-partition gather
-    * of the chosen local offsets — no shuffle at any scale. Deterministic
+    * reference's merged per-partition reservoirs, on
+    * [[graft.operators.Positions]]: pass 1 counts each partition, the
+    * driver draws a uniform k-subset of [0, n) with Floyd's algorithm
+    * (O(k) state, no rejection loop, unbiased), and pass 2 is one narrow
+    * positional gather — no shuffle at any scale. Deterministic
     * for a given seed AND layout (the [[randomSample]] contract). Throws
     * if k exceeds the population (reference `_finalize_sample`).
     */
@@ -213,8 +213,8 @@ final class GBag[T](val ds: Dataset[T]) extends Serializable {
     // the gather pass, silently biasing the sample
     val rdd0 = ds.rdd.persist(
       org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
-    val counts = partitionCounts(rdd0)
-    val n = counts.sum
+    val starts = graft.operators.Positions.starts(rdd0)
+    val n = starts.last
     if (k > n) {
       rdd0.unpersist(blocking = false)
       throw new IllegalArgumentException("Sample larger than population")
@@ -228,7 +228,7 @@ final class GBag[T](val ds: Dataset[T]) extends Serializable {
       if (!chosen.add(t)) chosen.add(j): Unit
       j += 1
     }
-    gatherPositions(rdd0, counts, chosen.toArray.map((_, 1)))
+    gatherPositions(rdd0, starts, chosen.toSeq.map((_, 1)))
   }
 
   /** dask `bag.random.choices(population, k)` (`bag/random.py:40`):
@@ -243,78 +243,31 @@ final class GBag[T](val ds: Dataset[T]) extends Serializable {
     if (k == 0) return new GBag(ds.limit(0))
     val rdd0 = ds.rdd.persist(
       org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
-    val counts = partitionCounts(rdd0)
-    val n = counts.sum
+    val starts = graft.operators.Positions.starts(rdd0)
+    val n = starts.last
     if (n == 0) {
       rdd0.unpersist(blocking = false)
       throw new IllegalArgumentException("choices of an empty bag")
     }
     val rng = new java.util.Random(seed)
     val wanted = Array.fill(k)(math.floorMod(rng.nextLong(), n))
-      .groupBy(identity).map { case (p, a) => (p, a.length) }.toArray
-    gatherPositions(rdd0, counts, wanted)
+      .groupBy(identity).map { case (p, a) => (p, a.length) }.toSeq
+    gatherPositions(rdd0, starts, wanted)
   }
 
-  private def partitionCounts(rdd: org.apache.spark.rdd.RDD[T]): Array[Long] = {
-    // Long counter: Iterator.size is an Int and wraps past 2^31 elements
-    val m = rdd.mapPartitionsWithIndex((pi, it) =>
-      Iterator.single((pi, it.foldLeft(0L)((c, _) => c + 1)))).collect().toMap
-    Array.tabulate(rdd.getNumPartitions)(pi => m.getOrElse(pi, 0L))
-  }
-
-  /** Emit the elements at the given global positions (with multiplicity):
-    * positions split into per-partition sorted local-offset lists
-    * (broadcast, O(k)), then each partition scans once with a cursor.
+  /** Emit the elements at the given global positions (with multiplicity)
+    * through [[graft.operators.Positions.gather]], whose per-split drift
+    * check fails the job if the source changed since it was counted.
     */
-  private def gatherPositions(rdd: org.apache.spark.rdd.RDD[T], counts: Array[Long],
-                              wanted: Array[(Long, Int)])(
+  private def gatherPositions(rdd: org.apache.spark.rdd.RDD[T], starts: Array[Long],
+                              wanted: Seq[(Long, Int)])(
       implicit e: Encoder[T], ct: scala.reflect.ClassTag[T]): GBag[T] = {
-    val offsets = counts.scanLeft(0L)(_ + _)
-    def partOf(pos: Long): Int = {
-      var lo = 0; var hi = counts.length - 1
-      while (lo < hi) {
-        val mid = (lo + hi + 1) >>> 1
-        if (offsets(mid) <= pos) lo = mid else hi = mid - 1
-      }
-      lo
-    }
-    val byPart: Map[Int, Array[(Long, Int)]] = wanted
-      .groupBy { case (pos, _) => partOf(pos) }
-      .map { case (pi, a) =>
-        (pi, a.map { case (pos, c) => (pos - offsets(pi), c) }.sortBy(_._1))
-      }
-    val bc = spark.sparkContext.broadcast(byPart)
-    val picked = rdd.mapPartitionsWithIndex { (pi, it) =>
-      bc.value.get(pi) match {
-        case None => Iterator.empty
-        case Some(reqs) =>
-          var cursor = 0
-          var off = 0L
-          it.flatMap { t =>
-            var copies = 0
-            if (cursor < reqs.length && reqs(cursor)._1 == off) {
-              copies = reqs(cursor)._2; cursor += 1
-            }
-            off += 1
-            if (copies == 0) Iterator.empty else Iterator.fill(copies)(t)
-          }
-      }
-    }
-    // Materialize the k-element result (cheap: O(k) distributed) while the
-    // persisted base is still pinned, then verify every requested position
-    // was matched — a count drift between the two passes fails LOUDLY
-    // instead of returning a silently biased/short sample.
+    val picked = graft.operators.Positions.gather(rdd, starts, wanted)(identity[T]).values
+    // materialize the k-element result (cheap: O(k) distributed) while the
+    // persisted base is still pinned
     val got = picked.persist(
       org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
-    val gotN = got.count()
-    rdd.unpersist(blocking = false)
-    val want = wanted.map(_._2.toLong).sum
-    if (gotN != want) {
-      got.unpersist(blocking = false)
-      throw new IllegalStateException(
-        s"gatherPositions: matched $gotN of $want requested positions — " +
-          "the source changed between the count and gather passes")
-    }
+    try got.count() finally rdd.unpersist(blocking = false)
     new GBag(spark.createDataset(got))
   }
 

@@ -280,8 +280,8 @@ final case class GArr(shape: Seq[Long], chunks: Seq[Seq[Int]], blocks: Dataset[A
     val S = startsOf(chunks(axis))
     val T = startsOf(outAxisChunks)
     val axisEntries = indices.zipWithIndex.map { case (srcIdx, j) =>
-      val ib = blockOf(S, srcIdx)
-      val jb = blockOf(T, j.toLong)
+      val ib = Positions.locate(S, srcIdx)
+      val jb = Positions.locate(T, j.toLong)
       DimEntry(ib, jb, (srcIdx - S(ib)).toInt, 1L, (j - T(jb)).toInt, 1)
     }.toArray.groupBy(_.ib)
     val tables = Array.tabulate(ndim) { d =>
@@ -327,13 +327,10 @@ final case class GArr(shape: Seq[Long], chunks: Seq[Seq[Int]], blocks: Dataset[A
       .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK_SER)
     // O(axis grid) driver state: selected count per axis block -> prefix
     val counts = maskCached
-      .map(b => (b.bid(0), b.data.count(_ != 0.0)))
+      .map(b => (b.bid(0), b.data.count(_ != 0.0).toLong))
       .collect().toMap
-    val gAxis = chunks(axis).length
-    val offsets = new Array[Long](gAxis + 1)
-    var ib = 0
-    while (ib < gAxis) { offsets(ib + 1) = offsets(ib) + counts.getOrElse(ib, 0); ib += 1 }
-    val k = offsets(gAxis)
+    val offsets = Positions.starts(counts, chunks(axis).length)
+    val k = offsets.last
     val axisChunk = math.max(1, math.min(targetChunk,
       if (chunks(axis).nonEmpty) chunks(axis).max else targetChunk))
     val outAxisChunks = evenChunks(k, axisChunk)
@@ -369,7 +366,7 @@ final case class GArr(shape: Seq[Long], chunks: Seq[Seq[Int]], blocks: Dataset[A
           var r = 0
           while (r < sel.length) {
             val gpos = g0 + r
-            val jb = blockOf(T, gpos)
+            val jb = Positions.locate(T, gpos)
             val dstBid = bid.updated(ax, jb)
             val key = linearBidL(dstBid, dstGrid)
             val ddims = Array.tabulate(nd)(d => newChunksB(d)(dstBid(d)))
@@ -423,8 +420,9 @@ final case class GArr(shape: Seq[Long], chunks: Seq[Seq[Int]], blocks: Dataset[A
     * contiguous C-order range) — a counts-prefix path runs (one block
     * join + O(nblocks) driver counts + one scatter shuffle, no sort);
     * otherwise ndim≥2 falls back to a distributed sortByKey on the global
-    * flat index. The result is materialized (counted) before return —
-    * like dask, the unknown output length forces a compute barrier.
+    * flat index and a [[Positions.pack]]. The result is materialized
+    * (counted) before return — like dask, the unknown output length
+    * forces a compute barrier.
     */
   def booleanMask(mask: GArr, targetChunk: Int = 65536): GArr = {
     require(shape == mask.shape && chunks == mask.chunks,
@@ -441,11 +439,8 @@ final case class GArr(shape: Seq[Long], chunks: Seq[Seq[Int]], blocks: Dataset[A
         (ib, buf.result())
       }.persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK_SER)
       val counts = sel.map(t => (t._1, t._2.length.toLong)).collect().toMap
-      val nb = grid(0)
-      val offsets = new Array[Long](nb + 1)
-      var ib = 0
-      while (ib < nb) { offsets(ib + 1) = offsets(ib) + counts.getOrElse(ib, 0L); ib += 1 }
-      val k = offsets(nb)
+      val offsets = Positions.starts(counts, grid(0))
+      val k = offsets.last
       val outChunks = evenChunks(k, targetChunk)
       val T = startsOf(outChunks)
       val dstGrid = Seq(outChunks.length)
@@ -456,7 +451,7 @@ final case class GArr(shape: Seq[Long], chunks: Seq[Seq[Int]], blocks: Dataset[A
         var i = 0
         while (i < vals.length) {
           val gpos = g0 + i
-          val jb = blockOf(T, gpos)
+          val jb = Positions.locate(T, gpos)
           val key = linearBidL(Seq(jb), dstGrid)
           out.getOrElseUpdate(key, new PieceBuf(key, Seq(jb)))
             .add((gpos - T(jb)).toInt, vals(i))
@@ -471,7 +466,7 @@ final case class GArr(shape: Seq[Long], chunks: Seq[Seq[Int]], blocks: Dataset[A
       GArr(Seq(k), Seq(outChunks), outBlocks)
     } else {
       // pair blocks, emit (global flat idx, value) for selected, then a
-      // distributed sort + zipWithIndex + pack (the fromColumn shape)
+      // distributed sort and a positional pack (the fromColumn shape)
       val g = grid
       val sh = shape
       val st = chunks.map(startsOf)
@@ -496,18 +491,13 @@ final case class GArr(shape: Seq[Long], chunks: Seq[Seq[Int]], blocks: Dataset[A
         }
         out.result()
       }.rdd.persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK_SER)
-      val k = selected.count()
+      val sorted = selected.sortByKey()
+      val starts = Positions.starts(sorted)
+      val k = starts.last
       val chunk = math.max(1, targetChunk)
       val outChunks = evenChunks(k, chunk)
-      val sizes = s.sparkContext.broadcast(outChunks.toArray)
-      val packed = selected.sortByKey().map(_._2).zipWithIndex()
-        .map { case (v, i) => ((i / chunk).toInt, ((i % chunk).toInt, v)) }
-        .groupByKey()
-        .map { case (b, it) =>
-          val a = new Array[Double](sizes.value(b))
-          it.foreach { case (o, v) => a(o) = v }
-          ABlock(Seq(b), a)
-        }
+      val packed = Positions.pack(sorted, starts, 1, chunk)((kv, _) => kv._2)
+        .map { case (b, a) => ABlock(Seq(b), a) }
       val outBlocks = s.createDataset(packed)
         .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK_SER)
       outBlocks.count()
@@ -562,7 +552,7 @@ final case class GArr(shape: Seq[Long], chunks: Seq[Seq[Int]], blocks: Dataset[A
         val raw = b.data(i).toLong
         val srcIdx = if (raw < 0) raw + n else raw // numpy negative-index wrap
         require(srcIdx >= 0 && srcIdx < n, s"takeArr: index $raw out of bounds for length $n")
-        val ib = blockOf(S, srcIdx)
+        val ib = Positions.locate(S, srcIdx)
         val gpos = g0 + i
         out(i) = (ib.toLong * nSalt + (gpos % nSalt), gpos, (srcIdx - S(ib)).toInt)
         i += 1
@@ -592,7 +582,7 @@ final case class GArr(shape: Seq[Long], chunks: Seq[Seq[Int]], blocks: Dataset[A
         var r = 0
         while (r < rs.length) {
           val (gpos, srcLocal) = rs(r)
-          val jb = blockOf(T, gpos)
+          val jb = Positions.locate(T, gpos)
           val dstBid = bid.updated(ax, jb)
           val key = linearBidL(dstBid, dstGrid)
           val ddims = Array.tabulate(nd)(d => newChunksB(d)(dstBid(d)))
@@ -798,7 +788,7 @@ final case class GArr(shape: Seq[Long], chunks: Seq[Seq[Int]], blocks: Dataset[A
           require(idx >= 0 && idx < n,
             "vindex key has entries out of bounds for indexing along axis " +
               s"${axArr(a)} of size $n: $rawIdx")
-          val ib = blockOf(S(a), idx)
+          val ib = Positions.locate(S(a), idx)
           keyBlocks = keyBlocks * srcArrGrid(a) + ib
           locals(a) = (idx - S(a)(ib)).toInt
           a += 1
@@ -842,7 +832,7 @@ final case class GArr(shape: Seq[Long], chunks: Seq[Seq[Int]], blocks: Dataset[A
         val laneTotal = lanes.product
         val out = scala.collection.mutable.LinkedHashMap[Long, PieceBuf]()
         reqs.foreach { case (gpos, locals) =>
-          val jb = blockOf(T, gpos)
+          val jb = Positions.locate(T, gpos)
           val dstBid: Seq[Int] = jb +: nonAxesArr.toSeq.map(d => bid(d))
           val key = linearBidL(dstBid, dstGrid)
           val ddims = Array.tabulate(dstBid.length)(k => newChunksB(k)(dstBid(k)))
@@ -1156,7 +1146,7 @@ final case class GArr(shape: Seq[Long], chunks: Seq[Seq[Int]], blocks: Dataset[A
               val tgt = if (raw < 0) raw + n else raw // numpy negative wrap
               require(tgt >= 0 && tgt < n,
                 s"updatedAt: index $raw out of bounds for length $n")
-              val xb = blockOf(SB(d), tgt)
+              val xb = Positions.locate(SB(d), tgt)
               tb(i) = xb; tl(i) = (tgt - SB(d)(xb)).toInt
               i += 1
             }
@@ -1166,7 +1156,7 @@ final case class GArr(shape: Seq[Long], chunks: Seq[Seq[Int]], blocks: Dataset[A
             var i = 0
             while (i < vdims(d)) {
               val tgt = st0 + (vg0 + i) * step
-              val xb = blockOf(SB(d), tgt)
+              val xb = Positions.locate(SB(d), tgt)
               tb(i) = xb; tl(i) = (tgt - SB(d)(xb)).toInt
               i += 1
             }
@@ -1253,11 +1243,8 @@ final case class GArr(shape: Seq[Long], chunks: Seq[Seq[Int]], blocks: Dataset[A
     val maskCached = mask.blocks
       .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK_SER)
     val counts = maskCached.map(b => (b.bid(0), b.data.count(_ != 0.0).toLong)).collect().toMap
-    val nb = grid(0)
-    val offsets = new Array[Long](nb + 1)
-    var ib = 0
-    while (ib < nb) { offsets(ib + 1) = offsets(ib) + counts.getOrElse(ib, 0L); ib += 1 }
-    val k = offsets(nb)
+    val offsets = Positions.starts(counts, grid(0))
+    val k = offsets.last
     require(values.shape == Seq(k),
       s"maskedAssign: values length ${values.shape.head} != selected count $k")
     val V = startsOf(values.chunks(0))
@@ -1272,7 +1259,7 @@ final case class GArr(shape: Seq[Long], chunks: Seq[Seq[Int]], blocks: Dataset[A
       while (i < b.data.length) {
         if (b.data(i) != 0.0) {
           val gr = g0 + rank
-          val vb = blockOf(V, gr)
+          val vb = Positions.locate(V, gr)
           out += ((vb, (gr - V(vb)).toInt, b.bid(0), i))
           rank += 1
         }
@@ -1347,7 +1334,7 @@ final case class GArr(shape: Seq[Long], chunks: Seq[Seq[Int]], blocks: Dataset[A
     val V = startsOf(values.chunks(0))
     // requests keyed by VALUE block: (value local off, target key, bid, off)
     val requests = s.createDataset(selected.map { case ((key, bid, off), rank) =>
-      val vb = blockOf(V, rank)
+      val vb = Positions.locate(V, rank)
       (vb, 1, Array.empty[Double], key, bid, off, (rank - V(vb)).toInt)
     })
     val piecesIn = values.blocks
@@ -2015,8 +2002,8 @@ final case class GArr(shape: Seq[Long], chunks: Seq[Seq[Int]], blocks: Dataset[A
       val restDims = Array.tabulate(nd - 1)(j => sdims(if (j < axis) j else j + 1))
       val restTotal = if (restDims.isEmpty) 1 else restDims.product
       val acc = new Array[Double](restTotal * w)
-      var c = 0
-      while (c < restTotal) { init(acc, c * w); c += 1 }
+      var lane = 0
+      while (lane < restTotal) { init(acc, lane * w); lane += 1 }
       val t = new Array[Int](nd)
       val rstr = cStridesI(restDims)
       var i = 0
@@ -2032,14 +2019,14 @@ final case class GArr(shape: Seq[Long], chunks: Seq[Seq[Int]], blocks: Dataset[A
     }
     val reduced = partials.groupByKey(_._1)
       .reduceGroups { (x, y) =>
-        var c = 0
-        while (c * w < x._3.length) { merge(x._3, y._3, c * w); c += 1 }
+        var lane = 0
+        while (lane * w < x._3.length) { merge(x._3, y._3, lane * w); lane += 1 }
         x
       }
       .map { case (_, (_, restBid, acc)) =>
         val out = new Array[Double](acc.length / w)
-        var c = 0
-        while (c < out.length) { out(c) = finish(acc, c * w); c += 1 }
+        var lane = 0
+        while (lane < out.length) { out(lane) = finish(acc, lane * w); lane += 1 }
         ABlock(restBid, out)
       }
     GArr((0 until nd).filter(_ != axis).map(shape),
@@ -3484,7 +3471,7 @@ object GArr {
       var d = nd - 1
       while (d >= 0) {
         coord(d) = rem % shape(d); rem /= shape(d)
-        val ci = chunkOf(starts(d), coord(d))
+        val ci = Positions.locate(starts(d), coord(d))
         chunkIdx(d) = ci
         local(d) = (coord(d) - starts(d)(ci)).toInt
         d -= 1
@@ -3591,29 +3578,8 @@ object GArr {
   private[operators] def startsOf(cs: Seq[Int]): Array[Long] =
     cs.scanLeft(0L)(_ + _).toArray
 
-  /** Block index containing global position `idx` in a dim whose chunk
-    * boundaries are `starts` (length nblocks+1): binary search, O(log g).
-    */
-  private[operators] def blockOf(starts: Array[Long], idx: Long): Int = {
-    var lo = 0; var hi = starts.length - 2
-    while (lo < hi) {
-      val mid = (lo + hi + 1) >>> 1
-      if (starts(mid) <= idx) lo = mid else hi = mid - 1
-    }
-    lo
-  }
-
   private[operators] def chunkDim(starts: Array[Long], i: Int): Int =
     (starts(i + 1) - starts(i)).toInt
-
-  private[operators] def chunkOf(starts: Array[Long], coord: Long): Int = {
-    var lo = 0; var hi = starts.length - 2
-    while (lo < hi) {
-      val mid = (lo + hi + 1) >>> 1
-      if (starts(mid) <= coord) lo = mid else hi = mid - 1
-    }
-    lo
-  }
 
   private[operators] def cStrides(shape: Seq[Long]): Array[Long] = {
     val nd = shape.length
@@ -3664,14 +3630,11 @@ object GArr {
     lens.map(l => evenChunks(l, math.max(1, targetChunk)))
 
   /** 1-D array from a DataFrame column in a caller-defined total order —
-    * the `from_dask_dataframe`/`Series.values` bridge. Distributed sort +
-    * zipWithIndex (no single-partition window), then one groupBy to pack
-    * blocks.  The length comes out of the counts job itself (r15: the
-    * former separate `df.count()` was a free parquet-metadata read for
-    * bare scans but a FULL extra execution for sort+limit / filtered
-    * inputs — the einsum/pad queries build three heads each, so every
-    * fromColumn paid one whole TakeOrdered scan for a number the counts
-    * job already knew).
+    * the `from_dask_dataframe`/`Series.values` bridge. Distributed sort
+    * (no single-partition window), then the positional layer: one
+    * [[Positions.starts]] job and one [[Positions.pack]] shuffle. The
+    * length comes out of the counts job itself; no separate `df.count()`,
+    * which is a full extra execution for sort+limit or filtered inputs.
     */
   def fromColumn(df: DataFrame, valueCol: String, orderBy: Seq[String],
                  chunk: Int): GArr = {
@@ -3684,53 +3647,14 @@ object GArr {
       .select(col(valueCol).cast("double"))
     // InternalRow read (r15): Dataset.rdd would deserialize every element
     // to an external Row first; the primitive read needs no copy because
-    // the double is unboxed immediately
-    val rdd = InternalScan.rddOf(sorted).map(_.getDouble(0))
-    // per-partition counts -> global start offsets (the same extra job
-    // zipWithIndex pays; the sort's shuffle files are reused by the pack
-    // job below, so the sort itself runs once).  Long counter, not
-    // Iterator.size (an Int, wraps at 2^31 rows per partition).
-    val counts = rdd.mapPartitionsWithIndex { (pi, it) =>
-      var c = 0L; while (it.hasNext) { it.next(); c += 1 }
-      Iterator((pi, c))
-    }.collect().sortBy(_._1).map(_._2)
-    val offsets = counts.scanLeft(0L)(_ + _)
-    val n = offsets.last
+    // the double is unboxed immediately. The pack re-reads the sort's
+    // shuffle files, so the sort itself runs once.
+    val rdd = InternalScan.rddOf(sorted)
+    val starts = Positions.starts(rdd)
+    val n = starts.last
     val cs = evenChunks(n, chunk)
-    val bcOff = s.sparkContext.broadcast(offsets)
-    val sizes = s.sparkContext.broadcast(cs.toArray)
-    // pack contiguous per-partition SEGMENTS split at block boundaries:
-    // the assembly shuffle then carries a handful of packed Array[Double]
-    // records per block instead of one small tuple per ELEMENT — the same
-    // bytes, orders of magnitude fewer shuffle records
-    val packed = rdd.mapPartitionsWithIndex { (pi, it) =>
-      val g0 = bcOff.value(pi)
-      val segs = scala.collection.mutable.ArrayBuffer[(Int, (Int, Array[Double]))]()
-      var gpos = g0
-      var buf: scala.collection.mutable.ArrayBuilder.ofDouble = null
-      var segBlock = -1
-      var segOff = 0
-      def flush(): Unit =
-        if (buf != null) { segs += ((segBlock, (segOff, buf.result()))); buf = null }
-      while (it.hasNext) {
-        val v = it.next()
-        val b = (gpos / chunk).toInt
-        if (b != segBlock) {
-          flush()
-          buf = new scala.collection.mutable.ArrayBuilder.ofDouble
-          segBlock = b
-          segOff = (gpos % chunk).toInt
-        }
-        buf += v
-        gpos += 1
-      }
-      flush()
-      segs.iterator
-    }.groupByKey().map { case (b, it) =>
-      val a = new Array[Double](sizes.value(b))
-      it.foreach { case (o, seg) => System.arraycopy(seg, 0, a, o, seg.length) }
-      ABlock(Seq(b), a)
-    }
+    val packed = Positions.pack(rdd, starts, 1, chunk)((r, _) => r.getDouble(0))
+      .map { case (b, a) => ABlock(Seq(b), a) }
     GArr(Seq(n), Seq(cs), s.createDataset(packed))
   }
 
@@ -3739,7 +3663,7 @@ object GArr {
     * matrices (reference `dask/dataframe/dask_expr/_collection.py`
     * `.values`): rows become axis 0, `valueCols` become axis 1 (single
     * column-chunk, like dask's one-block column dimension). Same
-    * distributed sort + zipWithIndex + pack as [[fromColumn]].
+    * distributed sort and positional pack as [[fromColumn]].
     */
   def fromColumns(df: DataFrame, valueCols: Seq[String], orderBy: Seq[String],
                   chunk: Int): GArr = {
@@ -3752,34 +3676,14 @@ object GArr {
       .select((orderBy ++ valueCols).distinct.map(col): _*)
       .sort(orderBy.map(col): _*)
       .select(valueCols.map(c => col(c).cast("double")): _*)
-    // InternalRow read (r15): the tabulate copies the w doubles out of the
-    // reused row buffer immediately, so no row copy is needed.  Offsets
-    // come from one counts job (Long counter), replacing the former
-    // df.count() + zipWithIndex pair — one fewer execution of the input.
-    val rows0 = InternalScan.rddOf(sorted)
-      .map(r => Array.tabulate(w)(r.getDouble))
-    val counts = rows0.mapPartitionsWithIndex { (pi, it) =>
-      var c = 0L; while (it.hasNext) { it.next(); c += 1 }
-      Iterator((pi, c))
-    }.collect().sortBy(_._1).map(_._2)
-    val offsets = counts.scanLeft(0L)(_ + _)
-    val n = offsets.last
+    // InternalRow read (r15): the pack copies the w doubles out of the
+    // reused row buffer immediately, so no row copy is needed
+    val rdd = InternalScan.rddOf(sorted)
+    val starts = Positions.starts(rdd)
+    val n = starts.last
     val cs = evenChunks(n, chunk)
-    val bcOff = s.sparkContext.broadcast(offsets)
-    val sizes = s.sparkContext.broadcast(cs.toArray)
-    val packed = rows0
-      .mapPartitionsWithIndex { (pi, it) =>
-        var i = bcOff.value(pi)
-        it.map { v => val out = (v, i); i += 1; out }
-      }
-      .map { case (v, i) => ((i / chunk).toInt, ((i % chunk).toInt, v)) }
-      .groupByKey()
-      .map { case (b, it) =>
-        val rows = sizes.value(b)
-        val a = new Array[Double](rows * w)
-        it.foreach { case (o, v) => System.arraycopy(v, 0, a, o * w, w) }
-        ABlock(Seq(b, 0), a)
-      }
+    val packed = Positions.pack(rdd, starts, w, chunk)((r, j) => r.getDouble(j))
+      .map { case (b, a) => ABlock(Seq(b, 0), a) }
     GArr(Seq(n, w.toLong), Seq(cs, Seq(w)), s.createDataset(packed))
   }
 

@@ -639,7 +639,7 @@ object Linalg {
     val bcStarts = spark.sparkContext.broadcast(starts)
     val packed = rows.zipWithIndex().map { case (v, i) =>
       val st = bcStarts.value
-      val b = GArr.chunkOf(st, i)
+      val b = Positions.locate(st, i)
       (b, ((i - st(b)).toInt, v))
     }.groupByKey().map { case (b, it) =>
       val st = bcStarts.value
@@ -1283,8 +1283,8 @@ object Linalg {
       val rows = state.map { case ((bi, bj), d) =>
         val out = if (bi == bj) {
           val ld = new Array[Double](b * b)
-          var c = 0
-          while (c < b) { var r = c; while (r < b) { ld(c * b + r) = d(c * b + r); r += 1 }; c += 1 }
+          var j = 0
+          while (j < b) { var r = j; while (r < b) { ld(j * b + r) = d(j * b + r); r += 1 }; j += 1 }
           ld
         } else d
         Row(bi, bj, out.toSeq)
@@ -1308,8 +1308,8 @@ object Linalg {
     val lower = lowerDf.select(col("bi"), col("bj"), col("data"))
       .as[(Int, Int, Seq[Double])].map { case (bi, bj, d) =>
         val rm = new Array[Double](bs * bs)
-        var c = 0
-        while (c < bs) { var r = 0; while (r < bs) { rm(r * bs + c) = d(c * bs + r); r += 1 }; c += 1 }
+        var j = 0
+        while (j < bs) { var r = 0; while (r < bs) { rm(r * bs + j) = d(j * bs + r); r += 1 }; j += 1 }
         ABlock(Seq(bi, bj), rm)
       }
     val zeros = spark.range(nb.toLong * nb).map { flat: java.lang.Long =>

@@ -87,15 +87,19 @@ private[graft] object PrefixScan {
     InternalScan.toDF(df.sparkSession,
       apply(InternalScan.rddOf(df), carry, fold, backward)(emit), outSchema)
 
-  /** Range-partitions `df` on (group ++ order) and sorts each partition:
-    * groups become contiguous, and a hot group spans consecutive
-    * partitions instead of collapsing into one task.
+  /** Range-partitions `df` into `numPartitions` on (group ++ order) and
+    * sorts each partition: groups become contiguous, and a hot group spans
+    * consecutive partitions instead of collapsing into one task.
     */
-  def arrange(df: DataFrame, groupCols: Seq[String], order: Seq[Column]): DataFrame = {
+  def arrange(df: DataFrame, groupCols: Seq[String], order: Seq[Column],
+      numPartitions: Int): DataFrame = {
     val keys = groupCols.map(col) ++ order
-    df.repartitionByRange(df.sparkSession.sessionState.conf.numShufflePartitions, keys: _*)
-      .sortWithinPartitions(keys: _*)
+    df.repartitionByRange(numPartitions, keys: _*).sortWithinPartitions(keys: _*)
   }
+
+  /** [[arrange]] into the session's `numShufflePartitions`: the scan family's count. */
+  def arrange(df: DataFrame, groupCols: Seq[String], order: Seq[Column]): DataFrame =
+    arrange(df, groupCols, order, df.sparkSession.sessionState.conf.numShufflePartitions)
 
   /** Grouped form: a running per-group state `A` over `df` [[arrange]]d by
     * (group ++ order). `step` advances the state by one row, and the state

@@ -21,18 +21,12 @@ import org.apache.spark.sql.types.{DoubleType, StructField, StructType}
   *
   * This operator computes the identical value with no single-task
   * bound, guide §2.5/§5 style: range-partitioned distributed sort of
-  * the column (Spark samples bounds; every task holds only its range
-  * slice), one tiny job for per-partition counts, then a positional
-  * pick of the ≤ 2·|ps| order statistics each percentile interpolates
-  * between. Driver state: the partition-count array (O(npartitions)
-  * longs) and the picked scalars — metadata-sized, same class as the
-  * boundary collects the engine already does.  Since round 15 the sort
-  * runs through the SQL engine (`repartitionByRange` +
-  * `sortWithinPartitions`: UnsafeRow shuffle, codegen sort) and the two
-  * metadata jobs read the plan's own InternalRow RDD — the former RDD
-  * `sortBy` deserialized every row to an external object for the
-  * sample and shuffle passes and moved boxed values through Java
-  * serialization.
+  * the column through the SQL engine ([[PrefixScan.arrange]]: Spark
+  * samples bounds, every task holds only its range slice), then the
+  * positional layer ([[Positions]]): one job counts each partition and
+  * one job picks the ≤ 2·|ps| order statistics each percentile
+  * interpolates between. Driver state: O(npartitions) longs and the
+  * picked scalars.
   *
   * Bit-exactness contract: the result reproduces Spark's
   * `Percentile.getPercentile` arithmetic exactly —
@@ -58,18 +52,6 @@ import org.apache.spark.sql.types.{DoubleType, StructField, StructType}
   */
 object Quantile {
 
-  /** `Percentile.getPercentile`'s interpolation, bit-for-bit (see the
-    * scaladoc contract above).
-    */
-  private def interpolate(pos: Double, lowerVal: Double, higherVal: Double): Double =
-    if (java.lang.Double.doubleToLongBits(higherVal) ==
-        java.lang.Double.doubleToLongBits(lowerVal)) lowerVal
-    else {
-      val lower = pos.floor
-      val higher = pos.ceil
-      (higher - pos) * lowerVal + (pos - lower) * higherVal
-    }
-
   /** Exact percentiles of `colName` (cast to double, nulls dropped) at
     * probabilities `ps`. One distributed sort + two metadata jobs;
     * requires a non-empty column, like the declared queries it serves.
@@ -77,74 +59,50 @@ object Quantile {
   def exact(df: DataFrame, colName: String, ps: Seq[Double]): Array[Double] = {
     require(ps.nonEmpty && ps.forall(p => p >= 0.0 && p <= 1.0),
       s"percentile probabilities must be in [0,1]: $ps")
-    val spark = df.sparkSession
     // isNotNull, NOT na.drop(): the builtin counts NaN as a value
     // (ordered greatest) and na.drop would silently drop it too
     val vals = df.select(col(colName).cast("double").as("__v"))
       .filter(col("__v").isNotNull)
-    // the scan's partition count follows file layout, not data size — a
-    // 2-file replica gave the 40x sort ~4 partitions and its tasks
-    // spilled (r14, measured: 40x slower than 100x). Floor the sort
-    // parallelism at the session's shuffle setting: scale-adaptive
-    // (conf-driven), not a local core count.
-    val sortParts = math.max(InternalScan.rddOf(vals).getNumPartitions,
-      spark.conf.get("spark.sql.shuffle.partitions", "200").toInt)
     // SQL double ordering matches the builtin's physical order (NaN
     // greatest); rows whose whole content is the sort key make the two
     // passes below order-stable under shuffle-file reuse
-    val sorted = vals.repartitionByRange(sortParts, col("__v"))
-      .sortWithinPartitions("__v")
-    val srdd = InternalScan.rddOf(sorted)
-    // Long row counter (ADVICE r14: Iterator.size accumulates in an Int
-    // and silently wraps at 2^31 rows per partition — exactly the
-    // low-parallelism 100 TB regime this operator exists for)
-    val counts = srdd.mapPartitions({ it =>
-      var c = 0L
-      while (it.hasNext) { it.next(); c += 1 }
-      Iterator.single(c)
-    }, preservesPartitioning = true).collect()
-    val offsets = counts.scanLeft(0L)(_ + _) // offsets(p) = global index of partition p's first row
-    val n = offsets.last
+    val srdd = InternalScan.rddOf(
+      PrefixScan.arrange(vals, Nil, Seq(col("__v")), sortParts(vals)))
+    val starts = Positions.starts(srdd)
+    val n = starts.last
     require(n > 0, s"exact percentile over an empty column: $colName")
-    val maxPos = (n - 1).toDouble
-    val positions = ps.map(maxPos * _)
-    val needed = positions.flatMap(pos =>
-      Seq(pos.floor.toLong, pos.ceil.toLong)).distinct
-    // global index -> (owning partition, index within it); empty
-    // partitions make offsets non-strict, so take the LAST partition
-    // whose range still contains g
-    def locate(g: Long): (Int, Long) = {
-      var p = 0
-      while (p + 1 < counts.length && offsets(p + 1) <= g) p += 1
-      (p, g - offsets(p))
+    val positions = ps.map((n - 1).toDouble * _)
+    val needed = positions.flatMap(pos => Seq(pos.floor.toLong, pos.ceil.toLong)).distinct
+    val picked = Positions.gather(srdd, starts, needed.map((_, 1)))(_.getDouble(0))
+      .collect().toMap
+    positions.map(percentileAt(_, picked)).toArray
+  }
+
+  /** The scan's partition count follows file layout, not data size — a
+    * 2-file replica gave the 40x sort ~4 partitions and its tasks spilled
+    * (r14, measured: 40x slower than 100x). So the sort parallelism is
+    * floored at the session's shuffle setting: scale-adaptive
+    * (conf-driven), not a local core count.
+    */
+  private def sortParts(df: DataFrame): Int =
+    math.max(InternalScan.rddOf(df).getNumPartitions,
+      df.sparkSession.sessionState.conf.defaultNumShufflePartitions)
+
+  /** The percentile at position `pos` over the order statistics `at(i)`:
+    * `Percentile.getPercentile`'s interpolation, bit-for-bit (see the
+    * scaladoc contract above).
+    */
+  private def percentileAt(pos: Double, at: Long => Double): Double = {
+    val lower = pos.floor
+    val higher = pos.ceil
+    val lowerVal = at(lower.toLong)
+    if (higher == lower) lowerVal
+    else {
+      val higherVal = at(higher.toLong)
+      if (java.lang.Double.doubleToLongBits(higherVal) ==
+          java.lang.Double.doubleToLongBits(lowerVal)) lowerVal
+      else (higher - pos) * lowerVal + (pos - lower) * higherVal
     }
-    val byPart: Map[Int, Seq[(Long, Long)]] = // partition -> (localIdx, globalIdx)
-      needed.map { g => val (p, l) = locate(g); (p, (l, g)) }
-        .groupBy(_._1).map { case (p, xs) => p -> xs.map(_._2) }
-    val bc = srdd.sparkContext.broadcast(byPart)
-    val picked: Map[Long, Double] = srdd.mapPartitionsWithIndex { (p, it) =>
-      bc.value.get(p) match {
-        case None => Iterator.empty
-        case Some(wanted) =>
-          val want = wanted.toMap // localIdx -> globalIdx
-          var i = 0L
-          val out = Seq.newBuilder[(Long, Double)]
-          while (it.hasNext) {
-            val v = it.next().getDouble(0)
-            want.get(i).foreach(g => out += ((g, v)))
-            i += 1
-          }
-          out.result().iterator
-      }
-    }.collect().toMap
-    bc.destroy()
-    positions.map { pos =>
-      val lower = pos.floor.toLong
-      val higher = pos.ceil.toLong
-      val lowerVal = picked(lower)
-      if (higher == lower) lowerVal
-      else interpolate(pos, lowerVal, picked(higher))
-    }.toArray
   }
 
   /** Grouped exact percentiles with NO whole-group task: the holistic
@@ -156,8 +114,9 @@ object Quantile {
     * fact in one buffer at 100 TB). Here the (group, value) pairs are
     * range-sorted so groups are contiguous AND hot groups span
     * partitions; per-partition (group, count, localStart) run summaries —
-    * O(npartitions + ngroups) driver metadata — locate each group's
-    * target order statistics, and one pick job fetches them.
+    * O(npartitions + ngroups) driver metadata — give each group's global
+    * first index and size, and one [[Positions.gather]] job fetches the
+    * order statistics.
     * Interpolation reproduces the builtin bit-for-bit (same contract as
     * [[exact]], QuantileSpec pins it per group).
     *
@@ -195,15 +154,11 @@ object Quantile {
         .select(col(groupCol) +: ps.indices.map(i =>
           col("__ps").getItem(i).as(s"p$i")): _*)
 
-    // same scan-layout-independent sort parallelism as [[exact]]
-    val sortParts = math.max(InternalScan.rddOf(base).getNumPartitions,
-      spark.conf.get("spark.sql.shuffle.partitions", "200").toInt)
     // range partition + sort on the COMPOSITE (group, value) key: groups
     // contiguous, hot groups span partitions, value order within group.
     // The whole row is the sort key, so both metadata jobs below see the
     // same order under shuffle-file reuse.
-    val sorted = base.repartitionByRange(sortParts, col(groupCol), col("__v"))
-      .sortWithinPartitions(col(groupCol), col("__v"))
+    val sorted = PrefixScan.arrange(base, Seq(groupCol), Seq(col("__v")), sortParts(base))
     val schema = sorted.schema
     val srdd = InternalScan.rddOf(sorted)
     // contiguous (group key, count, within-partition offset) runs; group
@@ -228,71 +183,25 @@ object Quantile {
         if (curKey != null) runs += ((curKey, curCount, curStart))
         Iterator.single((p, runs.toSeq))
       }.collect().sortBy(_._1)
-    // dense group codes in first-appearance (= sort) order
-    val codeOf = scala.collection.mutable.LinkedHashMap.empty[UnsafeRow, Int]
-    // per group: ordered segment list (partition, localStart, count)
-    val perGroup = scala.collection.mutable.LinkedHashMap
-      .empty[Int, scala.collection.mutable.ArrayBuffer[(Int, Long, Long)]]
+    val starts = Positions.starts(
+      segments.map { case (p, runs) => p -> runs.map(_._2).sum }.toMap, srdd.getNumPartitions)
+    // per group, in sort order: (global index of its first row, size)
+    val groups = scala.collection.mutable.LinkedHashMap.empty[UnsafeRow, (Long, Long)]
     for ((p, runs) <- segments; (key, count, localStart) <- runs) {
-      val k = codeOf.getOrElseUpdate(key, codeOf.size)
-      perGroup.getOrElseUpdate(k,
-        scala.collection.mutable.ArrayBuffer.empty[(Int, Long, Long)]) +=
-        ((p, localStart, count))
+      val (first, size) = groups.getOrElse(key, (starts(p) + localStart, 0L))
+      groups(key) = (first, size + count)
     }
-    // group's k-th value -> (partition, local index), via the segment walk
-    def locate(segs: Seq[(Int, Long, Long)], k: Long): (Int, Long) = {
-      var seen = 0L
-      for ((p, start, c) <- segs) {
-        if (k < seen + c) return (p, start + (k - seen))
-        seen += c
-      }
-      throw new IllegalStateException(s"order statistic $k beyond group size $seen")
-    }
-    val wanted = scala.collection.mutable.Map
-      .empty[Int, scala.collection.mutable.Map[Long, (Int, Long)]]
-    val positionsByGroup = perGroup.map { case (k, segs) =>
-      val n = segs.map(_._3).sum
-      val maxPos = (n - 1).toDouble
-      val positions = ps.map(maxPos * _)
-      positions.flatMap(pos => Seq(pos.floor.toLong, pos.ceil.toLong))
-        .distinct.foreach { idx =>
-          val (p, local) = locate(segs.toSeq, idx)
-          wanted.getOrElseUpdate(p, scala.collection.mutable.Map.empty)
-            .update(local, (k, idx))
-        }
-      k -> positions
-    }
-    val bc = srdd.sparkContext.broadcast(
-      wanted.map { case (p, m) => p -> m.toMap }.toMap)
-    val picked: Map[(Int, Long), Double] =
-      srdd.mapPartitionsWithIndex { (p, it) =>
-        bc.value.get(p) match {
-          case None => Iterator.empty
-          case Some(want) =>
-            var i = 0L
-            val out = Seq.newBuilder[((Int, Long), Double)]
-            while (it.hasNext) {
-              val v = it.next().getDouble(1)
-              want.get(i).foreach(slot => out += ((slot, v)))
-              i += 1
-            }
-            out.result().iterator
-        }
-      }.collect().toMap
-    bc.destroy()
-    val keyByCode = codeOf.map { case (key, k) => k -> key }
+    val perGroup = groups.toSeq.map { case (key, (first, size)) =>
+      (key, first, ps.map((size - 1).toDouble * _)) }
+    val needed = perGroup.flatMap { case (_, first, pos) =>
+      pos.flatMap(x => Seq(first + x.floor.toLong, first + x.ceil.toLong)).distinct }
+    val picked = Positions.gather(srdd, starts, needed.map((_, 1)))(_.getDouble(1))
+      .collect().toMap
     val toExternal = GraftSqlShim.toScalaConverter(groupField.dataType)
-    val rows = positionsByGroup.map { case (k, positions) =>
-      val vals = positions.map { pos =>
-        val lower = pos.floor.toLong
-        val higher = pos.ceil.toLong
-        val lowerVal = picked((k, lower))
-        if (higher == lower) lowerVal
-        else interpolate(pos, lowerVal, picked((k, higher)))
-      }
-      val groupValue = toExternal(keyByCode(k).get(0, groupField.dataType))
-      Row.fromSeq(groupValue +: vals)
-    }.toSeq
+    val rows = perGroup.map { case (key, first, pos) =>
+      val groupValue = toExternal(key.get(0, groupField.dataType))
+      Row.fromSeq(groupValue +: pos.map(percentileAt(_, i => picked(first + i))))
+    }
     val outSchema = StructType(
       groupField.copy(nullable = true) +:
         ps.indices.map(i => StructField(s"p$i", DoubleType, nullable = false)))

@@ -144,6 +144,28 @@ class EdgeCasesSpec extends SparkTestBase {
     }
     val acc = graft.api.GBag(df.select("idx").as[Long]).accumulate(_ + _).ds.coalesce(1).collect()
     assert(acc.toSeq.sorted == (0 until 40).map(i => (0 to i).sum.toLong), "accumulate")
+
+    // the positional operators: a count pass, then a pick or pack pass that
+    // must address the same splits
+    val x = df.withColumn("x", col("idx").cast("double")).withColumn("y", -col("x"))
+    val fc = GArr.fromColumn(x, "x", Seq("idx"), chunk = 6)
+    val fcGot = fc.copy(blocks = fc.blocks.coalesce(1)).toIndexedDF
+      .select("idx", "value").as[(Long, Double)].collect().toMap
+    assert(fcGot == (0 until 40).map(i => i.toLong -> i.toDouble).toMap, "fromColumn")
+    val fcs = GArr.fromColumns(x, Seq("x", "y"), Seq("idx"), chunk = 6)
+    val fcsGot = fcs.copy(blocks = fcs.blocks.coalesce(1)).toIndexedDF
+      .select("idx", "value").as[(Long, Double)].collect().toMap
+    assert(fcsGot == (0 until 80).map(f => f.toLong -> (if (f % 2 == 0) 1.0 else -1.0) * (f / 2)).toMap,
+      "fromColumns")
+    // Floyd's draw over [0, 40) with the operator's seed; position g holds idx g
+    val rng = new java.util.Random(3L)
+    val chosen = scala.collection.mutable.HashSet[Long]()
+    for (j <- 33L until 40L) {
+      val t = math.floorMod(rng.nextLong(), j + 1)
+      if (!chosen.add(t)) chosen.add(j)
+    }
+    val smp = graft.api.GBag(df.select("idx").as[Long]).sample(7, seed = 3L).ds.coalesce(1).collect()
+    assert(smp.toSet == chosen.toSet && smp.length == 7, "sample")
   }
 
   test("idxmin/idxmax skip null values (pandas skipna)") {

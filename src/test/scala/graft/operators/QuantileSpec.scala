@@ -161,6 +161,27 @@ class QuantileSpec extends SparkTestBase {
     a.foreach { case (k, g) => assert(g == b(k), s"group $k") }
   }
 
+  test("signed zeros: -0.0 and 0.0 together match the builtin by ==, not by bits") {
+    // the documented divergence: the SQL sort ties -0.0 with 0.0 where the
+    // builtin orders -0.0 first, so a statistic inside the zero run may be
+    // the other zero; every result must still be == to the builtin's
+    val zs: Seq[java.lang.Double] = Seq(0.0, -1.0, -0.0, 0.0, -0.0, 2.0, -0.0, 0.0)
+    val g = Quantile.exact(mkDf(zs), "v", probes)
+    val w = builtin(mkDf(zs), "v", probes)
+    g.zip(w).zip(probes).foreach { case ((a, b), p) => assert(a == b, s"p=$p: $a vs $b") }
+    val rows = zs.map(v => Row("z", v)) ++ Seq(Row("y", -0.0), Row("y", 0.0), Row("y", 3.0))
+    val df = spark.createDataFrame(spark.sparkContext.parallelize(rows, 3),
+      StructType(Seq(StructField("g", org.apache.spark.sql.types.StringType),
+        StructField("v", DoubleType))))
+    val got = Quantile.exactGrouped(df, "g", "v", probes)
+      .collect().map(r => r.getString(0) -> probes.indices.map(i => r.getDouble(i + 1))).toMap
+    val want = df.groupBy(col("g")).agg(percentile(col("v"), array(probes.map(lit): _*)))
+      .collect().map(r => r.getString(0) -> r.getSeq[Double](1)).toMap
+    assert(got.keySet == Set("y", "z") && got.keySet == want.keySet)
+    for (k <- got.keySet; i <- probes.indices)
+      assert(got(k)(i) == want(k)(i), s"group $k p=${probes(i)}: ${got(k)(i)} vs ${want(k)(i)}")
+  }
+
   test("empty and out-of-range inputs are refused") {
     val empty = mkDf(Seq.empty)
     intercept[IllegalArgumentException] {

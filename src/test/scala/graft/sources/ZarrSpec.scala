@@ -173,4 +173,20 @@ class ZarrSpec extends SparkTestBase {
     val causes = Iterator.iterate[Throwable](e)(_.getCause).takeWhile(_ != null)
     assert(causes.exists(_.isInstanceOf[org.apache.hadoop.fs.ChecksumException]), e.toString)
   }
+
+  test("q169 writes its store into a directory deleted at JVM exit") {
+    val tmp = new java.io.File(System.getProperty("java.io.tmpdir")).getCanonicalFile
+    def stores = tmp.listFiles().filter(_.getName.startsWith("graft_zarr_q169")).toSet
+    import org.apache.spark.sql.functions.{col, lit}
+    val in = java.nio.file.Files.createTempDirectory("q169_in").toString
+    spark.range(6000).select(col("id").as("l_orderkey"), lit(1).as("l_linenumber"),
+      col("id").as("l_partkey"), col("id").as("l_suppkey"), (col("id") / 100).as("l_extendedprice"))
+      .write.parquet(s"$in/lineitem.parquet")
+    val before = stores
+    graft.SparkEntry.queries("q169_zarr_roundtrip")(spark, in).collect()
+    val made = stores -- before
+    assert(made.size == 1, s"q169 made $made")
+    assert(org.apache.spark.sql.GraftSqlShim.isShutdownDeleteDir(made.head),
+      s"${made.head} is not registered for deletion at JVM exit")
+  }
 }
