@@ -8,6 +8,10 @@ import org.apache.spark.sql.{DataFrame, Dataset, SparkSession}
   */
 final case class CBlock(bid: Seq[Int], re: Array[Double], im: Array[Double])
 
+/** Complex strip piece shuffled between FFT phases. */
+final case class CPiece(strip: Int, offs: Array[Int],
+                        re: Array[Double], im: Array[Double])
+
 /** Distributed chunked COMPLEX ndarray — the complex128 arrays dask's FFT
   * surface produces (reference `dask/array/fft.py:118-251`, where every
   * `fft_wrap`ped transform returns a complex dask array that downstream
@@ -192,8 +196,8 @@ object CArr {
   * — here by an automatic one-shuffle rechunk instead of an error — and
   * the per-lane transform is then a NARROW map batched over every other
   * axis's chunking. For a 1-D array too large for one block, use the
-  * genuinely distributed four-step [[SpectralFft.fft1d]] /
-  * [[ComplexFft.fft1dC]] instead, which this module complements.
+  * genuinely distributed four-step [[fft1dC]] / [[fft1dArr]] instead
+  * ([[SpectralFft.fft1d]] runs the same core on real input).
   */
 object ComplexFft {
   import GArr.{startsOf, chunkDim, cStridesI}
@@ -396,25 +400,47 @@ object ComplexFft {
   }
 
   // --------------------------------------------------------------------
-  // Distributed 1-D complex-input four-step (the scale path for a
-  // transform axis too large for one block; see SpectralFft.fft1d for the
-  // real-input variant and the algorithm notes).
+  // Distributed 1-D four-step (the scale path for a transform axis too
+  // large for one block; the algorithm notes are in SpectralFft's header).
+  // One core serves real input (SpectralFft.fft1d: phase 1 ships no
+  // imaginary plane) and complex input (fft1dC, fft1dArr).
   // --------------------------------------------------------------------
 
-  /** Phases 1–2 of the four-step FFT of a COMPLEX 1-D [[CArr]] — identical
-    * phase structure to [[SpectralFft.fft1d]] (two all-to-all strip
-    * exchanges, local FFTs sized to `targetElems`), with the imaginary
-    * plane carried through phase 1 (the real-input variant elides it).
-    * Returns the row-strip pieces plus the (n1, n2, w1) decomposition; the
-    * callers finalize to bins-as-rows ([[fft1dC]]) or to a chunked
-    * spectrum array ([[fft1dArr]]).
+  /** Phase 3's layout of a four-step transform of length `n1·n2`: row
+    * strips `w1` rows high, each row an FFT of length `n2`.
     */
-  private def fourStepRowPieces(x: CArr, targetElems: Int): (Dataset[CPiece], Int, Int, Int) = {
-    require(x.ndim == 1, "four-step FFT takes a 1-D array")
-    val n = x.shape.head
+  private final case class FourStep(n1: Int, n2: Int, w1: Int)
+
+  /** Offset and plane builders per destination key (a strip or a block)
+    * of one task's scatter; `pieces` emits one [[CPiece]] per key.
+    */
+  private final class PieceBufs {
+    import scala.collection.mutable.{ArrayBuilder, LinkedHashMap}
+    private val bufs =
+      LinkedHashMap[Int, (ArrayBuilder[Int], ArrayBuilder[Double], ArrayBuilder[Double])]()
+    def at(key: Int): (ArrayBuilder[Int], ArrayBuilder[Double], ArrayBuilder[Double]) =
+      bufs.getOrElseUpdate(key,
+        (ArrayBuilder.make[Int], ArrayBuilder.make[Double], ArrayBuilder.make[Double]))
+    def pieces: Iterator[CPiece] = bufs.iterator.map { case (key, (ob, rb, ib)) =>
+      CPiece(key, ob.result(), rb.result(), ib.result())
+    }
+  }
+
+  /** Phases 1–2 of the four-step FFT of a 1-D array (two all-to-all strip
+    * exchanges, local FFTs sized to `targetElems`). `planes` gives a
+    * block's index on the 1-D grid `chunks`, its real plane and its
+    * imaginary plane; an empty imaginary plane (real input) is not
+    * shipped. Returns the row-strip pieces phase 3 transforms
+    * ([[rowStripBins]]).
+    */
+  private def fourStepRowPieces[B](blocks: Dataset[B], n: Long, chunks: Seq[Int],
+                                   targetElems: Int)(
+      planes: B => (Int, Array[Double], Array[Double])): (Dataset[CPiece], FourStep) = {
     require(n >= 1, "four-step FFT needs a nonempty array")
-    val s = x.blocks.sparkSession
+    val s = blocks.sparkSession
     import s.implicits._
+    // largest divisor of n that is <= sqrt(n) (for pow2 this is the usual
+    // half-split; for primes it is 1)
     val n2 = {
       var d = math.sqrt(n.toDouble).toLong
       while (d > 1 && n % d != 0) d -= 1
@@ -423,35 +449,27 @@ object ComplexFft {
     val n1 = (n / n2).toInt
     val w2 = math.max(1, math.min(n2, targetElems / math.max(n1, 1)))
     val w1 = math.max(1, math.min(n1, targetElems / math.max(n2, 1)))
-    val starts = startsOf(x.chunks.head)
-    val nL = n
+    val starts = startsOf(chunks)
 
-    // phase 1: 1-D blocks -> column strips (complex payload)
-    val colPieces: Dataset[CPiece] = x.blocks.flatMap { b =>
-      val g0 = starts(b.bid.head)
-      val bufs = scala.collection.mutable.LinkedHashMap[Int,
-        (scala.collection.mutable.ArrayBuilder[Int],
-         scala.collection.mutable.ArrayBuilder[Double],
-         scala.collection.mutable.ArrayBuilder[Double])]()
+    // phase 1: 1-D blocks -> column strips
+    val colPieces: Dataset[CPiece] = blocks.flatMap { blk =>
+      val (bid, re, im) = planes(blk)
+      val g0 = starts(bid)
+      val bufs = new PieceBufs
       var i = 0
-      while (i < b.re.length) {
+      while (i < re.length) {
         val gi = g0 + i
         val n1i = (gi / n2).toInt
         val n2i = (gi % n2).toInt
         val strip = n2i / w2
         val wCols = math.min(w2, n2 - strip * w2)
-        val (ob, rb, ib) = bufs.getOrElseUpdate(strip,
-          (scala.collection.mutable.ArrayBuilder.make[Int],
-           scala.collection.mutable.ArrayBuilder.make[Double],
-           scala.collection.mutable.ArrayBuilder.make[Double]))
+        val (ob, rb, ib) = bufs.at(strip)
         ob += n1i * wCols + (n2i - strip * w2)
-        rb += b.re(i)
-        ib += b.im(i)
+        rb += re(i)
+        if (im.nonEmpty) ib += im(i)
         i += 1
       }
-      bufs.iterator.map { case (strip, (ob, rb, ib)) =>
-        CPiece(strip, ob.result(), rb.result(), ib.result())
-      }
+      bufs.pieces
     }
 
     // phase 2: per-strip column FFTs + twiddle, re-strip by rows
@@ -478,7 +496,7 @@ object ComplexFft {
           val g2 = strip * w2 + c
           var k1 = 0
           while (k1 < n1) {
-            val ang = -2.0 * math.Pi * g2 * k1 / nL
+            val ang = -2.0 * math.Pi * g2 * k1 / n
             val cr = math.cos(ang); val ci = math.sin(ang)
             val vr = tre(k1) * cr - tim(k1) * ci
             val vi = tre(k1) * ci + tim(k1) * cr
@@ -510,41 +528,61 @@ object ComplexFft {
           CPiece(t, offs, ore, oim)
         }
     }
-    (rowPieces, n1, n2, w1)
+    (rowPieces, FourStep(n1, n2, w1))
+  }
+
+  /** Phase 3 of the four-step FFT for row strip `t`: assembles the strip
+    * from its pieces, runs the length-`n2` FFT of each row and passes each
+    * final bin `(k, re, im)` to `emit`.
+    */
+  private def rowStripBins(p: FourStep, t: Int, pieces: Iterator[CPiece])(
+      emit: (Long, Double, Double) => Unit): Unit = {
+    val n2 = p.n2
+    val rows = math.min(p.w1, p.n1 - t * p.w1)
+    val re = new Array[Double](rows * n2)
+    val im = new Array[Double](rows * n2)
+    pieces.foreach { pc =>
+      var i = 0
+      while (i < pc.offs.length) { re(pc.offs(i)) = pc.re(i); im(pc.offs(i)) = pc.im(i); i += 1 }
+    }
+    val tre = new Array[Double](n2)
+    val tim = new Array[Double](n2)
+    var r = 0
+    while (r < rows) {
+      val k1 = t * p.w1 + r
+      System.arraycopy(re, r * n2, tre, 0, n2)
+      System.arraycopy(im, r * n2, tim, 0, n2)
+      fftLocalAny(tre, tim)
+      var k2 = 0
+      while (k2 < n2) {
+        emit(k1 + p.n1.toLong * k2, tre(k2), tim(k2))
+        k2 += 1
+      }
+      r += 1
+    }
+  }
+
+  /** The four-step FFT of a 1-D array (see [[fourStepRowPieces]] for
+    * `planes`), bins as `(k, re, im)` rows.
+    */
+  private[operators] def fourStepBins[B](blocks: Dataset[B], n: Long, chunks: Seq[Int],
+                                         targetElems: Int)(
+      planes: B => (Int, Array[Double], Array[Double])): DataFrame = {
+    val s = blocks.sparkSession
+    import s.implicits._
+    val (rowPieces, p) = fourStepRowPieces(blocks, n, chunks, targetElems)(planes)
+    rowPieces.groupByKey(_.strip).flatMapGroups { (t, it) =>
+      val out = scala.collection.mutable.ArrayBuffer[(Long, Double, Double)]()
+      rowStripBins(p, t, it)((k, re, im) => out += ((k, re, im)))
+      out
+    }.toDF("k", "re", "im")
   }
 
   /** Distributed complex four-step FFT, bins as (k, re, im) rows. */
   def fft1dC(x: CArr, targetElems: Int = 65536): DataFrame = {
-    val s = x.blocks.sparkSession
-    import s.implicits._
-    val (rowPieces, n1, n2, w1) = fourStepRowPieces(x, targetElems)
-    // phase 3: per-row-strip FFTs over n2, emit final bins
-    rowPieces.groupByKey(_.strip).flatMapGroups { (t, it) =>
-      val rows = math.min(w1, n1 - t * w1)
-      val re = new Array[Double](rows * n2)
-      val im = new Array[Double](rows * n2)
-      it.foreach { p =>
-        var i = 0
-        while (i < p.offs.length) { re(p.offs(i)) = p.re(i); im(p.offs(i)) = p.im(i); i += 1 }
-      }
-      val tre = new Array[Double](n2)
-      val tim = new Array[Double](n2)
-      val out = scala.collection.mutable.ArrayBuffer[(Long, Double, Double)]()
-      var r = 0
-      while (r < rows) {
-        val k1 = t * w1 + r
-        System.arraycopy(re, r * n2, tre, 0, n2)
-        System.arraycopy(im, r * n2, tim, 0, n2)
-        fftLocalAny(tre, tim)
-        var k2 = 0
-        while (k2 < n2) {
-          out += ((k1 + n1.toLong * k2, tre(k2), tim(k2)))
-          k2 += 1
-        }
-        r += 1
-      }
-      out
-    }.toDF("k", "re", "im")
+    require(x.ndim == 1, "four-step FFT takes a 1-D array")
+    fourStepBins(x.blocks, x.shape.head, x.chunks.head, targetElems)(b =>
+      (b.bid.head, b.re, b.im))
   }
 
   /** Distributed complex four-step FFT returning a CHUNKED spectrum [[CArr]]
@@ -557,52 +595,24 @@ object ComplexFft {
     * of total length.
     */
   def fft1dArr(x: CArr, targetElems: Int = 65536, outChunk: Int = 65536): CArr = {
+    require(x.ndim == 1, "four-step FFT takes a 1-D array")
     val s = x.blocks.sparkSession
     import s.implicits._
     val n = x.shape.head
-    val (rowPieces, n1, n2, w1) = fourStepRowPieces(x, targetElems)
+    val (rowPieces, p) = fourStepRowPieces(x.blocks, n, x.chunks.head, targetElems)(b =>
+      (b.bid.head, b.re, b.im))
     val outChunks = GArr.evenChunks(n, outChunk)
     val oc = outChunk
-    // phase 3: per-row-strip FFTs over n2, bins bucketed per destination
-    // block of the output grid
+    // phase 3, bins bucketed per destination block of the output grid
     val pieces = rowPieces.groupByKey(_.strip).flatMapGroups { (t, it) =>
-      val rows = math.min(w1, n1 - t * w1)
-      val re = new Array[Double](rows * n2)
-      val im = new Array[Double](rows * n2)
-      it.foreach { p =>
-        var i = 0
-        while (i < p.offs.length) { re(p.offs(i)) = p.re(i); im(p.offs(i)) = p.im(i); i += 1 }
+      val bufs = new PieceBufs
+      rowStripBins(p, t, it) { (k, re, im) =>
+        val (ob, rb, ib) = bufs.at((k / oc).toInt)
+        ob += (k % oc).toInt
+        rb += re
+        ib += im
       }
-      val tre = new Array[Double](n2)
-      val tim = new Array[Double](n2)
-      val bufs = scala.collection.mutable.LinkedHashMap[Int,
-        (scala.collection.mutable.ArrayBuilder[Int],
-         scala.collection.mutable.ArrayBuilder[Double],
-         scala.collection.mutable.ArrayBuilder[Double])]()
-      var r = 0
-      while (r < rows) {
-        val k1 = t * w1 + r
-        System.arraycopy(re, r * n2, tre, 0, n2)
-        System.arraycopy(im, r * n2, tim, 0, n2)
-        fftLocalAny(tre, tim)
-        var k2 = 0
-        while (k2 < n2) {
-          val k = k1 + n1.toLong * k2
-          val dst = (k / oc).toInt
-          val (ob, rb, ib) = bufs.getOrElseUpdate(dst,
-            (scala.collection.mutable.ArrayBuilder.make[Int],
-             scala.collection.mutable.ArrayBuilder.make[Double],
-             scala.collection.mutable.ArrayBuilder.make[Double]))
-          ob += (k % oc).toInt
-          rb += tre(k2)
-          ib += tim(k2)
-          k2 += 1
-        }
-        r += 1
-      }
-      bufs.iterator.map { case (dst, (ob, rb, ib)) =>
-        CPiece(dst, ob.result(), rb.result(), ib.result())
-      }
+      bufs.pieces
     }
     val blocks = pieces.groupByKey(_.strip).mapGroups { (dst, it) =>
       val size = outChunks(dst)

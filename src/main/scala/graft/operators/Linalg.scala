@@ -1,10 +1,14 @@
 package graft.operators
 
+import org.apache.spark.HashPartitioner
 import org.apache.spark.mllib.linalg.{DenseMatrix, Matrix, Vectors}
 import org.apache.spark.mllib.linalg.distributed.RowMatrix
 import org.apache.spark.rdd.RDD
-import org.apache.spark.sql.{Column, DataFrame}
+import org.apache.spark.sql.{Column, DataFrame, Row, SparkSession}
 import org.apache.spark.sql.functions._
+import org.apache.spark.sql.types.{ArrayType, DoubleType, IntegerType, StructField, StructType}
+import org.apache.spark.storage.StorageLevel
+import scala.reflect.ClassTag
 
 /** Distributed linear algebra for the array module's linalg family
   * (SURVEY §2.11): tall-skinny QR (`dask/array/linalg.py:60` `tsqr`), SVD
@@ -291,7 +295,168 @@ object Linalg {
     (dec.Vt.t * coef).toArray
   }
 
-  // ---- blocked LU (reference `dask/array/linalg.py:978` `lu`) ----------
+  // ---- blocked elimination (reference `dask/array/linalg.py:978` lu,
+  // `:1114` solve_triangular, `:1295` cholesky) ---------------------------
+
+  /** Keyed block state: `((bi, bj), block)`, blocks column-major. */
+  private type Blocks = RDD[((Int, Int), Array[Double])]
+
+  /** Schema of every `(bi, bj, data)` block DataFrame in this module. */
+  private val blockSchema = StructType(Seq(StructField("bi", IntegerType),
+    StructField("bj", IntegerType), StructField("data", ArrayType(DoubleType))))
+
+  /** Keyed blocks as a `(bi, bj, data)` DataFrame. */
+  private def blockFrame(spark: SparkSession, blocks: Blocks): DataFrame =
+    spark.createDataFrame(blocks.map { case ((bi, bj), d) => Row(bi, bj, d.toSeq) },
+      blockSchema)
+
+  /** A `(bi, bj, data)` DataFrame as keyed blocks, each checked to be b×b. */
+  private def keyedBlocks(df: DataFrame, op: String, b: Int): Blocks =
+    df.select(col("bi"), col("bj"), col("data")).rdd.map { r =>
+      val d = r.getSeq[Double](2).toArray
+      require(d.length == b * b, s"$op: block must be ${b}x$b, got ${d.length}")
+      ((r.getInt(0), r.getInt(1)), d)
+    }
+
+  /** Row-major copy of a column-major `rows×cols` block. A row-major
+    * `rows×cols` block is a column-major `cols×rows` one, so
+    * `colToRowMajor(a, cols, rows)` converts the other way.
+    */
+  private def colToRowMajor(a: Array[Double], rows: Int, cols: Int): Array[Double] = {
+    val out = new Array[Double](a.length)
+    var c = 0
+    while (c < cols) {
+      var r = 0
+      while (r < rows) { out(r * cols + c) = a(c * rows + r); r += 1 }
+      c += 1
+    }
+    out
+  }
+
+  private def requireGrid(op: String, what: String, expected: Long, found: Long): Unit =
+    if (found != expected) throw new IllegalArgumentException(
+      s"$op: the block grid must hold $what: expected $expected blocks, found $found")
+
+  /** Block `(i, i)`, collected to the driver (one job). */
+  private def diagBlock(blocks: Blocks, i: Int, op: String): Array[Double] =
+    blocks.filter(_._1 == (i, i)).map(_._2).collect().headOption.getOrElse(
+      throw new IllegalArgumentException(s"$op: diagonal block ($i,$i) is missing"))
+
+  /** The right-looking blocked elimination under [[lu]], [[cholesky]] and
+    * [[solveTriangular]]: one round per pivot `i` of `rounds`, each
+    *   1. `factor(i, state)` on the driver: the round's diagonal step, which
+    *      collects the b×b diagonal block it needs (the only matrix data the
+    *      driver sees); its result is broadcast;
+    *   2. `panel` over every block in one partition-preserving map: the
+    *      round's panel solve under the broadcast factor (identity off the
+    *      panels);
+    *   3. the trailing update `target(r, c) ← update(target, L(r), R(c))`,
+    *      where L is the round's column panel keyed by block row (`lRow`)
+    *      and R its row panel keyed by block column (`rCol`). L is read
+    *      from the panel-solved state, or from `staticL` when it does not
+    *      change between rounds (the triangular solve's T). A target is
+    *      updated only when both its L and its R exist, so a block L does
+    *      not reach (an absent T block, which is zero) stays as it is.
+    * Panel delivery is size-gated, ScaLAPACK-style. While `panelBytes(i)`
+    * fits `panelBroadcastBytes`, the panels are collected and broadcast
+    * (zero shuffles per round, and the driver's traffic is bounded by the
+    * constant, not by the matrix). Past it, panels never leave the
+    * cluster: each L (R) block fans out executor-side to the keys
+    * `lTargets` (`rTargets`) names, and one `cogroup` on a hash
+    * partitioner shared by every round applies the update; the first
+    * cogroup moves the state onto it (unless `prePartition` already did),
+    * later rounds move only panel replicas. Both paths call the same
+    * `update` on the same blocks, so they give bit-identical results.
+    *
+    * Lifetime: each round's state is persisted, `localCheckpoint`ed every
+    * 8th round (the lineage guard of Dedup's connected-components loop)
+    * and materialized BEFORE its parents are unpersisted, or dropping them
+    * would force a recompute cascade. `finish` builds and materializes the
+    * result from the final state before the `finally` releases it.
+    */
+  private def eliminate[F: ClassTag, R](state0: Blocks, nKeys: Int, prePartition: Boolean,
+                              rounds: Seq[Int], panelBroadcastBytes: Long,
+                              factor: (Int, Blocks) => F,
+                              panel: (Int, F, (Int, Int), Array[Double]) => Array[Double],
+                              panelBytes: Int => Long,
+                              lRow: (Int, (Int, Int)) => Int,
+                              rCol: (Int, (Int, Int)) => Int,
+                              lTargets: (Int, Int) => Iterator[(Int, Int)],
+                              rTargets: (Int, Int) => Iterator[(Int, Int)],
+                              update: (Array[Double], Array[Double], Array[Double]) => Array[Double],
+                              staticL: Option[Blocks] = None)(finish: Blocks => R): R = {
+    val sc = state0.sparkContext
+    val partitioner = new HashPartitioner(
+      math.max(1, math.min(nKeys, sc.defaultParallelism * 2)))
+    var state = if (prePartition) state0.partitionBy(partitioner) else state0
+    state.persist(StorageLevel.MEMORY_AND_DISK)
+    try {
+      for ((i, round) <- rounds.zipWithIndex) {
+        val bcF = sc.broadcast(factor(i, state))
+        val afterPanel = state.mapPartitions(_.map { case (k, d) =>
+          (k, panel(i, bcF.value, k, d))
+        }, preservesPartitioning = true)
+        afterPanel.persist(StorageLevel.MEMORY_AND_DISK)
+        val next: Blocks =
+          if (round == rounds.length - 1) afterPanel
+          else {
+            val isL = (kd: ((Int, Int), Array[Double])) => lRow(i, kd._1) >= 0
+            val isR = (kd: ((Int, Int), Array[Double])) => rCol(i, kd._1) >= 0
+            val updated: Blocks =
+              if (panelBytes(i) <= panelBroadcastBytes) {
+                def keyed(ps: Array[((Int, Int), Array[Double])],
+                          key: ((Int, Int)) => Int): Map[Int, Array[Double]] =
+                  ps.iterator.map { case (k, d) => key(k) -> d }.filter(_._1 >= 0).toMap
+                val (ls, rs) = staticL match {
+                  case None =>
+                    val ps = afterPanel.filter(kd => isL(kd) || isR(kd)).collect()
+                    (ps, ps)
+                  case Some(t) =>
+                    (t.filter(isL).collect(), afterPanel.filter(isR).collect())
+                }
+                val bcP = sc.broadcast((keyed(ls, lRow(i, _)), keyed(rs, rCol(i, _))))
+                afterPanel.mapPartitions(_.map { case (k, d) =>
+                  val (lm, rm) = bcP.value
+                  (lm.get(k._1), rm.get(k._2)) match {
+                    case (Some(l), Some(r)) => (k, update(d, l, r))
+                    case _ => (k, d)
+                  }
+                }, preservesPartitioning = true)
+              } else {
+                // replicas tagged true = L, false = R
+                val lFan = (kd: ((Int, Int), Array[Double])) => {
+                  val r = lRow(i, kd._1)
+                  if (r < 0) Iterator.empty else lTargets(i, r).map(t => (t, (true, kd._2)))
+                }
+                val rFan = (kd: ((Int, Int), Array[Double])) => {
+                  val c = rCol(i, kd._1)
+                  if (c < 0) Iterator.empty else rTargets(i, c).map(t => (t, (false, kd._2)))
+                }
+                val replicas = staticL match {
+                  case None => afterPanel.flatMap(kd => lFan(kd) ++ rFan(kd))
+                  case Some(t) => t.flatMap(lFan).union(afterPanel.flatMap(rFan))
+                }
+                afterPanel.cogroup(replicas, partitioner).mapValues { case (base, ps) =>
+                  val d = base.head
+                  (ps.collectFirst { case (true, l) => l },
+                    ps.collectFirst { case (false, r) => r }) match {
+                    case (Some(l), Some(r)) => update(d, l, r)
+                    case _ => d
+                  }
+                }
+              }
+            updated.persist(StorageLevel.MEMORY_AND_DISK)
+            if ((round + 1) % 8 == 0) updated.localCheckpoint()
+            updated
+          }
+        next.count() // materialize BEFORE dropping the parents
+        state.unpersist(false)
+        if (next ne afterPanel) afterPanel.unpersist(false)
+        state = next
+      }
+      finish(state)
+    } finally state.unpersist(false)
+  }
 
   /** Result of [[lu]]: `A = P · L · U` where `P` is BLOCK-DIAGONAL
     * (per-diagonal-block partial pivoting — the reference's exact
@@ -344,32 +509,15 @@ object Linalg {
     * grid must be complete (`nb×nb` blocks, square blocks — the same
     * uniform-chunk precondition the reference raises on).
     *
-    * Shape: right-looking elimination, algebraically identical to the
+    * nb rounds of [[eliminate]], algebraically identical to the
     * reference's left-looking task graph (its per-block accumulated sums
-    * `Σₚ lu_kp·u_pj` are exactly what the trailing blocks carry here).
-    * Per round `i` (nb rounds, mirroring the reference's graph depth):
-    *   1. collect the b×b diagonal block, factor it on the driver with
-    *      partial pivoting (tiny — b² doubles, the ONLY thing the driver
-    *      ever sees);
-    *   2. one narrow map finalizes the round's row panel
-    *      (`u_ij = Lᵢᵢ⁻¹·Pᵢᵀ·â_ij`) and column panel
-    *      (`raw_ki = â_ki·Uᵢᵢ⁻¹`) under the broadcast diagonal factor;
-    *   3. deliver the panels to the trailing blocks DISTRIBUTIVELY — the
-    *      ScaLAPACK row+column broadcast expressed as a co-partitioned
-    *      join: each panel block fans out executor-side to the (nb−i−1)
-    *      trailing keys that need it, and one cogroup against the
-    *      hash-partitioned block RDD (panel side shuffles, trailing side
-    *      stays put) applies `â_kj −= raw_ki·u_ij`.  Per-round shuffle
-    *      bytes are O((nb−i)²·b²) = the trailing area, moved as panel
-    *      replicas across the cluster rather than O(nb·b²) through the
-    *      driver — the round-7 judge's scale fix: the full matrix never
-    *      funnels through one node.
-    * `localCheckpoint` every 8 rounds truncates the lineage (same guard
-    * as the connected-components loop in Dedup).
-    *
-    * Off-diagonal L blocks are un-permuted at the end (`L_ki = Pₖᵀ·raw_ki`)
-    * once every block row's pivot order is known — the reference's
-    * `p_inv·lu` edges.
+    * `Σₚ lu_kp·u_pj` are what the trailing blocks carry here). Round `i`
+    * factors the diagonal block with partial pivoting on the driver, then
+    * finalizes the row panel `u_ij = Lᵢᵢ⁻¹·Pᵢᵀ·â_ij` (R) and the column
+    * panel `raw_ki = â_ki·Uᵢᵢ⁻¹` (L); the trailing update is
+    * `â_kj −= raw_ki·u_ij`. Off-diagonal L blocks are un-permuted at the
+    * end (`L_ki = Pₖᵀ·raw_ki`) once every block row's pivot order is known
+    * — the reference's `p_inv·lu` edges.
     */
   def lu(blocks: DataFrame, blockSize: Int,
          panelBroadcastBytes: Long = 16L << 20): BlockLU = {
@@ -378,143 +526,60 @@ object Linalg {
     val nb = {
       val mx = blocks.agg(max(col("bi")), max(col("bj")), count(lit(1))).first()
       val n = math.max(mx.getInt(0), mx.getInt(1)) + 1
-      require(mx.getLong(2) == n.toLong * n,
-        s"lu: block grid must be complete ${n}x$n, got ${mx.getLong(2)} blocks")
+      requireGrid("lu", s"all ${n}x$n blocks", n.toLong * n, mx.getLong(2))
       n
     }
-    // one fixed hash partitioner shared by every cogroup round: the FIRST
-    // cogroup shuffles the block RDD onto it, the mapValues/mapPartitions
-    // steps preserve it, so every later round joins panel replicas against
-    // co-located trailing blocks without moving them again (rounds that
-    // take the broadcast path never pay it at all)
-    val partitioner = new org.apache.spark.HashPartitioner(
-      math.max(1, math.min(nb * nb,
-        blocks.sparkSession.sparkContext.defaultParallelism * 2)))
-    var state: RDD[((Int, Int), Array[Double])] = blocks
-      .select(col("bi"), col("bj"), col("data")).rdd
-      .map { r =>
-        val d = r.getSeq[Double](2).toArray
-        require(d.length == b * b, s"lu: block must be ${b}x$b, got ${d.length}")
-        ((r.getInt(0), r.getInt(1)), d)
-      }
-    state.persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
     val perms = new Array[Array[Int]](nb)
-    val sc = spark.sparkContext
-    try {
-      for (i <- 0 until nb) {
-        val diag = state.filter(_._1 == (i, i)).map(_._2).collect()(0)
-        val (sigma, lDiag, uDiag) = localLu(diag, b)
-        perms(i) = sigma
-        val bc = sc.broadcast((sigma, lDiag, uDiag))
-        // finalize row + column panels; pack the diagonal factor (unit
-        // diag implicit: strict lower = L, upper = U)
-        val afterPanels = state.mapPartitions(_.map { case ((bi, bj), d) =>
-          if (bi == i && bj == i) {
-            val (_, ld, ud) = bc.value
-            val packed = ud.clone()
-            for (c <- 0 until b; r <- c + 1 until b) packed(c * b + r) = ld(c * b + r)
-            ((bi, bj), packed)
-          } else if (bi == i && bj > i) {
-            val (sg, ld, _) = bc.value
-            ((bi, bj), solveLowerUnit(ld, permRows(sg, d, b), b))
-          } else if (bj == i && bi > i) {
-            val (_, _, ud) = bc.value
-            ((bi, bj), solveUpperRight(d, ud, b))
-          } else ((bi, bj), d)
-        }, preservesPartitioning = true)
-        afterPanels.persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
-        if (i < nb - 1) {
-          // Panel delivery is size-gated, ScaLAPACK-style: while the
-          // round's two panels fit a constant budget the collect+broadcast
-          // path wins (zero per-round shuffles — at fixture scale the
-          // cogroup's extra stages cost more than the whole round), and
-          // the driver's per-round traffic is BOUNDED by the constant, not
-          // O(matrix). Past the budget, panels never leave the cluster:
-          // each panel block fans out executor-side to the trailing keys
-          // that consume it and one co-partitioned cogroup applies the
-          // update (panel replicas shuffle; trailing blocks never move).
-          val panelBytes = 2L * (nb - i - 1) * b * b * 8
-          val next: RDD[((Int, Int), Array[Double])] =
-            if (panelBytes <= panelBroadcastBytes) {
-              val panels = afterPanels
-                .filter { case ((bi, bj), _) => (bi == i && bj > i) || (bj == i && bi > i) }
-                .collect()
-              val uRow = panels.collect { case ((bi, bj), d) if bi == i => bj -> d }.toMap
-              val rawCol = panels.collect { case ((bi, bj), d) if bj == i => bi -> d }.toMap
-              val bcP = sc.broadcast((rawCol, uRow))
-              afterPanels.mapPartitions(_.map { case ((bi, bj), d) =>
-                if (bi > i && bj > i) {
-                  val (rc, ur) = bcP.value
-                  ((bi, bj), matmulSub(d, rc(bi), ur(bj), b))
-                } else ((bi, bj), d)
-              }, preservesPartitioning = true)
-            } else {
-              // (true = the raw L column factor)
-              val replicas: RDD[((Int, Int), (Boolean, Array[Double]))] = afterPanels
-                .flatMap { case ((bi, bj), d) =>
-                  if (bj == i && bi > i)
-                    (i + 1 until nb).iterator.map(j2 => ((bi, j2), (true, d)))
-                  else if (bi == i && bj > i)
-                    (i + 1 until nb).iterator.map(k2 => ((k2, bj), (false, d)))
-                  else Iterator.empty
-                }
-              afterPanels.cogroup(replicas, partitioner)
-                .mapValues { case (base, ps) =>
-                  val d = base.head
-                  if (ps.isEmpty) d
-                  else {
-                    val rc = ps.collectFirst { case (true, p) => p }.get
-                    val ur = ps.collectFirst { case (false, p) => p }.get
-                    matmulSub(d, rc, ur, b)
-                  }
-                }
-            }
-          next.persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
-          if ((i + 1) % 8 == 0) next.localCheckpoint()
-          next.count() // materialize BEFORE dropping the parents, or the
-          // unpersists below would force a full recompute cascade
-          state.unpersist(false)
-          state = next
-          afterPanels.unpersist(false)
-        } else {
-          afterPanels.count() // materialize the last panel finalization
-          state.unpersist(false)
-          state = afterPanels
-        }
-      }
-      val bcPerms = sc.broadcast(perms)
-      val schema = org.apache.spark.sql.types.StructType(Seq(
-        org.apache.spark.sql.types.StructField("bi", org.apache.spark.sql.types.IntegerType),
-        org.apache.spark.sql.types.StructField("bj", org.apache.spark.sql.types.IntegerType),
-        org.apache.spark.sql.types.StructField("data",
-          org.apache.spark.sql.types.ArrayType(org.apache.spark.sql.types.DoubleType))))
-      import org.apache.spark.sql.Row
-      val lRows = state.flatMap { case ((bi, bj), d) =>
+    eliminate(keyedBlocks(blocks, "lu", b), nb * nb, prePartition = false,
+      0 until nb, panelBroadcastBytes,
+      factor = (i, st) => {
+        val f = localLu(diagBlock(st, i, "lu"), b)
+        perms(i) = f._1
+        f
+      },
+      panel = (i, f: (Array[Int], Array[Double], Array[Double]), k, d) => {
+        val (sg, ld, ud) = f
+        if (k._1 == i && k._2 == i) {
+          // pack the diagonal factor (unit diag implicit: strict lower = L,
+          // upper = U)
+          val packed = ud.clone()
+          for (c <- 0 until b; r <- c + 1 until b) packed(c * b + r) = ld(c * b + r)
+          packed
+        } else if (k._1 == i && k._2 > i) solveLowerUnit(ld, permRows(sg, d, b), b)
+        else if (k._2 == i && k._1 > i) solveUpperRight(d, ud, b)
+        else d
+      },
+      panelBytes = i => 2L * (nb - i - 1) * b * b * 8,
+      lRow = (i, k) => if (k._2 == i && k._1 > i) k._1 else -1,
+      rCol = (i, k) => if (k._1 == i && k._2 > i) k._2 else -1,
+      lTargets = (i, r) => (i + 1 until nb).iterator.map(c => (r, c)),
+      rTargets = (i, c) => (i + 1 until nb).iterator.map(r => (r, c)),
+      update = (d, l, r) => matmulSub(d, l, r, b)) { state =>
+      val bcPerms = spark.sparkContext.broadcast(perms)
+      val lDf = blockFrame(spark, state.flatMap { case ((bi, bj), d) =>
         if (bi == bj) {
           val ld = new Array[Double](b * b)
           for (c <- 0 until b) {
             ld(c * b + c) = 1.0
             for (r <- c + 1 until b) ld(c * b + r) = d(c * b + r)
           }
-          Some(Row(bi, bj, ld.toSeq))
+          Some(((bi, bj), ld))
         } else if (bi > bj) {
           // un-permute by the row block's own pivot order: L_ki = Pₖᵀ·raw
-          Some(Row(bi, bj, permRows(bcPerms.value(bi), d, b).toSeq))
+          Some(((bi, bj), permRows(bcPerms.value(bi), d, b)))
         } else None
-      }
-      val uRows = state.flatMap { case ((bi, bj), d) =>
+      }).cache()
+      val uDf = blockFrame(spark, state.flatMap { case ((bi, bj), d) =>
         if (bi == bj) {
           val ud = new Array[Double](b * b)
           for (c <- 0 until b; r <- 0 to c) ud(c * b + r) = d(c * b + r)
-          Some(Row(bi, bj, ud.toSeq))
-        } else if (bi < bj) Some(Row(bi, bj, d.toSeq))
+          Some(((bi, bj), ud))
+        } else if (bi < bj) Some(((bi, bj), d))
         else None
-      }
-      val lDf = spark.createDataFrame(lRows, schema).cache()
-      val uDf = spark.createDataFrame(uRows, schema).cache()
-      lDf.count(); uDf.count() // materialize before the block RDD unpersists
+      }).cache()
+      lDf.count(); uDf.count() // materialize before the block state unpersists
       BlockLU(perms, lDf, uDf, b, nb)
-    } finally state.unpersist(false)
+    }
   }
 
   /** Dense LU with partial pivoting of a col-major n×n block (driver-side,
@@ -631,7 +696,7 @@ object Linalg {
     * chunking and a single column chunk — the inverse of
     * [[garrRowVectors]].
     */
-  private def packRows(spark: org.apache.spark.sql.SparkSession,
+  private def packRows(spark: SparkSession,
                        rows: RDD[Array[Double]],
                        rowChunks: Seq[Int], nc: Int): GArr = {
     import spark.implicits._
@@ -702,25 +767,9 @@ object Linalg {
     val bs = a.chunks(0).head
     require(a.chunks(0).forall(_ == bs) && a.chunks(1).forall(_ == bs),
       s"lu needs uniform ${bs}x$bs chunks (rechunk first): ${a.chunks}")
-    val spark = a.blocks.sparkSession
-    val b = bs
-    val rows = a.blocks.rdd.map { blk =>
-      val d = blk.data
-      val cm = new Array[Double](d.length)
-      var c = 0
-      while (c < b) {
-        var r = 0
-        while (r < b) { cm(c * b + r) = d(r * b + c); r += 1 }
-        c += 1
-      }
-      org.apache.spark.sql.Row(blk.bid(0), blk.bid(1), cm.toSeq)
-    }
-    val schema = org.apache.spark.sql.types.StructType(Seq(
-      org.apache.spark.sql.types.StructField("bi", org.apache.spark.sql.types.IntegerType),
-      org.apache.spark.sql.types.StructField("bj", org.apache.spark.sql.types.IntegerType),
-      org.apache.spark.sql.types.StructField("data",
-        org.apache.spark.sql.types.ArrayType(org.apache.spark.sql.types.DoubleType))))
-    (spark.createDataFrame(rows, schema), bs)
+    (blockFrame(a.blocks.sparkSession, a.blocks.rdd.map { blk =>
+      ((blk.bid(0), blk.bid(1)), colToRowMajor(blk.data, bs, bs))
+    }), bs)
   }
 
   /** dask `lu(a)` at the GArr level (reference `array/linalg.py:978`):
@@ -737,15 +786,8 @@ object Linalg {
     import spark.implicits._
     val b = blockSize
     val ds = df.select(col("bi"), col("bj"), col("data"))
-      .as[(Int, Int, Seq[Double])].map { case (bi, bj, d) =>
-        val rm = new Array[Double](b * b)
-        var c = 0
-        while (c < b) {
-          var r = 0
-          while (r < b) { rm(r * b + c) = d(c * b + r); r += 1 }
-          c += 1
-        }
-        ABlock(Seq(bi, bj), rm)
+      .as[(Int, Int, Array[Double])].map { case (bi, bj, d) =>
+        ABlock(Seq(bi, bj), colToRowMajor(d, b, b))
       }
     val n = b.toLong * nBlocks
     GArr(Seq(n, n), Seq(Seq.fill(nBlocks)(b), Seq.fill(nBlocks)(b)), ds)
@@ -775,23 +817,17 @@ object Linalg {
     * pipelines build blocks distributed; the fixture matrices here are
     * driver-small).
     */
-  def denseToBlocks(spark: org.apache.spark.sql.SparkSession,
+  def denseToBlocks(spark: SparkSession,
                     dense: Array[Double], n: Int, blockSize: Int): DataFrame = {
     require(n % blockSize == 0, s"lu: $n not divisible by block size $blockSize")
     val b = blockSize; val nb = n / b
-    import org.apache.spark.sql.Row
-    val rows = for (bi <- 0 until nb; bj <- 0 until nb) yield {
+    val blocks = for (bi <- 0 until nb; bj <- 0 until nb) yield {
       val d = new Array[Double](b * b)
       for (c <- 0 until b; r <- 0 until b)
         d(c * b + r) = dense((bj * b + c) * n + (bi * b + r))
-      Row(bi, bj, d.toSeq)
+      ((bi, bj), d)
     }
-    val schema = org.apache.spark.sql.types.StructType(Seq(
-      org.apache.spark.sql.types.StructField("bi", org.apache.spark.sql.types.IntegerType),
-      org.apache.spark.sql.types.StructField("bj", org.apache.spark.sql.types.IntegerType),
-      org.apache.spark.sql.types.StructField("data",
-        org.apache.spark.sql.types.ArrayType(org.apache.spark.sql.types.DoubleType))))
-    spark.createDataFrame(spark.sparkContext.parallelize(rows, math.min(rows.size, 32)), schema)
+    blockFrame(spark, spark.sparkContext.parallelize(blocks, math.min(blocks.size, 32)))
   }
 
   /** AᵀY as one treeAggregate of per-row outer products (p×l col-major). */
@@ -840,15 +876,7 @@ object Linalg {
 
   // ---- blocked triangular solve / solve / inv / Cholesky ---------------
   // (reference `dask/array/linalg.py:1114` solve_triangular, `:1208`
-  // solve, `:1268` inv, `:1295` cholesky). Same delivery discipline as
-  // [[lu]]: nb sequential rounds; within each round the solved row (or
-  // factor panel) reaches the trailing blocks by a size-gated choice of
-  // driver broadcast (bounded by a constant, zero shuffles) vs
-  // executor-side fanout + one co-partitioned cogroup (panels replicate;
-  // trailing blocks never move).
-
-  /** Rectangular B-side state: ((bi, bj), col-major b×colChunks(bj)). */
-  private type BState = RDD[((Int, Int), Array[Double])]
+  // solve, `:1268` inv, `:1295` cholesky), all on [[eliminate]].
 
   /** X = L⁻¹·RHS for lower L (col-major n×n), RHS n×cw col-major. */
   private[graft] def solveLowerLeftRect(l: Array[Double], rhs: Array[Double],
@@ -982,41 +1010,23 @@ object Linalg {
     * col-major rectangular block state the triangular solver iterates on.
     * Narrow map — only the per-block layout transposes.
     */
-  private def garrToRectState(bArr: GArr, b: Int): (BState, Array[Int]) = {
+  private def garrToRectState(bArr: GArr, b: Int): (Blocks, Array[Int]) = {
     require(bArr.ndim == 2, s"triangular solve rhs must be 2-D: ${bArr.shape}")
     require(bArr.chunks(0).forall(_ == b),
       s"rhs row chunks must equal the block size $b (rechunk first): ${bArr.chunks(0)}")
     val colChunks = bArr.chunks(1).toArray
     val st = bArr.blocks.rdd.map { blk =>
-      val nc = colChunks(blk.bid(1))
-      val d = blk.data
-      val cm = new Array[Double](d.length)
-      var c = 0
-      while (c < nc) {
-        var r = 0
-        while (r < b) { cm(c * b + r) = d(r * nc + c); r += 1 }
-        c += 1
-      }
-      ((blk.bid(0), blk.bid(1)), cm)
+      ((blk.bid(0), blk.bid(1)), colToRowMajor(blk.data, colChunks(blk.bid(1)), b))
     }
     (st, colChunks)
   }
 
   /** Keyed col-major rectangular state → GArr (row-major blocks). */
-  private def rectStateToGArr(spark: org.apache.spark.sql.SparkSession,
-                              st: BState, b: Int, nRowBlocks: Int,
+  private def rectStateToGArr(spark: SparkSession, st: Blocks, b: Int, nRowBlocks: Int,
                               colChunks: Array[Int]): GArr = {
     import spark.implicits._
     val ds = st.map { case ((bi, bj), cm) =>
-      val nc = colChunks(bj)
-      val rm = new Array[Double](cm.length)
-      var c = 0
-      while (c < nc) {
-        var r = 0
-        while (r < b) { rm(r * nc + c) = cm(c * b + r); r += 1 }
-        c += 1
-      }
-      ABlock(Seq(bi, bj), rm)
+      ABlock(Seq(bi, bj), colToRowMajor(cm, b, colChunks(bj)))
     }.toDS()
     GArr(Seq(b.toLong * nRowBlocks, colChunks.map(_.toLong).sum),
       Seq(Seq.fill(nRowBlocks)(b), colChunks.toSeq), ds)
@@ -1024,116 +1034,56 @@ object Linalg {
 
   /** Blocked triangular solve `T·X = B` (reference `array/linalg.py:1114`
     * `solve_triangular`): T an `(bi, bj, col-major data)` b×b block
-    * DataFrame (only the `lower` half is read; absent blocks are zero),
-    * B a chunked 2-D GArr whose row chunks equal `b`. nb sequential
-    * rounds of forward (lower) or backward (upper) block substitution;
-    * T is static, so its diagonal is pre-collected in ONE job when it
-    * fits 4× the panel budget (vs [[lu]], which must re-collect its
-    * mutating diagonal every round).
+    * DataFrame (only the `lower` half is read; absent blocks are zero, but
+    * every diagonal block is required), B a chunked 2-D GArr whose row
+    * chunks equal `b`. nb rounds of [[eliminate]] run forward (lower) or
+    * backward (upper) block substitution: round `i` solves block row `i`
+    * against `Tᵢᵢ` (R, keyed by block column), and the trailing rows take
+    * `B_kj −= T_ki·X_ij`, with L read from the static T. T is static, so
+    * its diagonal is pre-collected in ONE job when it fits 4× the panel
+    * budget (vs [[lu]], which must re-collect its mutating diagonal every
+    * round).
     */
   def solveTriangular(tBlocks: DataFrame, blockSize: Int, bArr: GArr,
                       lower: Boolean, unitDiag: Boolean = false,
                       panelBroadcastBytes: Long = 16L << 20): GArr = {
     val spark = tBlocks.sparkSession
-    val sc = spark.sparkContext
     val b = blockSize
-    val tRdd: BState = tBlocks.select(col("bi"), col("bj"), col("data")).rdd
-      .map(r => ((r.getInt(0), r.getInt(1)), r.getSeq[Double](2).toArray))
-    val tCached = tRdd.persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
     val nb = (bArr.shape(0) / b).toInt
     val (st0, colChunks) = garrToRectState(bArr, b)
     val mCols = colChunks.map(_.toLong).sum
-    val partitioner = new org.apache.spark.HashPartitioner(
-      math.max(1, math.min(nb * colChunks.length, sc.defaultParallelism * 2)))
-    var state: BState = st0.partitionBy(partitioner)
-    state.persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
-    // static diagonal: one collect job for the whole solve when small
-    val diagBytes = nb.toLong * b * b * 8
-    val preDiag: Map[Int, Array[Double]] =
-      if (diagBytes <= 4 * panelBroadcastBytes)
-        tCached.filter { case ((x, y), _) => x == y }.collect()
-          .map { case ((x, _), d) => x -> d }.toMap
-      else Map.empty
-    val order = if (lower) 0 until nb else (nb - 1) to 0 by -1
+    val t = keyedBlocks(tBlocks, "solveTriangular", b)
+      .persist(StorageLevel.MEMORY_AND_DISK)
+    def trailing(i: Int, r: Int): Boolean = if (lower) r > i else r < i
     try {
-      var round = 0
-      for (i <- order) {
-        round += 1
-        val diag = preDiag.getOrElse(i,
-          tCached.filter(_._1 == (i, i)).map(_._2).collect()(0))
-        val bcDiag = sc.broadcast(diag)
-        val afterSolve = state.mapPartitions(_.map { case ((bi, bj), d) =>
-          if (bi == i) {
-            val cw = d.length / b
-            val x = if (lower) solveLowerLeftRect(bcDiag.value, d, b, cw, unitDiag)
-            else solveUpperLeftRect(bcDiag.value, d, b, cw)
-            ((bi, bj), x)
-          } else ((bi, bj), d)
-        }, preservesPartitioning = true)
-        afterSolve.persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
-        val remaining = if (lower) nb - i - 1 else i
-        if (remaining > 0) {
-          val panelBytes = (remaining.toLong * b * b + b * mCols) * 8
-          val next: BState =
-            if (panelBytes <= panelBroadcastBytes) {
-              val xRow = afterSolve.filter(_._1._1 == i).collect()
-                .map { case ((_, bj), d) => bj -> d }.toMap
-              val tCol = tCached.filter { case ((bi, bj), _) =>
-                bj == i && (if (lower) bi > i else bi < i)
-              }.collect().map { case ((bi, _), d) => bi -> d }.toMap
-              val bcP = sc.broadcast((tCol, xRow))
-              afterSolve.mapPartitions(_.map { case ((bi, bj), d) =>
-                val trailing = if (lower) bi > i else bi < i
-                if (trailing) {
-                  val (tc, xr) = bcP.value
-                  tc.get(bi) match { // absent = zero block of T: no-op
-                    case Some(a) =>
-                      ((bi, bj), matmulSubRect(d, a, xr(bj), b, d.length / b))
-                    case None => ((bi, bj), d)
-                  }
-                } else ((bi, bj), d)
-              }, preservesPartitioning = true)
-            } else {
-              // executor-side fanout (true = the T column-panel factor)
-              val tReps = tCached.flatMap { case ((bi, bj), d) =>
-                if (bj == i && (if (lower) bi > i else bi < i))
-                  colChunks.indices.iterator.map(j2 => ((bi, j2), (true, d)))
-                else Iterator.empty
-              }
-              val xReps = afterSolve.flatMap { case ((bi, bj), d) =>
-                if (bi == i) {
-                  val ks = if (lower) (i + 1) until nb else 0 until i
-                  ks.iterator.map(k2 => ((k2, bj), (false, d)))
-                } else Iterator.empty
-              }
-              afterSolve.cogroup(tReps.union(xReps), partitioner)
-                .mapValues { case (base, ps) =>
-                  val d = base.head
-                  ps.collectFirst { case (true, p) => p } match {
-                    case Some(a) =>
-                      val xr = ps.collectFirst { case (false, p) => p }.get
-                      matmulSubRect(d, a, xr, b, d.length / b)
-                    case None => d
-                  }
-                }
-            }
-          next.persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
-          if (round % 8 == 0) next.localCheckpoint()
-          next.count() // materialize BEFORE dropping parents
-          state.unpersist(false)
-          afterSolve.unpersist(false)
-          state = next
-        } else {
-          afterSolve.count()
-          state.unpersist(false)
-          state = afterSolve
-        }
+      val preDiag: Map[Int, Array[Double]] =
+        if (nb.toLong * b * b * 8 <= 4 * panelBroadcastBytes) {
+          val d = t.filter { case ((x, y), _) => x == y }.collect()
+            .map { case ((x, _), d) => x -> d }.toMap
+          requireGrid("solveTriangular", s"every diagonal block of a ${nb}x$nb grid",
+            nb, (0 until nb).count(d.contains))
+          d
+        } else Map.empty
+      eliminate(st0, nb * colChunks.length, prePartition = true,
+        rounds = if (lower) 0 until nb else (nb - 1) to 0 by -1,
+        panelBroadcastBytes = panelBroadcastBytes,
+        factor = (i, _) => preDiag.getOrElse(i, diagBlock(t, i, "solveTriangular")),
+        panel = (i, diag: Array[Double], k, d) =>
+          if (k._1 != i) d
+          else if (lower) solveLowerLeftRect(diag, d, b, d.length / b, unitDiag)
+          else solveUpperLeftRect(diag, d, b, d.length / b),
+        panelBytes = i => ((if (lower) nb - i - 1 else i).toLong * b * b + b * mCols) * 8,
+        lRow = (i, k) => if (k._2 == i && trailing(i, k._1)) k._1 else -1,
+        rCol = (i, k) => if (k._1 == i) k._2 else -1,
+        lTargets = (_, r) => colChunks.indices.iterator.map(c => (r, c)),
+        rTargets = (i, c) => (if (lower) i + 1 until nb else 0 until i).iterator.map(r => (r, c)),
+        update = (d, l, r) => matmulSubRect(d, l, r, b, d.length / b),
+        staticL = Some(t)) { state =>
+        val out = rectStateToGArr(spark, state, b, nb, colChunks).persist()
+        out.blocks.count() // materialize before the block state unpersists
+        out
       }
-      val out = rectStateToGArr(spark, state, b, nb, colChunks)
-      out.persist()
-      out.blocks.count() // materialize before the state RDD unpersists
-      out
-    } finally { state.unpersist(false); tCached.unpersist(false) }
+    } finally t.unpersist(false)
   }
 
   /** GArr-level `solve_triangular(t, b)` — square-chunk T bridge. */
@@ -1188,111 +1138,47 @@ object Linalg {
   }
 
   /** Blocked lower Cholesky `A = L·Lᵀ` (reference `array/linalg.py:1295`):
-    * right-looking rounds over the lower-half block state — diagonal
-    * factorization (executor-collected b² leaf), column-panel right-solve
-    * `L_ki = A_ki·L_ii⁻ᵀ`, then the symmetric trailing update
-    * `A_kj −= L_ki·L_jiᵀ` with the same size-gated panel delivery as
-    * [[lu]]. Only the lower half is stored or touched (half of [[lu]]'s
-    * traffic); the strict upper half of the input is never read.
-    * Returns the lower-factor block DataFrame (bi ≥ bj blocks only).
+    * nb rounds of [[eliminate]] over the lower-half block state. Round `i`
+    * factors the diagonal block on the driver, right-solves the column
+    * panel `L_ki = A_ki·L_ii⁻ᵀ`, and the panel serves as both L and R of
+    * the symmetric trailing update `A_kj −= L_ki·L_jiᵀ`. Only the lower
+    * half is stored or touched (half of [[lu]]'s traffic); the strict
+    * upper half of the input is never read, but every lower-half block
+    * must be present. Returns the lower-factor block DataFrame (bi ≥ bj
+    * blocks only).
     */
   def cholesky(aBlocks: DataFrame, blockSize: Int,
                panelBroadcastBytes: Long = 16L << 20): DataFrame = {
     val spark = aBlocks.sparkSession
-    val sc = spark.sparkContext
     val b = blockSize
+    val lowerHalf = col("bi") >= col("bj")
     val nb = {
-      val mx = aBlocks.agg(max(col("bi")), max(col("bj"))).first()
-      math.max(mx.getInt(0), mx.getInt(1)) + 1
+      val mx = aBlocks.agg(max(col("bi")), max(col("bj")), count(when(lowerHalf, 1))).first()
+      val n = math.max(mx.getInt(0), mx.getInt(1)) + 1
+      requireGrid("cholesky", s"the lower half of a ${n}x$n grid",
+        n.toLong * (n + 1) / 2, mx.getLong(2))
+      n
     }
-    val partitioner = new org.apache.spark.HashPartitioner(
-      math.max(1, math.min(nb * (nb + 1) / 2, sc.defaultParallelism * 2)))
-    var state: RDD[((Int, Int), Array[Double])] = aBlocks
-      .where(col("bi") >= col("bj"))
-      .select(col("bi"), col("bj"), col("data")).rdd
-      .map { r =>
-        val d = r.getSeq[Double](2).toArray
-        require(d.length == b * b, s"cholesky: block must be ${b}x$b, got ${d.length}")
-        ((r.getInt(0), r.getInt(1)), d)
-      }.partitionBy(partitioner)
-    state.persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
-    try {
-      for (i <- 0 until nb) {
-        val diag = state.filter(_._1 == (i, i)).map(_._2).collect()(0)
-        val lii = localChol(diag, b)
-        val bc = sc.broadcast(lii)
-        val afterPanel = state.mapPartitions(_.map { case ((bi, bj), d) =>
-          if (bi == i && bj == i) ((bi, bj), bc.value)
-          else if (bj == i && bi > i) ((bi, bj), solveLowerRightT(d, bc.value, b))
-          else ((bi, bj), d)
-        }, preservesPartitioning = true)
-        afterPanel.persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
-        if (i < nb - 1) {
-          val panelBytes = (nb - i - 1).toLong * b * b * 8
-          val next: RDD[((Int, Int), Array[Double])] =
-            if (panelBytes <= panelBroadcastBytes) {
-              val panel = afterPanel
-                .filter { case ((bi, bj), _) => bj == i && bi > i }
-                .collect().map { case ((bi, _), d) => bi -> d }.toMap
-              val bcP = sc.broadcast(panel)
-              afterPanel.mapPartitions(_.map { case ((bi, bj), d) =>
-                if (bi > i && bj > i) {
-                  val p = bcP.value
-                  ((bi, bj), matmulSubNT(d, p(bi), p(bj), b))
-                } else ((bi, bj), d)
-              }, preservesPartitioning = true)
-            } else {
-              // panel block (p, i) is the LEFT factor for trailing keys
-              // (p, j), i<j≤p, and the TRANSPOSED-RIGHT factor for keys
-              // (k, p), p≤k<nb
-              val replicas = afterPanel.flatMap { case ((bi, bj), d) =>
-                if (bj == i && bi > i)
-                  ((i + 1) to bi).iterator.map(j2 => ((bi, j2), (true, d))) ++
-                    (bi until nb).iterator.map(k2 => ((k2, bi), (false, d)))
-                else Iterator.empty
-              }
-              afterPanel.cogroup(replicas, partitioner)
-                .mapValues { case (base, ps) =>
-                  val d = base.head
-                  ps.collectFirst { case (true, p) => p } match {
-                    case Some(lk) =>
-                      val lj = ps.collectFirst { case (false, p) => p }.get
-                      matmulSubNT(d, lk, lj, b)
-                    case None => d
-                  }
-                }
-            }
-          next.persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
-          if ((i + 1) % 8 == 0) next.localCheckpoint()
-          next.count()
-          state.unpersist(false)
-          afterPanel.unpersist(false)
-          state = next
-        } else {
-          afterPanel.count()
-          state.unpersist(false)
-          state = afterPanel
-        }
-      }
-      val schema = org.apache.spark.sql.types.StructType(Seq(
-        org.apache.spark.sql.types.StructField("bi", org.apache.spark.sql.types.IntegerType),
-        org.apache.spark.sql.types.StructField("bj", org.apache.spark.sql.types.IntegerType),
-        org.apache.spark.sql.types.StructField("data",
-          org.apache.spark.sql.types.ArrayType(org.apache.spark.sql.types.DoubleType))))
-      import org.apache.spark.sql.Row
-      val rows = state.map { case ((bi, bj), d) =>
-        val out = if (bi == bj) {
-          val ld = new Array[Double](b * b)
-          var j = 0
-          while (j < b) { var r = j; while (r < b) { ld(j * b + r) = d(j * b + r); r += 1 }; j += 1 }
-          ld
-        } else d
-        Row(bi, bj, out.toSeq)
-      }
-      val df = spark.createDataFrame(rows, schema).cache()
-      df.count() // materialize before the state RDD unpersists
+    val panelRow = (i: Int, k: (Int, Int)) => if (k._2 == i && k._1 > i) k._1 else -1
+    eliminate(keyedBlocks(aBlocks.where(lowerHalf), "cholesky", b), nb * (nb + 1) / 2,
+      prePartition = true, rounds = 0 until nb, panelBroadcastBytes = panelBroadcastBytes,
+      factor = (i, st) => localChol(diagBlock(st, i, "cholesky"), b),
+      panel = (i, lii: Array[Double], k, d) =>
+        if (k._2 != i) d
+        else if (k._1 == i) lii
+        else solveLowerRightT(d, lii, b),
+      panelBytes = i => (nb - i - 1).toLong * b * b * 8,
+      // panel block (p, i) is L for the trailing keys (p, j), i < j ≤ p,
+      // and R for the keys (k, p), p ≤ k < nb
+      lRow = panelRow, rCol = panelRow,
+      lTargets = (i, r) => (i + 1 to r).iterator.map(c => (r, c)),
+      rTargets = (_, c) => (c until nb).iterator.map(r => (r, c)),
+      update = (d, l, r) => matmulSubNT(d, l, r, b)) { state =>
+      // localChol leaves the diagonal blocks' strict upper half zero
+      val df = blockFrame(spark, state).cache()
+      df.count() // materialize before the block state unpersists
       df
-    } finally state.unpersist(false)
+    }
   }
 
   /** GArr-level `cholesky(a)` — returns the FULL lower-triangular chunked
@@ -1302,16 +1188,9 @@ object Linalg {
   def cholesky(a: GArr): GArr = {
     val (df, bs) = garrToBlocks(a)
     val nb = (a.shape(0) / bs).toInt
-    val lowerDf = cholesky(df, bs)
+    val lower = blocksToGArr(cholesky(df, bs), bs, nb).blocks
     val spark = a.blocks.sparkSession
     import spark.implicits._
-    val lower = lowerDf.select(col("bi"), col("bj"), col("data"))
-      .as[(Int, Int, Seq[Double])].map { case (bi, bj, d) =>
-        val rm = new Array[Double](bs * bs)
-        var j = 0
-        while (j < bs) { var r = 0; while (r < bs) { rm(r * bs + j) = d(j * bs + r); r += 1 }; j += 1 }
-        ABlock(Seq(bi, bj), rm)
-      }
     val zeros = spark.range(nb.toLong * nb).map { flat: java.lang.Long =>
       val bi = (flat.longValue / nb).toInt; val bj = (flat.longValue % nb).toInt
       ABlock(Seq(bi, bj), new Array[Double](bs * bs))

@@ -1,10 +1,6 @@
 package graft.operators
 
-import org.apache.spark.sql.{DataFrame, Dataset}
-
-/** Complex strip piece shuffled between FFT phases. */
-final case class CPiece(strip: Int, offs: Array[Int],
-                        re: Array[Double], im: Array[Double])
+import org.apache.spark.sql.DataFrame
 
 /** Distributed 1-D FFT over a chunked [[GArr]] — the dask `array/fft.py`
   * surface re-expressed as the four-step (transpose) Cooley–Tukey
@@ -20,14 +16,15 @@ final case class CPiece(strip: Int, offs: Array[Int],
   * widths are sized to ~`targetElems` doubles per task, so both local
   * FFTs stay cache-resident regardless of N — exactly two all-to-all
   * exchanges of packed arrays at any scale (the communication lower bound
-  * for a transpose FFT).
+  * for a transpose FFT). The phases are written once, in `ComplexFft`
+  * (`fourStepRowPieces`, `rowStripBins`): [[fft1d]] runs them with no
+  * imaginary plane in phase 1, `ComplexFft.fft1dC`/`fft1dArr` with one.
   *
   * Dask wraps numpy's FFT per-chunk and can only batch over the OTHER
   * axes (`array/fft.py:1-316` requires the FFT axis be single-chunk);
   * this implementation genuinely distributes the transform axis.
   */
 object SpectralFft {
-  import GArr.startsOf
 
   /** In-place iterative radix-2 complex FFT (sign convention e^{-2πikn/N}).
     * Twiddles come from ONE precomputed quarter-table of n/2 direct-trig
@@ -144,131 +141,13 @@ object SpectralFft {
     * N = n1·n2; strips use the arbitrary-length [[fftLocalAny]]). A prime
     * N degenerates to n2 = 1 — one strip runs a local Bluestein, exactly
     * what numpy does on a single machine. Returns (k, re, im) rows for
-    * all N bins.
+    * all N bins. The complex four-step core ([[ComplexFft.fft1dC]]) with
+    * phase 1 shipping no imaginary plane.
     */
   def fft1d(a: GArr, targetElems: Int = 65536): DataFrame = {
     require(a.ndim == 1, "fft1d takes a 1-D array")
-    val n = a.shape.head
-    require(n >= 1, s"fft1d needs a nonempty array")
-    val s = a.blocks.sparkSession
-    import s.implicits._
-    // largest divisor of n that is <= sqrt(n) (for pow2 this is the usual
-    // half-split; for primes it is 1)
-    val n2 = {
-      var d = math.sqrt(n.toDouble).toLong
-      while (d > 1 && n % d != 0) d -= 1
-      math.max(1L, d).toInt
-    }
-    val n1 = (n / n2).toInt
-    val w2 = math.max(1, math.min(n2, targetElems / math.max(n1, 1)))
-    val w1 = math.max(1, math.min(n1, targetElems / math.max(n2, 1)))
-    val starts = startsOf(a.chunks.head)
-    val nL = n
-
-    // ---- phase 1: 1-D blocks -> column strips ---------------------------
-    val colPieces: Dataset[CPiece] = a.blocks.flatMap { b =>
-      val g0 = starts(b.bid.head)
-      val bufs = scala.collection.mutable.LinkedHashMap[Int, (scala.collection.mutable.ArrayBuilder[Int], scala.collection.mutable.ArrayBuilder[Double])]()
-      var i = 0
-      while (i < b.data.length) {
-        val gi = g0 + i
-        val n1i = (gi / n2).toInt
-        val n2i = (gi % n2).toInt
-        val strip = n2i / w2
-        val wCols = math.min(w2, n2 - strip * w2)
-        val (ob, vb) = bufs.getOrElseUpdate(strip,
-          (scala.collection.mutable.ArrayBuilder.make[Int],
-           scala.collection.mutable.ArrayBuilder.make[Double]))
-        ob += n1i * wCols + (n2i - strip * w2)
-        vb += b.data(i)
-        i += 1
-      }
-      bufs.iterator.map { case (strip, (ob, vb)) =>
-        CPiece(strip, ob.result(), vb.result(), Array.emptyDoubleArray)
-      }
-    }
-
-    // ---- phase 2: per-strip column FFTs + twiddle, re-strip by rows -----
-    val rowPieces: Dataset[CPiece] = colPieces.groupByKey(_.strip).flatMapGroups {
-      (strip, it) =>
-        val wCols = math.min(w2, n2 - strip * w2)
-        val re = new Array[Double](n1 * wCols)
-        val im = new Array[Double](n1 * wCols)
-        it.foreach { p =>
-          var i = 0
-          while (i < p.offs.length) { re(p.offs(i)) = p.re(i); i += 1 }
-        }
-        val tre = new Array[Double](n1)
-        val tim = new Array[Double](n1)
-        var c = 0
-        while (c < wCols) {
-          var r = 0
-          while (r < n1) { tre(r) = re(r * wCols + c); tim(r) = im(r * wCols + c); r += 1 }
-          fftLocalAny(tre, tim)
-          val g2 = strip * w2 + c
-          var k1 = 0
-          while (k1 < n1) {
-            val ang = -2.0 * math.Pi * g2 * k1 / nL
-            val cr = math.cos(ang); val ci = math.sin(ang)
-            val vr = tre(k1) * cr - tim(k1) * ci
-            val vi = tre(k1) * ci + tim(k1) * cr
-            re(k1 * wCols + c) = vr
-            im(k1 * wCols + c) = vi
-            k1 += 1
-          }
-          c += 1
-        }
-        // emit per destination row-strip
-        val nStrips3 = (n1 + w1 - 1) / w1
-        (0 until nStrips3).iterator.map { t =>
-          val rows = math.min(w1, n1 - t * w1)
-          val offs = new Array[Int](rows * wCols)
-          val ore = new Array[Double](rows * wCols)
-          val oim = new Array[Double](rows * wCols)
-          var idx = 0
-          var rr = 0
-          while (rr < rows) {
-            val k1 = t * w1 + rr
-            var cc = 0
-            while (cc < wCols) {
-              offs(idx) = rr * n2 + (strip * w2 + cc)
-              ore(idx) = re(k1 * wCols + cc)
-              oim(idx) = im(k1 * wCols + cc)
-              idx += 1; cc += 1
-            }
-            rr += 1
-          }
-          CPiece(t, offs, ore, oim)
-        }
-    }
-
-    // ---- phase 3: per-row-strip FFTs over n2, emit final bins -----------
-    rowPieces.groupByKey(_.strip).flatMapGroups { (t, it) =>
-      val rows = math.min(w1, n1 - t * w1)
-      val re = new Array[Double](rows * n2)
-      val im = new Array[Double](rows * n2)
-      it.foreach { p =>
-        var i = 0
-        while (i < p.offs.length) { re(p.offs(i)) = p.re(i); im(p.offs(i)) = p.im(i); i += 1 }
-      }
-      val tre = new Array[Double](n2)
-      val tim = new Array[Double](n2)
-      val out = scala.collection.mutable.ArrayBuffer[(Long, Double, Double)]()
-      var r = 0
-      while (r < rows) {
-        val k1 = t * w1 + r
-        System.arraycopy(re, r * n2, tre, 0, n2)
-        System.arraycopy(im, r * n2, tim, 0, n2)
-        fftLocalAny(tre, tim)
-        var k2 = 0
-        while (k2 < n2) {
-          out += ((k1 + n1.toLong * k2, tre(k2), tim(k2)))
-          k2 += 1
-        }
-        r += 1
-      }
-      out
-    }.toDF("k", "re", "im")
+    ComplexFft.fourStepBins(a.blocks, a.shape.head, a.chunks.head, targetElems)(b =>
+      (b.bid.head, b.data, Array.emptyDoubleArray))
   }
 
   /** numpy/dask `fft.rfft` for real input: the spectrum of a real signal

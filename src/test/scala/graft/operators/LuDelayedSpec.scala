@@ -63,7 +63,8 @@ class LuDelayedSpec extends SparkTestBase {
   }
 
   test("lu: distributed cogroup panel path (panelBroadcastBytes=0) matches broadcast path") {
-    for ((n, bs) <- Seq((12, 3), (120, 30))) {
+    // (18, 2) runs 9 rounds, so the 8th round's localCheckpoint is on the path
+    for ((n, bs) <- Seq((12, 3), (120, 30), (18, 2))) {
       val a = testMatrix(n, seed = 11L * n + bs)
       val blocks = Linalg.denseToBlocks(spark, a, n, bs)
       // threshold 0 forces EVERY round through the executor-side fan-out
@@ -71,6 +72,13 @@ class LuDelayedSpec extends SparkTestBase {
       val r = Linalg.lu(blocks, bs, panelBroadcastBytes = 0L)
       val diff = maxAbsDiff(reconstruct(r), a)
       assert(diff < 1e-8, s"n=$n b=$bs cogroup-path reconstruction diff $diff")
+      // both delivery paths run the same update on the same blocks
+      val viaBroadcast = Linalg.lu(blocks, bs)
+      def cells(df: org.apache.spark.sql.DataFrame) =
+        df.collect().map(row => (row.getInt(0), row.getInt(1)) -> row.getSeq[Double](2)).toMap
+      assert(r.perms.map(_.toSeq).toSeq == viaBroadcast.perms.map(_.toSeq).toSeq, s"n=$n b=$bs perms")
+      assert(cells(r.l) == cells(viaBroadcast.l), s"n=$n b=$bs L differs between paths")
+      assert(cells(r.u) == cells(viaBroadcast.u), s"n=$n b=$bs U differs between paths")
     }
   }
 
