@@ -2112,8 +2112,9 @@ object SparkEntry {
     },
 
     // ---- boolean-mask indexing (dask x[mask], slicing.py:1061): the 1-D
-    // counts-prefix path (block join + O(nblocks) prefix + one scatter, no
-    // sort); output order is pinned by a position-weighted checksum.
+    // counts-prefix mask ranking (block join + O(nblocks) prefix + one
+    // pack shuffle, no sort); output order is pinned by a position-weighted
+    // checksum.
     "q165_boolean_mask" -> { (s, dir) =>
       import graft.operators.GArr
       val li = t(s, dir, "lineitem")
@@ -2252,9 +2253,10 @@ object SparkEntry {
     // ---- masked setitem with an ARRAY right-hand side (dask x[mask] = v,
     // slicing.py:1464 setitem_array bool branch): the mask is derived from
     // the array itself and the VALUES come from a booleanMask selection of
-    // the same array (scaled), so the rank->value plumbing (counts-prefix
-    // + value-block co-group) is exercised end-to-end with nothing
-    // driver-known: result == where(q>=30, 1000q+7, q).
+    // the same array (scaled), so the rank->value plumbing (the counts-
+    // prefix mask ranking + the gather co-group over the values) is
+    // exercised end-to-end with nothing driver-known:
+    // result == where(q>=30, 1000q+7, q).
     "q174_masked_assign" -> { (s, dir) =>
       import graft.operators.GArr
       val li = t(s, dir, "lineitem")

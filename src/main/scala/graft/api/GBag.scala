@@ -264,11 +264,12 @@ final class GBag[T](val ds: Dataset[T]) extends Serializable {
       implicit e: Encoder[T], ct: scala.reflect.ClassTag[T]): GBag[T] = {
     val picked = graft.operators.Positions.gather(rdd, starts, wanted)(identity[T]).values
     // materialize the k-element result (cheap: O(k) distributed) while the
-    // persisted base is still pinned
-    val got = picked.persist(
+    // persisted base is still pinned; the returned bag owns this cache, so
+    // its `ds.unpersist()` frees it
+    val got = spark.createDataset(picked).persist(
       org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
     try got.count() finally rdd.unpersist(blocking = false)
-    new GBag(spark.createDataset(got))
+    new GBag(got)
   }
 
   /** The scalar reduction tier (`bag/core.py:1077-1147`): count / sum /

@@ -306,10 +306,10 @@ final case class GArr(shape: Seq[Long], chunks: Seq[Seq[Int]], blocks: Dataset[A
     * `x[:, mask]` where `mask` is itself a chunked array (reference
     * `array/slicing.py:1061` `slice_with_bool_dask_array`, the
     * one-axis form). The mask is rechunk-aligned to this array's axis
-    * grid; the driver sees only O(axis grid) per-block counts (for the
-    * output offsets), never the mask itself. Two exchanges: mask blocks
-    * co-group with the source blocks sharing their axis coordinate, and
-    * the selected lanes scatter to the output grid.
+    * grid and ranked by [[maskRanks]] (per-block counts: O(axis grid)
+    * driver state, never the mask itself); each selected lane is one
+    * [[gather]] request against the source blocks sharing its axis
+    * coordinate. The result is materialized before return.
     */
   def compressArr(mask: GArr, axis: Int = 0, targetChunk: Int = 65536): GArr = {
     require(axis >= 0 && axis < ndim)
@@ -320,87 +320,13 @@ final case class GArr(shape: Seq[Long], chunks: Seq[Seq[Int]], blocks: Dataset[A
     val aligned =
       if (mask.chunks(0) == chunks(axis)) mask
       else mask.regridTo(chunks(axis))
-    // the mask is consumed twice (counts, then the co-group) — cache its
-    // blocks so a derived mask (e.g. thresholded row sums) computes its
-    // lineage once; the counts collect below materializes the cache
-    val maskCached = aligned.blocks
-      .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK_SER)
-    // O(axis grid) driver state: selected count per axis block -> prefix
-    val counts = maskCached
-      .map(b => (b.bid(0), b.data.count(_ != 0.0).toLong))
-      .collect().toMap
-    val offsets = Positions.starts(counts, chunks(axis).length)
-    val k = offsets.last
     val axisChunk = math.max(1, math.min(targetChunk,
       if (chunks(axis).nonEmpty) chunks(axis).max else targetChunk))
-    val outAxisChunks = evenChunks(k, axisChunk)
-    val newChunks = chunks.updated(axis, outAxisChunks)
-    val outLens = shape.updated(axis, k)
-    val T = startsOf(outAxisChunks)
-    val dstGrid = newChunks.map(_.length)
-    val bcOff = s.sparkContext.broadcast(offsets)
-    val nd = ndim
-    val ax = axis
-    val srcChunksB = chunks.map(_.toArray)
-    val newChunksB = newChunks.map(_.toArray)
-    // co-group each mask block with every source block sharing its axis
-    // coordinate (tag 1 = mask); the group emits coalesced pieces
-    val tagged = blocks.map(b => (b.bid(ax), 0, b.bid, b.data))
-      .union(maskCached.map(b => (b.bid(0), 1, b.bid, b.data)))
-    val pieces = tagged.groupByKey(_._1).flatMapGroups { (axBlock, it) =>
-      var m: Array[Double] = null
-      val src = scala.collection.mutable.ArrayBuffer[(Seq[Int], Array[Double])]()
-      it.foreach { row => if (row._2 == 1) m = row._4 else src += ((row._3, row._4)) }
-      if (m == null || src.isEmpty) Iterator.empty
-      else {
-        // local ranks of the selected axis lanes + their global positions
-        val selLocal = scala.collection.mutable.ArrayBuilder.make[Int]
-        var i = 0
-        while (i < m.length) { if (m(i) != 0.0) selLocal += i; i += 1 }
-        val sel = selLocal.result()
-        val g0 = bcOff.value(axBlock)
-        src.iterator.flatMap { case (bid, data) =>
-          val sdims = Array.tabulate(nd)(d => srcChunksB(d)(bid(d)))
-          val sstr = cStridesI(sdims)
-          val out = scala.collection.mutable.LinkedHashMap[Long, PieceBuf]()
-          var r = 0
-          while (r < sel.length) {
-            val gpos = g0 + r
-            val jb = Positions.locate(T, gpos)
-            val dstBid = bid.updated(ax, jb)
-            val key = linearBidL(dstBid, dstGrid)
-            val ddims = Array.tabulate(nd)(d => newChunksB(d)(dstBid(d)))
-            val dstr = cStridesI(ddims)
-            val buf = out.getOrElseUpdate(key, new PieceBuf(key, dstBid))
-            // walk the non-axis lanes of this selected coordinate
-            val lanes = sdims.clone(); lanes(ax) = 1
-            val t = new Array[Int](nd)
-            val total = lanes.product
-            var p = 0
-            while (p < total) {
-              var so = 0; var doff = 0; var d = 0
-              while (d < nd) {
-                val td = if (d == ax) sel(r) else t(d)
-                val od = if (d == ax) (gpos - T(jb)).toInt else t(d)
-                so += td * sstr(d)
-                doff += od * dstr(d)
-                d += 1
-              }
-              buf.add(doff, data(so))
-              incOdo(t, lanes)
-              p += 1
-            }
-            r += 1
-          }
-          out.valuesIterator.map(_.toPiece)
-        }
-      }
+    maskRanks(aligned) { (k, ranks) =>
+      // a 1-D mask block's key is its axis block, its offset the lane
+      gather(Seq(axis), axis, evenChunks(k, axisChunk), 1,
+        s.createDataset(ranks.map { case (r, ib, off, _) => (ib, r, Array(off)) }))
     }
-    val outBlocks = assemble(pieces, newChunks)
-      .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK_SER)
-    outBlocks.count() // materialize before dropping the mask cache
-    maskCached.unpersist()
-    GArr(outLens, newChunks, outBlocks)
   }
 
   /** Rechunk a 1-D array onto EXACT target chunk boundaries (not just a
@@ -415,94 +341,31 @@ final case class GArr(shape: Seq[Long], chunks: Seq[Seq[Int]], blocks: Dataset[A
   /** numpy boolean-mask indexing `x[mask]` with a DISTRIBUTED mask of
     * identical shape/chunks (reference `array/slicing.py:1061`
     * `slice_with_bool_dask_array`): selected elements in global C order,
-    * flattened to 1-D. When block-local order partitions global C order —
-    * 1-D, or ndim chunked ONLY along axis 0 (each block is then one
-    * contiguous C-order range) — a counts-prefix path runs (one block
-    * join + O(nblocks) driver counts + one scatter shuffle, no sort);
-    * otherwise ndim≥2 falls back to a distributed sortByKey on the global
-    * flat index and a [[Positions.pack]]. The result is materialized
-    * (counted) before return — like dask, the unknown output length
-    * forces a compute barrier.
+    * flattened to 1-D. [[maskRanks]] ranks the selected positions with
+    * their values riding along, and one shuffle packs the ranked values
+    * into the output blocks (each task ships one piece per output block
+    * its ranks touch). The result is materialized before return — like
+    * dask, the unknown output length forces a compute barrier.
     */
   def booleanMask(mask: GArr, targetChunk: Int = 65536): GArr = {
     require(shape == mask.shape && chunks == mask.chunks,
       s"booleanMask requires identical shape/chunks: $shape vs ${mask.shape}")
     val s = spark
     import s.implicits._
-    if (grid.drop(1).forall(_ == 1)) {
-      val l = blocks.map(b => (b.bid(0), b.data))
-      val r = mask.blocks.map(b => (b.bid(0), b.data))
-      val sel = l.joinWith(r, l("_1") === r("_1")).map { case ((ib, d), (_, m)) =>
-        val buf = scala.collection.mutable.ArrayBuilder.make[Double]
-        var i = 0
-        while (i < d.length) { if (m(i) != 0.0) buf += d(i); i += 1 }
-        (ib, buf.result())
-      }.persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK_SER)
-      val counts = sel.map(t => (t._1, t._2.length.toLong)).collect().toMap
-      val offsets = Positions.starts(counts, grid(0))
-      val k = offsets.last
-      val outChunks = evenChunks(k, targetChunk)
-      val T = startsOf(outChunks)
-      val dstGrid = Seq(outChunks.length)
-      val bcOff = s.sparkContext.broadcast(offsets)
-      val pieces = sel.flatMap { case (b, vals) =>
+    val chunk = math.max(1, targetChunk)
+    maskRanks(mask, Some(this)) { (k, ranks) =>
+      val packed = ranks.mapPartitions { it =>
         val out = scala.collection.mutable.LinkedHashMap[Long, PieceBuf]()
-        val g0 = bcOff.value(b)
-        var i = 0
-        while (i < vals.length) {
-          val gpos = g0 + i
-          val jb = Positions.locate(T, gpos)
-          val key = linearBidL(Seq(jb), dstGrid)
-          out.getOrElseUpdate(key, new PieceBuf(key, Seq(jb)))
-            .add((gpos - T(jb)).toInt, vals(i))
-          i += 1
+        it.foreach { case (r, _, _, v) =>
+          out.getOrElseUpdate(r / chunk, new PieceBuf(r / chunk, Nil)).add((r % chunk).toInt, v)
         }
-        out.valuesIterator.map(_.toPiece)
+        out.valuesIterator.map(p => (p.key, p.toPiece))
+      }.groupByKey().map { case (b, ps) =>
+        val a = new Array[Double](math.min(chunk.toLong, k - b * chunk).toInt)
+        ps.foreach(p => p.offs.indices.foreach(i => a(p.offs(i)) = p.vals(i)))
+        ABlock(Seq(b.toInt), a)
       }
-      val outBlocks = assemble(pieces, Seq(outChunks))
-        .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK_SER)
-      outBlocks.count() // materialize before dropping the selection cache
-      sel.unpersist()
-      GArr(Seq(k), Seq(outChunks), outBlocks)
-    } else {
-      // pair blocks, emit (global flat idx, value) for selected, then a
-      // distributed sort and a positional pack (the fromColumn shape)
-      val g = grid
-      val sh = shape
-      val st = chunks.map(startsOf)
-      val l = blocks.map(b => (linearBidL(b.bid, g), b.bid, b.data))
-      val r = mask.blocks.map(b => (linearBidL(b.bid, g), b.data))
-      val nd = ndim
-      val selected = l.joinWith(r, l("_1") === r("_1")).flatMap { case ((_, bid, d), (_, m)) =>
-        val dims = Array.tabulate(nd)(dd => chunkDim(st(dd), bid(dd)))
-        val gstart = Array.tabulate(nd)(dd => st(dd)(bid(dd)))
-        val strides = cStrides(sh)
-        val out = scala.collection.mutable.ArrayBuilder.make[(Long, Double)]
-        val loc = new Array[Int](nd)
-        var i = 0
-        while (i < d.length) {
-          if (m(i) != 0.0) {
-            var f = 0L; var dd = 0
-            while (dd < nd) { f += (gstart(dd) + loc(dd)) * strides(dd); dd += 1 }
-            out += ((f, d(i)))
-          }
-          incOdo(loc, dims)
-          i += 1
-        }
-        out.result()
-      }.rdd.persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK_SER)
-      val sorted = selected.sortByKey()
-      val starts = Positions.starts(sorted)
-      val k = starts.last
-      val chunk = math.max(1, targetChunk)
-      val outChunks = evenChunks(k, chunk)
-      val packed = Positions.pack(sorted, starts, 1, chunk)((kv, _) => kv._2)
-        .map { case (b, a) => ABlock(Seq(b), a) }
-      val outBlocks = s.createDataset(packed)
-        .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK_SER)
-      outBlocks.count()
-      selected.unpersist()
-      GArr(Seq(k), Seq(outChunks), outBlocks)
+      GArr(Seq(k), Seq(evenChunks(k, chunk)), s.createDataset(packed))
     }
   }
 
@@ -512,106 +375,196 @@ final case class GArr(shape: Seq[Long], chunks: Seq[Seq[Int]], blocks: Dataset[A
     * are (integral) positions into this array's `axis`. The output keeps
     * this array's shape with the indexed axis replaced by `idx`'s length
     * and chunks. Negative indices wrap numpy-style. Fully distributed — no
-    * index ever reaches the driver: requests are keyed by the source AXIS
-    * block (exchange 1: idx bytes only), values are looked up in a
-    * co-group against the source blocks sharing that axis coordinate, and
-    * results scatter to the output grid (exchange 2). The scale path when
+    * index ever reaches the driver: each index entry is one [[gather]]
+    * request keyed by its source AXIS block; `salt > 1` is the gather's
+    * skew guard for an index that hits one hot block. The scale path when
     * the index is too big to hold driver-side.
-    *
-    * `salt > 1` replicates each source block across `salt` co-group keys
-    * and spreads requests across them by output position — the skew guard
-    * for a degenerate index where everyone asks for positions in one hot
-    * block (bounded ×salt duplication of source bytes, ÷salt per-task
-    * request load).
     */
   def takeArr(idx: GArr, axis: Int = 0, salt: Int = 1): GArr = {
     require(idx.ndim == 1, "takeArr: index array must be 1-D")
     require(axis >= 0 && axis < ndim, s"takeArr: bad axis $axis for ndim $ndim")
-    require(salt >= 1)
     val s = spark
     import s.implicits._
     val S = startsOf(chunks(axis))
     val n = shape(axis)
     val idxStarts = startsOf(idx.chunks(0))
-    val outAxisChunks = idx.chunks(0)
-    val newChunks = chunks.updated(axis, outAxisChunks)
-    val outLens = shape.updated(axis, idx.shape(0))
-    val dstGrid = newChunks.map(_.length)
-    val T = startsOf(outAxisChunks)
-    val nd = ndim
-    val ax = axis
-    val nSalt = salt
-    val srcChunksB = chunks.map(_.toArray)
-    val newChunksB = newChunks.map(_.toArray)
-    // (group key = srcAxisBlock*salt + pos%salt, out axis position, src local axis offset)
     val requests = idx.blocks.flatMap { b =>
       val g0 = idxStarts(b.bid(0))
-      val out = new Array[(Long, Long, Int)](b.data.length)
-      var i = 0
-      while (i < b.data.length) {
+      b.data.indices.map { i =>
         val raw = b.data(i).toLong
         val srcIdx = if (raw < 0) raw + n else raw // numpy negative-index wrap
         require(srcIdx >= 0 && srcIdx < n, s"takeArr: index $raw out of bounds for length $n")
         val ib = Positions.locate(S, srcIdx)
-        val gpos = g0 + i
-        out(i) = (ib.toLong * nSalt + (gpos % nSalt), gpos, (srcIdx - S(ib)).toInt)
-        i += 1
+        (ib.toLong, g0 + i, Array((srcIdx - S(ib)).toInt))
       }
-      out
     }
-    // tag-union co-group: every source block sharing the axis coordinate
-    // (tag 0, replicated across salts) with that coordinate's requests
-    // (tag 1); one exchange carrying the source blocks `salt` times plus
-    // the index rows
+    gather(Seq(axis), axis, idx.chunks(0), salt, requests)
+  }
+
+  /** The gather co-group under [[takeArr]], [[vindex]], [[compressArr]]
+    * and (through [[gatherPieces]]) [[maskedAssign]].
+    * Request `(key, gpos, locals)` reads the source point at local
+    * offsets `locals` on the indexed `axes` of the source blocks whose
+    * indexed-axis block coordinates linearize (in `axes` order) to `key`,
+    * and writes it, with every non-indexed lane, to position `gpos` of a
+    * point axis (chunked `pointChunks`) placed at `pointAt` among the
+    * non-indexed axes.
+    *
+    * Plan shape, the same for every op on it: ONE exchange co-groups the
+    * requests with the source blocks (tag-union keyed `key · salt + gpos
+    * mod salt`, each source block replicated `salt` ways — the skew guard
+    * when one hot block absorbs most requests: ×salt source bytes, ÷salt
+    * requests per task); each request walks its non-indexed lanes into
+    * per-destination-block pieces; [[assemble]] packs the output grid in
+    * a second exchange. No driver collect, no all-pairs.
+    */
+  private def gather(axes: Seq[Int], pointAt: Int, pointChunks: Seq[Int], salt: Int,
+                     requests: Dataset[(Long, Long, Array[Int])]): GArr = {
+    val newChunks = (0 until ndim).filterNot(axes.contains).map(chunks)
+      .patch(pointAt, Seq(pointChunks), 0)
+    GArr(newChunks.map(_.map(_.toLong).sum), newChunks,
+      assemble(gatherPieces(axes, pointAt, pointChunks, salt, requests), newChunks))
+  }
+
+  /** [[gather]] up to its pieces: the co-group and the lane walk. */
+  private def gatherPieces(axes: Seq[Int], pointAt: Int, pointChunks: Seq[Int], salt: Int,
+                           requests: Dataset[(Long, Long, Array[Int])]): Dataset[ScatterPiece] = {
+    require(salt >= 1)
+    val s = spark
+    import s.implicits._
+    val nd = ndim
+    val g = grid
+    val axArr = axes.toArray
+    val nonAxes = (0 until nd).filterNot(axes.contains)
+    // per base dim: its slot in `locals` (indexed) or its output dim
+    val axPos = Array.fill(nd)(-1)
+    axes.zipWithIndex.foreach { case (a, i) => axPos(a) = i }
+    val outDim = Array.fill(nd)(-1)
+    nonAxes.zipWithIndex.foreach { case (d, j) => outDim(d) = if (j < pointAt) j else j + 1 }
+    val dstGrid = nonAxes.map(g).patch(pointAt, Seq(pointChunks.length), 0)
+    val srcChunksB = chunks.map(_.toArray)
+    val bcT = s.sparkContext.broadcast(startsOf(pointChunks))
+    val nSalt = salt
     val tagged = blocks.flatMap { b =>
-      val base = b.bid(ax).toLong * nSalt
-      (0 until nSalt).iterator.map(sl => (base + sl, 0, b.bid, b.data, 0L, 0))
-    }.union(requests.map(r => (r._1, 1, Seq.empty[Int], Array.empty[Double], r._2, r._3)))
-    val pieces = tagged.groupByKey(_._1).flatMapGroups { (_, it) =>
+      var kb = 0L
+      axArr.foreach(a => kb = kb * g(a) + b.bid(a))
+      (0 until nSalt).iterator.map(sl => (kb * nSalt + sl, 0, b.bid, b.data, 0L, Array.empty[Int]))
+    }.union(requests.map { case (kb, gpos, locals) =>
+      (kb * nSalt + gpos % nSalt, 1, Seq.empty[Int], Array.empty[Double], gpos, locals)
+    })
+    tagged.groupByKey(_._1).flatMapGroups { (_, it) =>
       val srcs = scala.collection.mutable.ArrayBuffer[(Seq[Int], Array[Double])]()
-      val reqs = scala.collection.mutable.ArrayBuilder.make[(Long, Int)]
+      val reqs = scala.collection.mutable.ArrayBuffer[(Long, Array[Int])]()
       it.foreach { row =>
         if (row._2 == 0) srcs += ((row._3, row._4)) else reqs += ((row._5, row._6))
       }
-      val rs = reqs.result()
-      if (srcs.isEmpty || rs.isEmpty) Iterator.empty
+      val T = bcT.value
+      if (reqs.isEmpty) Iterator.empty
       else srcs.iterator.flatMap { case (bid, data) =>
         val sdims = Array.tabulate(nd)(d => srcChunksB(d)(bid(d)))
         val sstr = cStridesI(sdims)
+        val lanes = sdims.clone()
+        axArr.foreach(a => lanes(a) = 1)
+        val laneTotal = lanes.product
         val out = scala.collection.mutable.LinkedHashMap[Long, PieceBuf]()
-        var r = 0
-        while (r < rs.length) {
-          val (gpos, srcLocal) = rs(r)
+        reqs.foreach { case (gpos, locals) =>
           val jb = Positions.locate(T, gpos)
-          val dstBid = bid.updated(ax, jb)
+          val dstBid = nonAxes.map(bid).patch(pointAt, Seq(jb), 0)
+          val dstr = cStridesI(nonAxes.map(d => sdims(d))
+            .patch(pointAt, Seq((T(jb + 1) - T(jb)).toInt), 0).toArray)
           val key = linearBidL(dstBid, dstGrid)
-          val ddims = Array.tabulate(nd)(d => newChunksB(d)(dstBid(d)))
-          val dstr = cStridesI(ddims)
           val buf = out.getOrElseUpdate(key, new PieceBuf(key, dstBid))
-          // walk the non-axis lanes of this requested coordinate
-          val lanes = sdims.clone(); lanes(ax) = 1
+          val pOff = (gpos - T(jb)).toInt * dstr(pointAt)
           val t = new Array[Int](nd)
-          val total = lanes.product
-          var p = 0
-          while (p < total) {
-            var so = 0; var doff = 0; var d = 0
+          var q = 0
+          while (q < laneTotal) {
+            var so = 0; var doff = pOff; var d = 0
             while (d < nd) {
-              val td = if (d == ax) srcLocal else t(d)
-              val od = if (d == ax) (gpos - T(jb)).toInt else t(d)
-              so += td * sstr(d)
-              doff += od * dstr(d)
+              val ap = axPos(d)
+              if (ap >= 0) so += locals(ap) * sstr(d)
+              else { so += t(d) * sstr(d); doff += t(d) * dstr(outDim(d)) }
               d += 1
             }
             buf.add(doff, data(so))
             incOdo(t, lanes)
-            p += 1
+            q += 1
           }
-          r += 1
         }
         out.valuesIterator.map(_.toPiece)
       }
     }
-    GArr(outLens, newChunks, assemble(pieces, newChunks))
+  }
+
+  /** The mask ranking under [[booleanMask]], [[maskedAssign]] and
+    * [[compressArr]]: ranks every selected (nonzero) position of `mask`
+    * in global C order and passes `use` the selected count k and each
+    * position's `(rank, mask block key, local offset, value)` — the value
+    * of `carried` (same grid as the mask) there, else 0.0. Then it
+    * materializes what `use` returns and releases the one cache it made,
+    * the per-block selection that the ranking reads twice, also when
+    * `use` throws (a rejected k).
+    *
+    * When block-local order partitions global C order — 1-D, or chunked
+    * ONLY along axis 0, where each block is one contiguous C-order range
+    * — the ranks are a counts prefix: O(nblocks) per-block counts reach
+    * the driver ([[Positions.starts]]), no sort. Otherwise the selected
+    * positions sort on their global flat C index and [[Positions.ranked]]
+    * numbers them: only the k selected positions ride the sort, never
+    * the array.
+    */
+  private def maskRanks(mask: GArr, carried: Option[GArr] = None)(
+      use: (Long, org.apache.spark.rdd.RDD[(Long, Long, Int, Double)]) => GArr): GArr = {
+    val s = spark
+    import s.implicits._
+    val g = mask.grid
+    val m = mask.blocks.map(b => (linearBidL(b.bid, g), b.data))
+    val paired = carried.fold(m.map { case (key, d) => (key, d, Array.empty[Double]) }) { x =>
+      val l = x.blocks.map(b => (linearBidL(b.bid, g), b.data))
+      m.joinWith(l, m("_1") === l("_1")).map { case ((key, d), (_, v)) => (key, d, v) }
+    }
+    // per block: the selected local offsets and the carried values there
+    val sel = paired.rdd.map { case (key, d, v) =>
+      val offs = scala.collection.mutable.ArrayBuilder.make[Int]
+      var i = 0
+      while (i < d.length) { if (d(i) != 0.0) offs += i; i += 1 }
+      val o = offs.result()
+      (key, o, if (v.isEmpty) v else o.map(i => v(i)))
+    }.persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK_SER)
+    try {
+      val (k, ranks) =
+        if (g.drop(1).forall(_ == 1)) {
+          val starts = Positions.starts(
+            sel.map { case (key, o, _) => (key.toInt, o.length.toLong) }.collect().toMap, g(0))
+          val bc = s.sparkContext.broadcast(starts)
+          (starts.last, sel.flatMap { case (key, o, v) =>
+            val g0 = bc.value(key.toInt)
+            o.indices.iterator.map(i => (g0 + i, key, o(i), if (v.isEmpty) 0.0 else v(i)))
+          })
+        } else {
+          val ga = g.toArray
+          val st = mask.chunks.map(startsOf).toArray
+          val strides = cStrides(mask.shape)
+          val sorted = sel.flatMap { case (key, o, v) =>
+            val bid = unravel(key, ga)
+            val dims = Array.tabulate(ga.length)(d => chunkDim(st(d), bid(d)))
+            o.indices.iterator.map { i =>
+              val loc = unravel(o(i), dims)
+              var f = 0L; var d = 0
+              while (d < dims.length) { f += (st(d)(bid(d)) + loc(d)) * strides(d); d += 1 }
+              (f, (key, o(i), if (v.isEmpty) 0.0 else v(i)))
+            }
+          }.sortByKey()
+          val starts = Positions.starts(sorted)
+          (starts.last, Positions.ranked(sorted, starts).map { case (r, (_, (key, off, v))) =>
+            (r, key, off, v)
+          })
+        }
+      val out = use(k, ranks)
+      val outBlocks = out.blocks
+        .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK_SER)
+      outBlocks.count() // materialize before the selection cache is released
+      out.copy(blocks = outBlocks)
+    } finally sel.unpersist()
   }
 
   /** dask `Array.blocks` / `Array.partitions` (reference
@@ -712,23 +665,15 @@ final case class GArr(shape: Seq[Long], chunks: Seq[Seq[Int]], blocks: Dataset[A
     * the raw arrays, with broadcasting resolved per element by 0-stride
     * lookup.  For a distributed indexer along one axis use [[takeArr]].
     *
-    * Plan shape — the [[takeArr]] tag-union co-group generalized from one
-    * axis to full coordinate tuples: each request keys by the linearized
-    * ARRAY-AXIS block coordinates of its source point; one exchange
-    * co-groups requests with the source blocks sharing those coordinates
-    * (each block replicated `salt` ways when one hot block absorbs most
-    * points); each request copies its non-indexed lanes into
-    * per-destination-block pieces; one assemble shuffle packs the output
-    * grid; a final [[reshape]] unflattens the points axis when the
-    * broadcast subspace is multi-dimensional.  Shuffle volume is O(output
-    * elements) plus one pass over the touched source blocks — no driver
-    * collect, no all-pairs — so the op scales with chunk count, not array
-    * size.
+    * Plan shape: one [[gather]] with the array axes indexed and the
+    * points axis first — each request keys by the linearized ARRAY-AXIS
+    * block coordinates of its source point, and `salt` spreads a hot
+    * block — then a final [[reshape]] unflattens the points axis when the
+    * broadcast subspace is multi-dimensional.
     */
   def vindex(arrs: Map[Int, (Seq[Long], Array[Long])],
              targetChunk: Int = 65536, salt: Int = 1): GArr = {
     require(arrs.nonEmpty, "vindex: need at least one index array")
-    require(salt >= 1)
     val axes = arrs.keys.toSeq.sorted
     axes.foreach(a => require(a >= 0 && a < ndim, s"vindex: bad axis $a for ndim $ndim"))
     val s = spark
@@ -765,9 +710,6 @@ final case class GArr(shape: Seq[Long], chunks: Seq[Seq[Int]], blocks: Dataset[A
     val srcArrGrid: Array[Int] = axes.map(a => grid(a)).toArray
     val bShapeArr = bShape.toArray
     val nbL = nb
-    val outAxisChunks = evenChunks(npoints, targetChunk)
-    val T = startsOf(outAxisChunks)
-    val nSalt = salt
     val requests = s.range(npoints).as[Long].mapPartitions { it =>
       val raw = bcArrs.value
       it.map { p =>
@@ -793,75 +735,13 @@ final case class GArr(shape: Seq[Long], chunks: Seq[Seq[Int]], blocks: Dataset[A
           locals(a) = (idx - S(a)(ib)).toInt
           a += 1
         }
-        (keyBlocks * nSalt + (p % nSalt), p, locals.toSeq)
+        (keyBlocks, p, locals)
       }
     }
-    val nd = ndim
-    val axSet = axes.toSet
-    val nonAxes = (0 until nd).filterNot(axSet)
-    val nonAxesArr = nonAxes.toArray
-    val srcChunksB = chunks.map(_.toArray)
-    // dest grid: points axis first, then the non-indexed axes in order
-    val newChunks: Seq[Seq[Int]] = outAxisChunks +: nonAxes.map(chunks)
-    val outLens: Seq[Long] = npoints +: nonAxes.map(shape)
-    val dstGrid = newChunks.map(_.length)
-    val newChunksB = newChunks.map(_.toArray)
-    // lane index into `locals` per base dim (-1 = non-indexed lane)
-    val axPos = Array.fill(nd)(-1)
-    axes.zipWithIndex.foreach { case (a, i) => axPos(a) = i }
-    val tagged = blocks.flatMap { b =>
-      var kb = 0L
-      var a = 0
-      while (a < nA) { kb = kb * srcArrGrid(a) + b.bid(axArr(a)); a += 1 }
-      val base = kb * nSalt
-      (0 until nSalt).iterator.map(sl => (base + sl, 0, b.bid, b.data, 0L, Seq.empty[Int]))
-    }.union(requests.map(r => (r._1, 1, Seq.empty[Int], Array.empty[Double], r._2, r._3)))
-    val pieces = tagged.groupByKey(_._1).flatMapGroups { (_, it) =>
-      val srcs = scala.collection.mutable.ArrayBuffer[(Seq[Int], Array[Double])]()
-      val reqs = scala.collection.mutable.ArrayBuffer[(Long, Seq[Int])]()
-      it.foreach { row =>
-        if (row._2 == 0) srcs += ((row._3, row._4)) else reqs += ((row._5, row._6))
-      }
-      if (srcs.isEmpty || reqs.isEmpty) Iterator.empty
-      else srcs.iterator.flatMap { case (bid, data) =>
-        val sdims = Array.tabulate(nd)(d => srcChunksB(d)(bid(d)))
-        val sstr = cStridesI(sdims)
-        val lanes = sdims.clone()
-        var a = 0
-        while (a < nA) { lanes(axArr(a)) = 1; a += 1 }
-        val laneTotal = lanes.product
-        val out = scala.collection.mutable.LinkedHashMap[Long, PieceBuf]()
-        reqs.foreach { case (gpos, locals) =>
-          val jb = Positions.locate(T, gpos)
-          val dstBid: Seq[Int] = jb +: nonAxesArr.toSeq.map(d => bid(d))
-          val key = linearBidL(dstBid, dstGrid)
-          val ddims = Array.tabulate(dstBid.length)(k => newChunksB(k)(dstBid(k)))
-          val dstr = cStridesI(ddims)
-          val buf = out.getOrElseUpdate(key, new PieceBuf(key, dstBid))
-          val pLocal = (gpos - T(jb)).toInt
-          val t = new Array[Int](nd)
-          var q = 0
-          while (q < laneTotal) {
-            var so = 0; var doff = pLocal * dstr(0); var d = 0
-            var j = 1
-            while (d < nd) {
-              val ap = axPos(d)
-              if (ap >= 0) so += locals(ap) * sstr(d)
-              else { so += t(d) * sstr(d); doff += t(d) * dstr(j); j += 1 }
-              d += 1
-            }
-            buf.add(doff, data(so))
-            incOdo(t, lanes)
-            q += 1
-          }
-        }
-        out.valuesIterator.map(_.toPiece)
-      }
-    }
-    val flat = GArr(outLens, newChunks, assemble(pieces, newChunks))
+    val flat = gather(axes, 0, evenChunks(npoints, targetChunk), salt, requests)
     if (nb <= 1) flat
     else {
-      val finalShape = bShape ++ nonAxes.map(shape)
+      val finalShape = bShape ++ flat.shape.tail
       flat.reshape(finalShape, chooseChunks(finalShape, targetChunk).map(_.head))
     }
   }
@@ -1222,145 +1102,34 @@ final case class GArr(shape: Seq[Long], chunks: Seq[Seq[Int]], blocks: Dataset[A
     * (reference `array/slicing.py:1464` `setitem_array`, the bool-index
     * branch; the scalar form is [[maskedFill]]). ndim base; mask has this
     * array's shape/chunks; `values` is 1-D of length = selected count,
-    * consumed in global C order of the selected positions. 1-D bases take
-    * the counts-prefix path (O(nblocks) driver state, as [[booleanMask]]);
-    * ndim ≥ 2 ranks selected positions by a distributed sort on the global
-    * flat index (block-local order does not partition global C order —
-    * same reasoning as the ndim [[booleanMask]] branch). Ranks fetch their
-    * value through a takeArr-style co-group keyed by VALUE block, and the
-    * writes overlay onto the original blocks.
+    * consumed in global C order of the selected positions.
+    * [[maskRanks]] ranks the selected positions; a [[gather]] co-group
+    * over `values` (keyed by VALUE block) fetches each rank's value
+    * straight into pieces of this array's blocks, and the pieces overlay
+    * onto the original blocks. The result is materialized before return.
     */
   def maskedAssign(mask: GArr, values: GArr): GArr = {
     require(values.ndim == 1, "maskedAssign: values must be 1-D")
     require(shape == mask.shape && chunks == mask.chunks,
       s"maskedAssign requires identical base/mask shape+chunks: $shape vs ${mask.shape}")
-    // ndim chunked only along axis 0 keeps the counts-prefix path (block
-    // payloads are contiguous C-order ranges there, as in 1-D); anything
-    // else needs the global rank sort
-    if (ndim > 1 && grid.drop(1).exists(_ > 1)) return maskedAssignNd(mask, values)
     val s = spark
     import s.implicits._
-    val maskCached = mask.blocks
-      .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK_SER)
-    val counts = maskCached.map(b => (b.bid(0), b.data.count(_ != 0.0).toLong)).collect().toMap
-    val offsets = Positions.starts(counts, grid(0))
-    val k = offsets.last
-    require(values.shape == Seq(k),
-      s"maskedAssign: values length ${values.shape.head} != selected count $k")
     val V = startsOf(values.chunks(0))
-    val g = grid
-    val bcOff = s.sparkContext.broadcast(offsets)
-    // requests: (value block, value local off, target block, target local off)
-    val requests = maskCached.flatMap { b =>
-      val out = scala.collection.mutable.ArrayBuilder.make[(Int, Int, Int, Int)]
-      val g0 = bcOff.value(b.bid(0))
-      var rank = 0
-      var i = 0
-      while (i < b.data.length) {
-        if (b.data(i) != 0.0) {
-          val gr = g0 + rank
-          val vb = Positions.locate(V, gr)
-          out += ((vb, (gr - V(vb)).toInt, b.bid(0), i))
-          rank += 1
-        }
-        i += 1
-      }
-      out.result()
+    // the gather's point axis runs through this array's blocks in linear
+    // order (O(nblocks) driver metadata), so position B(key) + off is
+    // local offset off of block `key` and the gather's piece keys are the
+    // overlay's block keys
+    val blockSizes = chunks.foldLeft(Seq(1))((acc, cs) => for (a <- acc; c <- cs) yield a * c)
+    val bcB = s.sparkContext.broadcast(startsOf(blockSizes))
+    maskRanks(mask) { (k, ranks) =>
+      require(values.shape == Seq(k),
+        s"maskedAssign: values length ${values.shape.head} != selected count $k")
+      overlay(values.gatherPieces(Seq(0), 0, blockSizes, 1,
+        s.createDataset(ranks.map { case (r, key, off, _) =>
+          val vb = Positions.locate(V, r)
+          (vb.toLong, bcB.value(key.toInt) + off, Array((r - V(vb)).toInt))
+        })))
     }
-    val piecesIn = values.blocks.map(b => (b.bid(0), 0, b.data, 0, 0, 0))
-      .union(requests.map(r => (r._1, 1, Array.empty[Double], r._3, r._4, r._2)))
-    val pieces = piecesIn.groupByKey(_._1).flatMapGroups { (_, it) =>
-      var data: Array[Double] = null
-      val reqs = scala.collection.mutable.ArrayBuffer[(Int, Int, Int)]()
-      it.foreach { row =>
-        if (row._2 == 0) data = row._3 else reqs += ((row._4, row._5, row._6))
-      }
-      if (data == null || reqs.isEmpty) Iterator.empty
-      else {
-        val out = scala.collection.mutable.LinkedHashMap[Int, PieceBuf]()
-        reqs.foreach { case (xb, xOff, vLocal) =>
-          out.getOrElseUpdate(xb, new PieceBuf(linearBidL(Seq(xb), g), Seq(xb)))
-            .add(xOff, data(vLocal))
-        }
-        out.valuesIterator.map(_.toPiece)
-      }
-    }
-    val res = overlay(pieces)
-    val outBlocks = res.blocks
-      .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK_SER)
-    outBlocks.count() // materialize before dropping the mask cache
-    maskCached.unpersist()
-    res.copy(blocks = outBlocks)
-  }
-
-  /** ndim ≥ 2 branch of [[maskedAssign]]: selected positions carry their
-    * global flat C index; a distributed sortByKey + zipWithIndex assigns
-    * each its C-order rank (the value it consumes), then the value lookup
-    * is the same VALUE-block co-group as the 1-D path and the writes
-    * overlay. Only the k SELECTED positions ride the sort, never the array.
-    */
-  private def maskedAssignNd(mask: GArr, values: GArr): GArr = {
-    val s = spark
-    import s.implicits._
-    val g = grid
-    val sh = shape
-    val st = chunks.map(startsOf)
-    val nd = ndim
-    val strides = cStrides(sh)
-    // (global flat C index, (target block key, target bid, target local off))
-    val selected = mask.blocks.rdd.flatMap { b =>
-      val bid = b.bid
-      val dims = Array.tabulate(nd)(d => chunkDim(st(d), bid(d)))
-      val gstart = Array.tabulate(nd)(d => st(d)(bid(d)))
-      val key = linearBidL(bid, g)
-      val out = scala.collection.mutable.ArrayBuilder.make[(Long, (Long, Seq[Int], Int))]
-      val loc = new Array[Int](nd)
-      var i = 0
-      while (i < b.data.length) {
-        if (b.data(i) != 0.0) {
-          var f = 0L; var d = 0
-          while (d < nd) { f += (gstart(d) + loc(d)) * strides(d); d += 1 }
-          out += ((f, (key, bid, i)))
-        }
-        incOdo(loc, dims)
-        i += 1
-      }
-      out.result()
-    }.sortByKey().map(_._2).zipWithIndex()
-      .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK_SER)
-    val k = selected.count()
-    require(values.shape == Seq(k),
-      s"maskedAssign: values length ${values.shape.head} != selected count $k")
-    val V = startsOf(values.chunks(0))
-    // requests keyed by VALUE block: (value local off, target key, bid, off)
-    val requests = s.createDataset(selected.map { case ((key, bid, off), rank) =>
-      val vb = Positions.locate(V, rank)
-      (vb, 1, Array.empty[Double], key, bid, off, (rank - V(vb)).toInt)
-    })
-    val piecesIn = values.blocks
-      .map(b => (b.bid(0), 0, b.data, 0L, Seq.empty[Int], 0, 0))
-      .union(requests.map(r => (r._1, r._2, r._3, r._4, r._5, r._6, r._7)))
-    val pieces = piecesIn.groupByKey(_._1).flatMapGroups { (_, it) =>
-      var data: Array[Double] = null
-      val reqs = scala.collection.mutable.ArrayBuffer[(Long, Seq[Int], Int, Int)]()
-      it.foreach { row =>
-        if (row._2 == 0) data = row._3 else reqs += ((row._4, row._5, row._6, row._7))
-      }
-      if (data == null || reqs.isEmpty) Iterator.empty
-      else {
-        val out = scala.collection.mutable.LinkedHashMap[Long, PieceBuf]()
-        reqs.foreach { case (key, bid, off, vLocal) =>
-          out.getOrElseUpdate(key, new PieceBuf(key, bid)).add(off, data(vLocal))
-        }
-        out.valuesIterator.map(_.toPiece)
-      }
-    }
-    val res = overlay(pieces)
-    val outBlocks = res.blocks
-      .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK_SER)
-    outBlocks.count() // materialize before dropping the rank cache
-    selected.unpersist()
-    res.copy(blocks = outBlocks)
   }
 
   /** numpy `__setitem__` with a scalar — `x[start:stop:step, ...] = v`
@@ -3577,6 +3346,15 @@ object GArr {
 
   private[operators] def startsOf(cs: Seq[Int]): Array[Long] =
     cs.scanLeft(0L)(_ + _).toArray
+
+  /** C-order coordinates of linear index `flat` in a grid of `dims`. */
+  private[operators] def unravel(flat: Long, dims: Array[Int]): Array[Int] = {
+    val c = new Array[Int](dims.length)
+    var rem = flat
+    var d = dims.length - 1
+    while (d >= 0) { c(d) = (rem % dims(d)).toInt; rem /= dims(d); d -= 1 }
+    c
+  }
 
   private[operators] def chunkDim(starts: Array[Long], i: Int): Int =
     (starts(i + 1) - starts(i)).toInt

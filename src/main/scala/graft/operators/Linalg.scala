@@ -1188,13 +1188,18 @@ object Linalg {
   def cholesky(a: GArr): GArr = {
     val (df, bs) = garrToBlocks(a)
     val nb = (a.shape(0) / bs).toInt
-    val lower = blocksToGArr(cholesky(df, bs), bs, nb).blocks
+    val factor = cholesky(df, bs)
     val spark = a.blocks.sparkSession
     import spark.implicits._
     val zeros = spark.range(nb.toLong * nb).map { flat: java.lang.Long =>
       val bi = (flat.longValue / nb).toInt; val bj = (flat.longValue % nb).toInt
       ABlock(Seq(bi, bj), new Array[Double](bs * bs))
     }.filter(blk => blk.bid(0) < blk.bid(1))
-    GArr(a.shape, a.chunks, lower.union(zeros))
+    // the returned array owns its cache: materialize it, then release the
+    // factor frame it was built from
+    val blocks = blocksToGArr(factor, bs, nb).blocks.union(zeros)
+      .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK_SER)
+    try blocks.count() finally factor.unpersist()
+    GArr(a.shape, a.chunks, blocks)
   }
 }

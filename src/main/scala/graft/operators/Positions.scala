@@ -8,8 +8,9 @@ import org.apache.spark.rdd.RDD
   * operator reads them; here they are counted once per call by [[starts]].
   * Users: `Quantile.exact`/`exactGrouped` (order statistics), `GBag.sample`
   * and `choices` (Floyd's draw over `[0, n)`), `GArr.fromColumn`/
-  * `fromColumns` and `booleanMask` (the chunk grid), plus the per-block
-  * offsets of `compressArr`/`booleanMask`/`maskedAssign`.
+  * `fromColumns` (the chunk grid), and GArr's one mask ranking
+  * (`maskRanks`, under `booleanMask`, `maskedAssign` and `compressArr`):
+  * the per-block counts prefix, or [[ranked]] over the sorted selection.
   *
   *   - Counts are `Long`s: `Iterator.size` is an `Int` and wraps past 2^31
   *     rows in one split, the low-parallelism regime at scale.
@@ -17,10 +18,10 @@ import org.apache.spark.rdd.RDD
   *     (`mapPartitionsWithIndex`), never by `TaskContext.getPartitionId()`:
   *     a downstream `coalesce()` fuses the narrow chain into fewer tasks,
   *     and a task id would then pick from the wrong split.
-  *   - Drift check: [[gather]] and [[pack]] re-read the input after
-  *     [[starts]] counted it. Every split checks that it still has the
-  *     counted number of rows (so it also matched every offset wanted of
-  *     it), and throws `IllegalStateException` otherwise. An input that
+  *   - Drift check: [[gather]], [[ranked]] and [[pack]] re-read the input
+  *     after [[starts]] counted it. Every split checks that it still has
+  *     the counted number of rows (so it also matched every offset wanted
+  *     of it), and throws `IllegalStateException` otherwise. An input that
   *     changes between the two reads (a nondeterministic recompute) fails
   *     the job; it never yields a short or shifted result.
   *   - [[starts]] is one driver collect of O(npartitions) `Long`s, not a
@@ -92,6 +93,19 @@ private[graft] object Positions {
         } else Iterator.empty
       }
       picked ++ { checkSplit(p, off, st(p + 1) - st(p)); Iterator.empty }
+    }
+  }
+
+  /** `(position, row)` for every row, in split order: the ranks of an
+    * ordered RDD (a sorted selection), with the drift check.
+    */
+  def ranked[R](rdd: RDD[R], starts: Array[Long]): RDD[(Long, R)] = {
+    val bc = rdd.sparkContext.broadcast(starts)
+    rdd.mapPartitionsWithIndex { (p, it) =>
+      val st = bc.value
+      var g = st(p)
+      it.map { r => val o = (g, r); g += 1; o } ++
+        { checkSplit(p, g - st(p), st(p + 1) - st(p)); Iterator.empty }
     }
   }
 

@@ -2,6 +2,7 @@ package graft
 
 import graft.SparkTestBase
 import org.apache.spark.sql.execution.SparkPlan
+import org.apache.spark.sql.execution.columnar.InMemoryTableScanExec
 import org.apache.spark.sql.execution.exchange.{BroadcastExchangeExec, Exchange, ShuffleExchangeExec}
 
 /** Plan-shape drift guards: the scale-critical plan properties PLANS.md
@@ -154,6 +155,41 @@ class PlanGuardSpec extends SparkTestBase {
     val p = noAqePlan(a.takeArr(idx).blockSums)
     // exchange 1: requests+blocks co-group; exchange 2: scatter assemble
     assert(shuffles(p) == 2, s"takeArr exchange count changed:\n$p")
+  }
+
+  /** Shuffles of `p` plus those of the plans behind the caches it scans. */
+  private def shufflesThroughCaches(p: SparkPlan): Int = collectAll(p).map {
+    case m: InMemoryTableScanExec => shufflesThroughCaches(m.relation.cachedPlan)
+    case _: ShuffleExchangeExec => 1
+    case _ => 0
+  }.sum
+
+  test("GArr.vindex: the gather co-group plus the assemble, TWO exchanges (THREE with the subspace reshape)") {
+    import graft.operators.GArr
+    val a = GArr.fromFunction(spark, Seq(60L, 40L), Seq(16, 16))(g => g(0) * 41.0 + g(1))
+    val pts = Map(0 -> (Seq(6L), Array(0L, 59L, 17L, 17L, 33L, 2L)),
+      1 -> (Seq(6L), Array(39L, 0L, 16L, 5L, 21L, 2L)))
+    for (salt <- Seq(1, 2)) {
+      val p = noAqePlan(a.vindex(pts, salt = salt).blockSums)
+      assert(shuffles(p) == 2, s"vindex salt=$salt exchange count changed:\n$p")
+    }
+    val grid = Map(0 -> (Seq(3L, 1L), Array(1L, 40L, 59L)), 1 -> (Seq(4L), Array(0L, 39L, 7L, 20L)))
+    val p = noAqePlan(a.vindex(grid, targetChunk = 5).blockSums)
+    assert(shuffles(p) == 3, s"vindex (reshaped subspace) exchange count changed:\n$p")
+  }
+
+  test("GArr.compressArr: the gather co-group plus the assemble, exactly TWO exchanges") {
+    import graft.operators.GArr
+    val a = GArr.fromFunction(spark, Seq(60L, 40L), Seq(16, 16))(g => g(0) * 41.0 + g(1))
+    val m = GArr.fromFunction(spark, Seq(40L), Seq(16))(g => if (g(0) % 3 != 1) 1.0 else 0.0)
+    val prev = spark.conf.get("spark.sql.adaptive.enabled", "true")
+    spark.conf.set("spark.sql.adaptive.enabled", "false")
+    // the result comes back cached: count the exchanges behind the cache
+    val c = try a.compressArr(m, axis = 1) finally spark.conf.set("spark.sql.adaptive.enabled", prev)
+    try {
+      val p = c.blocks.queryExecution.executedPlan
+      assert(shufflesThroughCaches(p) == 2, s"compressArr exchange count changed:\n$p")
+    } finally c.blocks.unpersist(true)
   }
 
   test("GArr.slidingWindowAxis: the one-sided halo gather costs exactly ONE shuffle") {

@@ -92,6 +92,21 @@ class BagLinalgStreamSpec extends SparkTestBase {
     assertThrows[IllegalArgumentException](tiny.choices(-1, 0).compute())
   }
 
+  test("bag: sample and choices leave nothing persisted once the returned bag is released") {
+    val sc = spark.sparkContext
+    val b = GBag.fromSeq(spark, (1 to 200).toSeq, npartitions = 3)
+    val draws = Seq[(String, GBag[Int] => GBag[Int])](
+      "sample" -> (_.sample(20, seed = 7)), "choices" -> (_.choices(20, seed = 7)))
+    for ((name, draw) <- draws) {
+      val before = sc.getPersistentRDDs.keySet.toSet
+      val got = draw(b)
+      assert(got.compute().length == 20, name)
+      got.ds.unpersist(true)
+      assert((sc.getPersistentRDDs.keySet.toSet -- before).isEmpty,
+        s"$name left persisted: ${sc.getPersistentRDDs.keySet.toSet -- before}")
+    }
+  }
+
   test("bag: accumulate prefix scan matches driver scan under any partitioning") {
     val xs = Seq(3, 1, 4, 1, 5, 9, 2, 6, 5, 3, 5)
     val want = xs.scanLeft(0)(_ + _).tail // running sums, no initial

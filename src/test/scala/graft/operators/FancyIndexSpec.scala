@@ -18,6 +18,9 @@ class FancyIndexSpec extends SparkTestBase {
     Array.tabulate(a.numElements.toInt)(i => m(i.toLong))
   }
 
+  private def persisted(): Set[Int] = spark.sparkContext.getPersistentRDDs.keySet.toSet
+  private def persistedSince(before: Set[Int]): Set[Int] = persisted() -- before
+
   private val f1: Array[Long] => Double = g => 3.0 + 2.0 * g(0)
   private val f2: Array[Long] => Double = g => 1.0 + 7.0 * g(0) + 13.0 * g(1)
 
@@ -219,7 +222,9 @@ class FancyIndexSpec extends SparkTestBase {
     val a = GArr.fromFunction(spark, Seq(10L), Seq(4))(f1)
     val mask = GArr.fromFunction(spark, Seq(10L), Seq(4))(g => if (g(0) < 4) 1.0 else 0.0)
     val bad = GArr.fromFunction(spark, Seq(3L), Seq(3))(g => g(0).toDouble)
+    val before = persisted()
     intercept[IllegalArgumentException] { a.maskedAssign(mask, bad) }
+    assert(persistedSince(before).isEmpty, s"a rejected call left persisted: ${persistedSince(before)}")
   }
 
   test("updatedFancy 2-D axis 0: duplicate rows last-wins, cross-chunk, negative index") {
@@ -322,7 +327,9 @@ class FancyIndexSpec extends SparkTestBase {
     val a = GArr.fromFunction(spark, Seq(4L, 4L), Seq(2, 2))(f2)
     val mask = GArr.fromFunction(spark, Seq(4L, 4L), Seq(2, 2))(g => if (g(0) == g(1)) 1.0 else 0.0)
     val bad = GArr.fromFunction(spark, Seq(2L), Seq(2))(g => g(0).toDouble)
+    val before = persisted()
     intercept[IllegalArgumentException] { a.maskedAssign(mask, bad) }
+    assert(persistedSince(before).isEmpty, s"a rejected call left persisted: ${persistedSince(before)}")
   }
 
   test("updatedSlice array: 2-D block assignment across chunk boundaries") {

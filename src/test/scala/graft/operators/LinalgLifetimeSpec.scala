@@ -1,37 +1,14 @@
 package graft.operators
 
-import graft.SparkTestBase
-
 /** Jobs and cache lifetime of the blocked factorizations: `lu`,
   * `cholesky` and `solveTriangular` start a fixed number of Spark jobs
   * per call on each panel-delivery path, and leave no persisted RDD
   * behind once their returned frames are released.
   */
-class LinalgLifetimeSpec extends SparkTestBase {
+class LinalgLifetimeSpec extends CallLifetime {
 
   private val broadcast = 16L << 20
   private val cogroup = 0L
-
-  /** The number of jobs `body` starts, counted under a job group of its
-    * own (a barrier job in a second group is awaited, so the listener bus
-    * has delivered every earlier job event), and the ids of the RDDs it
-    * leaves persisted once `release` has freed its result.
-    */
-  private def measure[T](body: => T)(release: T => Unit): (Int, Set[Int]) = {
-    val sc = spark.sparkContext
-    val before = sc.getPersistentRDDs.keySet.toSet
-    val group = s"linalg-jobs-${java.util.UUID.randomUUID}"
-    sc.setJobGroup(group, "call")
-    val result = try body finally sc.clearJobGroup()
-    sc.setJobGroup(s"$group-barrier", "barrier")
-    try sc.parallelize(Seq(1), 1).count() finally sc.clearJobGroup()
-    val deadline = System.nanoTime() + 10000000000L
-    while (sc.statusTracker.getJobIdsForGroup(s"$group-barrier").isEmpty &&
-      System.nanoTime() < deadline) Thread.sleep(10)
-    val jobs = sc.statusTracker.getJobIdsForGroup(group).length
-    release(result)
-    (jobs, sc.getPersistentRDDs.keySet.toSet -- before)
-  }
 
   /** n×n col-major: symmetric and diagonally dominant, so SPD. */
   private def spd(n: Int): Array[Double] = Array.tabulate(n * n) { idx =>
@@ -78,6 +55,17 @@ class LinalgLifetimeSpec extends SparkTestBase {
       }
       assert(jobs == want, s"n=$n gate=$gate")
       assert(left.isEmpty, s"n=$n gate=$gate left persisted: $left")
+    }
+  }
+
+  test("cholesky(GArr): pinned job count; the returned array owns the only cache the call leaves") {
+    for ((n, want) <- Seq(4 -> 13, 18 -> 34)) {
+      val a = GArr.fromFunction(spark, Seq(n.toLong, n.toLong), Seq(2, 2)) { g =>
+        if (g(0) == g(1)) 4.0 * n + g(0) else ((g(0) + g(1)) % 3).toDouble
+      }
+      val (jobs, left) = measure(Linalg.cholesky(a))(_.blocks.unpersist(true))
+      assert(jobs == want, s"n=$n")
+      assert(left.isEmpty, s"n=$n left persisted: $left")
     }
   }
 }

@@ -17,9 +17,9 @@ object PositionsSpec {
 
 /** [[Positions]]: `locate` agrees with a linear search whatever the empty
   * splits, `gather` returns every wanted position with its multiplicity,
-  * `pack` equals a driver-side packing, and an input that changes between
-  * the count and the second read fails instead of returning a short or
-  * shifted result.
+  * `ranked` numbers every row, `pack` equals a driver-side packing, and
+  * an input that changes between the count and the second read fails
+  * instead of returning a short or shifted result.
   */
 class PositionsSpec extends SparkTestBase {
 
@@ -96,6 +96,17 @@ class PositionsSpec extends SparkTestBase {
     val rdd = drifting("pack", 3, 5)
     val starts = Positions.starts(rdd)
     assertDrift("pack")(Positions.pack(rdd, starts, 1, 2)((v, _) => v).collect())
+  }
+
+  test("ranked numbers every row in split order across empty splits; a drifting split fails it") {
+    for (sizes <- layouts) {
+      val rdd = splits(sizes)
+      val got = Positions.ranked(rdd, Positions.starts(rdd)).collect().toSeq
+      assert(got == rows(sizes).zipWithIndex.map { case (r, g) => (g.toLong, r) }, s"layout $sizes")
+    }
+    val rdd = drifting("ranked", 3, 2)
+    val starts = Positions.starts(rdd)
+    assertDrift("ranked")(Positions.ranked(rdd, starts).collect())
   }
 
   test("pack equals a driver-side packing when segments straddle splits and blocks") {
